@@ -185,8 +185,7 @@ object Bench {
     // r14 scaling probe read ≈1 everywhere and the driver could not
     // tell an ignored $SPARK_GRAFT_CPUS from an overhead-dominated SF;
     // the child family JVMs inherit this env, so it is what they ran)
-    val cpusEcho = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = GraftSession.cpus
     val allQ = famResults.flatMap(_._3)
     val mins: Map[String, Double] = famResults.flatMap { case (_, _, qs, ms, _) =>
       qs.map(_._1).zip(ms)
@@ -201,7 +200,7 @@ object Bench {
     val detailJson =
       s"""{"metric":"total","value":${jnum(total)},"unit":"sec","calib":${jnum(calib)},""" +
       s""""calib_io":${jnum(calibIo)},""" +
-      s""""cpus":$cpusEcho,"master":"local[$cpusEcho]",""" +
+      s""""cpus":$cpus,"master":"local[$cpus]",""" +
       s""""fresh_jvm_per_family":true,"family_calib":$famCalib,""" +
       s""""family_calib_io":$famCalibIo,""" +
       s""""note":"each family measured in an isolated JVM (r10 lesson: one long same-JVM sweep inflated late queries up to 10x on GC/code-cache pressure)",""" +
@@ -221,7 +220,7 @@ object Bench {
     println(
       s"""{"metric":"total","value":${jnum(total)},"unit":"sec","calib":${jnum(calib)},""" +
       s""""calib_io":${jnum(calibIo)},""" +
-      s""""cpus":$cpusEcho,"master":"local[$cpusEcho]",""" +
+      s""""cpus":$cpus,"master":"local[$cpus]",""" +
       s""""fresh_jvm_per_family":true,"n_queries":${allQ.size},"queries":$slowest,""" +
       s""""queries_elided":${math.max(0, allQ.size - 12)},"families":$famJson,""" +
       s""""detail":"BENCH_DETAIL.json","sf":"$sfDir"}""")
@@ -254,29 +253,8 @@ object Bench {
     }
     val args2 = qargsAll
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // let AQE size the partitions INSIDE cached plans too (upstream
-      // default false): a cached frame otherwise materializes at the
-      // static spark.sql.shuffle.partitions and every downstream read
-      // of it scans that many blocks. r15 A/B (JobProfile, 32c, sf0.1):
-      // dedup_pagerank tasks 378 → 68 and taskSec 29.8 → 5.1 with
-      // "true"; q_stream_funnel taskSec 25.8 → 15.3. Scale-neutral:
-      // caches store advisory-sized partitions at any corpus size.
-      // MUST match Verify.scala — the correctness gate runs under the
-      // same cached-plan rule as the timed path.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local("graft-bench", cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     // warm-up: session, file listing, codegen paths
@@ -300,7 +278,7 @@ object Bench {
     var calibSamples = Vector.empty[Double]
     var calibIoSamples = Vector.empty[Double]
     for (_ <- 1 to runs) {
-      calibSamples = calibSamples :+ calibrate(spark, cpus.toInt)
+      calibSamples = calibSamples :+ calibrate(spark, cpus)
       calibIoSamples = calibIoSamples :+ calibrateIo(spark)
       for ((name, fn) <- ordered) {
         spark.catalog.clearCache()

@@ -28,6 +28,39 @@ object Verify {
     }.toSeq
   }
 
+  /** Runs one entry and writes its result to `outDir/name`. The cache is
+    * cleared afterwards, as Bench clears it between queries: an entry's
+    * cached frames would otherwise outlive it, and the next entry over
+    * the same corpus would persist an identical plan a second time
+    * ("Asked to cache already cached data").
+    */
+  def dumpQuery(spark: SparkSession, sfDir: String, outDir: String,
+                name: String): Unit =
+    try {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val badCols = driverUnsafeColumns(df.schema)
+      require(badCols.isEmpty,
+        s"output columns outside the driver-proven dtype allow-list " +
+          s"[${badCols.mkString(", ")}] — decimals fail the driver hash " +
+          "gate (round 8); other families are unproven. Cast to STRING " +
+          "(exact) or DOUBLE/BIGINT before returning.")
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    } catch { case e: Throwable =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      // A failed query must not leave a PREVIOUS run's output behind:
+      // when iterating into a reused outDir, a stale parquet would
+      // make check.py compare old (possibly green) results and mask
+      // the failure — delete so the comparator sees "no output".
+      def rm(p: java.nio.file.Path): Unit = {
+        if (java.nio.file.Files.isDirectory(p)) {
+          val st = java.nio.file.Files.list(p)
+          try st.forEach(rm(_)) finally st.close()
+        }
+        java.nio.file.Files.deleteIfExists(p)
+      }
+      rm(Paths.get(s"$outDir/$name"))
+    } finally spark.catalog.clearCache()
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing args = query-name subset (local iteration; the
@@ -37,48 +70,13 @@ object Verify {
     require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
     val selected = if (subset.isEmpty) SparkEntry.queries
                    else SparkEntry.queries.view.filterKeys(subset).toMap
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match the bench session (r15: both sessions pinned to "true",
-      // justified by the JobProfile A/B recorded in Bench.scala /
-      // SCALING_r15 §4): the correctness gate must run under the same
-      // cached-plan partitioning rule the timed path uses
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the bench's session profile: the correctness gate runs under the
+    // same settings (cached-plan partitioning rule included) as the
+    // timed path
+    val spark = GraftSession.local("graft-verify", GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    selected.foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        val badCols = driverUnsafeColumns(df.schema)
-        require(badCols.isEmpty,
-          s"output columns outside the driver-proven dtype allow-list " +
-            s"[${badCols.mkString(", ")}] — decimals fail the driver hash " +
-            "gate (round 8); other families are unproven. Cast to STRING " +
-            "(exact) or DOUBLE/BIGINT before returning.")
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        // A failed query must not leave a PREVIOUS run's output behind:
-        // when iterating into a reused outDir, a stale parquet would
-        // make check.py compare old (possibly green) results and mask
-        // the failure — delete so the comparator sees "no output".
-        def rm(p: java.nio.file.Path): Unit = {
-          if (java.nio.file.Files.isDirectory(p)) {
-            val st = java.nio.file.Files.list(p)
-            try st.forEach(rm(_)) finally st.close()
-          }
-          java.nio.file.Files.deleteIfExists(p)
-        }
-        rm(Paths.get(s"$outDir/$name"))
-      }
-    }
+    selected.keys.foreach(dumpQuery(spark, sfDir, outDir, _))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -109,6 +109,14 @@ object SimilarityQueries {
        |  FROM qv),
        |norms AS MATERIALIZED (SELECT vec_id, list_dot_product(qv, qv) AS nrm FROM qv)""".stripMargin
 
+  /** The coarse book every IVF oracle routes through, and its form
+    * pinned to the sf0.1 id range (the stored-index gates: nlist is an
+    * index property there, not a corpus-coupled one). Defined before
+    * the maps that read them.
+    */
+  private val CoarsePred = "vec_id % 125 = 11"
+  private val PinnedCoarsePred = s"$CoarsePred AND vec_id < 2000"
+
   val queries: Map[String, Q] = Map(
     "ann_brute" -> ((s, dir) =>
       Similarity.bruteForceTopK(Tables(s, dir, "embeddings"),
@@ -655,7 +663,7 @@ object SimilarityQueries {
     // term for term in exact integer arithmetic
     "ann_ivfpq_prod" ->
       s"""WITH ${flatSql("embeddings")},
-         |$ivfpqResidualCte,
+         |${ivfpqResidualCte(CoarsePred)},
          |${ivfpqLearnedFoundCte("vec_id % 250 = 7")}
          |SELECT query_id, hit_id, dist, rnk FROM found
          |ORDER BY query_id, rnk""".stripMargin,
@@ -671,7 +679,7 @@ object SimilarityQueries {
     "ann_recall_clustered" ->
       s"""WITH $clusteredSql,
          |${flatSql("clustered")},
-         |$ivfpqResidualCte,
+         |${ivfpqResidualCte(CoarsePred)},
          |${ivfpqLearnedFoundCte("vec_id % 50 = 7")},
          |exd AS (
          |  SELECT qf.vec_id AS query_id, a.vec_id AS hit_id,
@@ -739,7 +747,7 @@ object SimilarityQueries {
     // exactly here
     "q_stream_ann_census" ->
       s"""WITH ${flatSql("embeddings")},
-         |$ivfpqResidualCte
+         |${ivfpqResidualCte(CoarsePred)}
          |SELECT co_id, CAST(count(*) AS BIGINT) AS cnt
          |FROM assigned GROUP BY 1 ORDER BY co_id""".stripMargin,
 
@@ -748,12 +756,11 @@ object SimilarityQueries {
     // count, every bp column the same integer division the engine runs
     "ann_balance" ->
       s"""WITH ${flatSql("embeddings")},
-         |${ivfpqResidualCte.replace("WHERE vec_id % 125 = 11",
-             "WHERE vec_id % 125 = 11 AND vec_id < 2000")},
+         |${ivfpqResidualCte(PinnedCoarsePred)},
          |lc AS (SELECT co_id, CAST(count(*) AS BIGINT) AS cnt
          |       FROM assigned GROUP BY 1),
          |nl AS (SELECT CAST(count(*) AS BIGINT) AS n_lists
-         |       FROM qv WHERE vec_id % 125 = 11 AND vec_id < 2000),
+         |       FROM qv WHERE $PinnedCoarsePred),
          |agg AS (SELECT CAST(count(*) AS BIGINT) AS n_lists_used,
          |          CAST(coalesce(sum(cnt), 0) AS BIGINT) AS n_vectors,
          |          CAST(coalesce(max(cnt), 0) AS BIGINT) AS max_list
@@ -1103,11 +1110,6 @@ object SimilarityQueries {
     */
   private def autotuneStoredOracleSql: String = {
     val fracs = Seq(1250, 2500, 5000)
-    // the pinned coarse book (see the gate comment): nlist stays an
-    // index property instead of growing with the corpus
-    val pinnedResidual = ivfpqResidualCte.replace(
-      "WHERE vec_id % 125 = 11",
-      "WHERE vec_id % 125 = 11 AND vec_id < 2000")
     val rungCtes =
       s"""nlistv AS (SELECT CAST(count(DISTINCT co_id) AS BIGINT) AS nl FROM co),
          |rungv AS (SELECT
@@ -1120,7 +1122,9 @@ object SimilarityQueries {
       rungSpecs = fracs.indices.map(i =>
         (s"f${i + 1}", s"(SELECT np${i + 1} FROM rungv)")),
       extraCtes = rungCtes, dedupRungs = true,
-      residualCte = pinnedResidual)
+      // the pinned coarse book (see the gate comment): nlist stays an
+      // index property instead of growing with the corpus
+      residualCte = ivfpqResidualCte(PinnedCoarsePred))
   }
 
   /** The ann_search_stored oracle: re-derive the nlist-relative rungs
@@ -1132,9 +1136,6 @@ object SimilarityQueries {
     */
   private def searchStoredOracleSql: String = {
     val fracs = Seq(1250, 2500, 5000)
-    val pinnedResidual = ivfpqResidualCte.replace(
-      "WHERE vec_id % 125 = 11",
-      "WHERE vec_id % 125 = 11 AND vec_id < 2000")
     val rungCtes =
       s"""nlistv AS (SELECT CAST(count(DISTINCT co_id) AS BIGINT) AS nl FROM co),
          |rungv AS (SELECT
@@ -1163,7 +1164,7 @@ object SimilarityQueries {
       s",\nrec_s AS (SELECT DISTINCT * FROM ($recUnion))"
     s"""WITH $clusteredSql,
        |${flatSql("clustered")},
-       |$pinnedResidual,
+       |${ivfpqResidualCte(PinnedCoarsePred)},
        |$ivfpqLearnedIndexCte,
        |$rungCtes$searches,
        |exd_s AS (
@@ -1210,7 +1211,7 @@ object SimilarityQueries {
                                  rungSpecs: Seq[(String, String)],
                                  extraCtes: String,
                                  dedupRungs: Boolean,
-                                 residualCte: String = ivfpqResidualCte)
+                                 residualCte: String = ivfpqResidualCte(CoarsePred))
       : String = {
     val src = if (clustered) "clustered" else "embeddings"
     val pre = if (clustered) s"$clusteredSql,\n" else ""
@@ -1353,8 +1354,8 @@ object SimilarityQueries {
        |      row_number() OVER (PARTITION BY query_id ORDER BY dist, hit_id) AS rnk
        |    FROM rr$sfx) WHERE rnk <= $k)""".stripMargin
 
-  private def ivfpqResidualCte: String =
-    """co AS (SELECT vec_id AS co_id, i, q FROM flat WHERE vec_id % 125 = 11),
+  private def ivfpqResidualCte(coarsePred: String): String =
+    s"""co AS (SELECT vec_id AS co_id, i, q FROM flat WHERE $coarsePred),
       |ad AS (
       |  SELECT f.vec_id, c.co_id, sum((f.q - c.q) * (f.q - c.q)) AS d
       |  FROM flat f JOIN co c ON c.i = f.i
@@ -1370,7 +1371,7 @@ object SimilarityQueries {
       |              JOIN co c ON c.co_id = a.co_id AND c.i = f.i)""".stripMargin
 
   private def ivfpqEncodeCte: String =
-    s"""$ivfpqResidualCte,
+    s"""${ivfpqResidualCte(CoarsePred)},
       |cw AS (SELECT vec_id AS cw_id, i, rq FROM res
       |       WHERE vec_id % 40 = 3 AND vec_id < 2560),
       |sd AS (

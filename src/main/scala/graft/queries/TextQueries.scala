@@ -23,7 +23,7 @@ object TextQueries {
     * above max(doc_id), so planted ids (k·off + doc_id, k = 1..5) can
     * NEVER collide with real documents at any corpus size. A fixed
     * +100000 collided on any >100k-doc corpus (sf3 = 150k docs: 3,069
-    * collisions, 1.6× pair inflation — KeepProbe r11); at driver SFs
+    * collisions, 1.6× pair inflation — SCALING_r11); at driver SFs
     * max(doc_id) ≪ 100000 so the derived offset reproduces the historic
     * constant and every oracle hash is unchanged. One single-row
     * max-aggregate per sfDir, memoized.

@@ -141,7 +141,7 @@ object DataSkipping {
   /** [[statsOfFile]] with the Hadoop conf supplied by the caller —
     * `newHadoopConf()` clones the whole session configuration, and
     * paying that clone PER FILE made commit-time sidecar writes a
-    * measurable driver cost (r15 GapProbe: 0.3–0.5 s per scenario
+    * measurable driver cost (SCALING_r15 §6: 0.3–0.5 s per scenario
     * query). One clone per directory walk, not per footer.
     */
   def statsOfFile(conf: org.apache.hadoop.conf.Configuration,

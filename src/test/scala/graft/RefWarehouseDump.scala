@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 import graft.etl.{Pipeline, ReplayFixtures, Reports, Warehouse}
-import org.apache.spark.sql.SparkSession
 
 /** One-time fixture generator: runs the FAITHFUL three-day replay
   * (reference data files + ReplayFixtures bank) and freezes the final
@@ -22,13 +21,7 @@ object RefWarehouseDump {
 
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "/root/repo/src/test/resources/refwh"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-refdump", 8)
     spark.sparkContext.setLogLevel("WARN")
 
     val whRoot = Files.createTempDirectory("wh-refdump")

@@ -2,17 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test JVM. */
+/** One shared local session for the whole test JVM, on the gate's
+  * session profile ([[GraftSession.local]]) at a fixed 8 cores.
+  */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local("graft-test", 8)
     s.sparkContext.setLogLevel("WARN")
     s
   }
