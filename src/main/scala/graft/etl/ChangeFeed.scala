@@ -133,7 +133,7 @@ object ChangeFeed {
     diff(wh.readAsOf(table, fromVersion), wh.readAsOf(table, toVersion), keys)
 
   /** [[tableChanges]] with FILE-LEVEL PRUNING: partial bucket rewrites
-    * (`overwriteBuckets` / bucketed `deleteWhere` / the SCD1 merge
+    * (`overwriteSlice` / bucketed `deleteWhere` / the SCD1 merge
     * path) hard-link untouched bucket files into the new version's
     * dir, so an unchanged bucket is the SAME inode on both sides.
     * Those files are bit-identical — a key living only in them cannot

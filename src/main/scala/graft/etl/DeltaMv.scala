@@ -78,21 +78,15 @@ object DeltaMv {
       // by keys.head the delta can only move rows in the buckets its
       // own keys hash to — slice those, merge into the slice, rewrite
       // only them (untouched buckets hard-link). The write then costs
-      // the delta's KEY SPREAD, not the view size. Unbucketed views
-      // (bucketSlice's None branch) keep the full overwrite; a
-      // zero-row delta dir set degenerates to the full form too (the
-      // view content is unchanged either way, and coverage still has
-      // to advance through a committed write).
-      val (slice, touched) = txn.bucketSlice(mvTable, keys.head,
-        deltaRows.select(keys.head))
-      touched match {
-        case Some(t) if t.nonEmpty =>
-          txn.overwriteBuckets(mvTable,
-            MaterializedAgg.refresh(slice, deltaRows, keys, measures), t)
-        case _ =>
-          txn.overwrite(mvTable, MaterializedAgg.refresh(
-            txn.read(mvTable), deltaRows, keys, measures))
-      }
+      // the delta's KEY SPREAD, not the view size. A zero-row delta dir
+      // set takes the whole-table slice: the view content is unchanged
+      // either way, but coverage still has to advance through a
+      // committed write.
+      val keyed = txn.keyedSlice(mvTable, keys.take(1))(
+        Warehouse.bucketsOf(deltaRows, keys.take(1), _))
+      val slice = if (keyed.isEmpty) KeyedSlice.Whole else keyed
+      txn.overwriteSlice(mvTable, slice, MaterializedAgg.refresh(
+        slice.of(txn.read(mvTable)), deltaRows, keys, measures))
     }
     writeCoverage(txn.currentDirs(mvTable).head, baseDirs)
   }

@@ -92,35 +92,15 @@ object Merge {
       .filter(col("count") > 1).limit(1).count()
     require(dup == 0L, s"source has multiple rows for one merge key of $table")
 
-    val bucketed = wh.bucketSpec.get(table) match {
-      case Some((key, n)) if keys == Seq(key) &&
-          txn.currentDirs(table).length == 1 &&
-          whenNotMatchedBySource.isEmpty =>
-        // prune both join inputs AND the rewrite to source-key buckets
-        val touched = source
-          .select(pmod(hash(col(key)), lit(n)).as("b"))
-          .distinct().collect().map(_.getInt(0)).sorted
-        if (touched.isEmpty) return 0 // empty source: nothing to do
-        Some((key, n, touched))
-      case _ => None
-    }
-    val inT = bucketed.map { case (key, n, touched) =>
-      Scd1.inBuckets(Seq(key), n, touched.toIndexedSeq)
-    }
-    val tgt0 = txn.read(table)
-    val tgt = inT.fold(tgt0)(tgt0.filter)
-    val src = inT.fold(source)(source.filter)
-
-    val merged = apply(tgt, src, keys, cols, whenMatched, whenNotMatched,
-      whenNotMatchedBySource)
-    bucketed match {
-      case Some((_, _, touched)) =>
-        txn.overwriteBuckets(table, merged, touched.toIndexedSeq)
-        touched.length
-      case None =>
-        txn.overwrite(table, merged)
-        -1
-    }
+    // a BY SOURCE clause reaches target rows in every bucket
+    val slice =
+      if (whenNotMatchedBySource.nonEmpty) KeyedSlice.Whole
+      else txn.keyedSlice(table, keys)(Warehouse.bucketsOf(source, keys, _))
+    if (slice.isEmpty) return 0 // empty source: nothing to do
+    val merged = apply(slice.of(txn.read(table)), slice.of(source), keys, cols,
+      whenMatched, whenNotMatched, whenNotMatchedBySource)
+    txn.overwriteSlice(table, slice, merged)
+    slice.touched.fold(-1)(_.length)
   }
 
   /** The pure merge frame (no warehouse): target/source full-outer

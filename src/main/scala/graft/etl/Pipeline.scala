@@ -86,49 +86,14 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
       }
     }
 
-    // ---- SCD1 merge, one per dim (K4+K6+K7 via Scd1.mergeAudit).
+    // ---- SCD1 merge, one per dim (K4+K6+K7 via Scd1.mergeAudit),
+    // bucket-pruned on a bucketed dim (Scd1.mergeAuditWarehouse).
     // Incremental mode: bank dims merge their delta with no delete path;
     // terminals are file-fed full snapshots either way.
-    //
-    // Bucketed dims in steady state (exactly one committed dir) take the
-    // PARTIAL path: detect the key-hash buckets holding any insert /
-    // update / delete (a driver array bounded by the bucket count),
-    // prune BOTH merge inputs to those buckets — the dim side reads as a
-    // bucketed scan, so neither the detection join nor the merge ever
-    // exchanges dim rows — and rewrite only those buckets' files,
-    // hard-linking the rest byte-identically. A run that changes nothing
-    // in a dim writes NOTHING for it. At a 100 TB dim with ~1% daily
-    // churn both the merge shuffle and the write shrink ~100×.
     Schemas.dimKeys.keys.toSeq.sorted.foreach { dim =>
-      val stg = "stg_" + dim.stripPrefix("dim_")
-      val keys = Seq(Schemas.dimKeys(dim))
-      val cmp = Schemas.dimCompareCols(dim)
-      val dimDf = txn.read(dim)
-      val stgDf = txn.read(stg)
-      val deltaMode = incremental && dim != "dim_terminals"
-      def fullMerge(d: DataFrame, s: DataFrame): DataFrame =
-        if (deltaMode) Scd1.mergeAuditIncremental(d, s, keys, cmp, ts)
-        else Scd1.mergeAudit(d, s, keys, cmp, ts)
-      wh.bucketSpec.get(dim) match {
-        // guard as in Merge.into/Scd2: pruning is only sound when the
-        // merge key IS the bucket key (default Schemas wiring always
-        // satisfies this; a custom Warehouse with a mismatched
-        // bucketSpec falls back to the full overwrite instead of
-        // pruning in the wrong hash space)
-        case Some((bucketKey, n)) if keys == Seq(bucketKey) &&
-            txn.currentDirs(dim).length == 1 =>
-          val touched = Scd1.changedKeyBuckets(dimDf, stgDf, keys, cmp, n,
-            deletesVisible = !deltaMode)
-          if (touched.nonEmpty) {
-            val inT = Scd1.inBuckets(keys, n, touched.toIndexedSeq)
-            txn.overwriteBuckets(dim,
-              fullMerge(dimDf.filter(inT), stgDf.filter(inT)), touched.toIndexedSeq)
-          } // else: no insert/update/delete anywhere — the dim image is
-            // already exact; skip the write entirely
-        case _ =>
-          // initial load (no committed dir yet) or unbucketed table
-          txn.overwrite(dim, fullMerge(dimDf, stgDf))
-      }
+      Scd1.mergeAuditWarehouse(txn, dim, txn.read("stg_" + dim.stripPrefix("dim_")),
+        Seq(Schemas.dimKeys(dim)), Schemas.dimCompareCols(dim), ts,
+        deletesVisible = !incremental || dim == "dim_terminals")
     }
 
     // ---- meta watermarks (K9): the reference seeds 1900-01-01 for a

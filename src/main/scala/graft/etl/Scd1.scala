@@ -63,9 +63,8 @@ object Scd1 {
     * rows (the whole point of a delta: almost all of them) never mark a
     * bucket and the detection join is delta-sized on one side.
     *
-    * The bucket function `pmod(hash(key), n)` is Spark's own bucket
-    * assignment (`HashPartitioning.partitionIdExpression` — Murmur3 mod
-    * n), so these ids line up with the bucketed writer's file naming.
+    * Bucket ids are [[Warehouse.bucketOf]], the bucketed writer's own
+    * assignment.
     */
   def changedKeyBuckets(dim: DataFrame, snapshot: DataFrame, keys: Seq[String],
                         compareCols: Seq[String], nBuckets: Int,
@@ -81,16 +80,9 @@ object Scd1 {
     val keyExprs = keys.map(k => coalesce(col(s"s.$k"), col(s"d.$k")))
     s.join(d, on, if (deletesVisible) "full" else "left")
       .filter(changed)
-      .select(pmod(hash(keyExprs: _*), lit(nBuckets)).as("b"))
+      .select(Warehouse.bucketOf(keyExprs, nBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).sorted
   }
-
-  /** Row predicate: the row's key falls in one of `touched` buckets —
-    * the filter that prunes BOTH merge inputs to the buckets actually
-    * being rewritten.
-    */
-  def inBuckets(keys: Seq[String], nBuckets: Int, touched: Seq[Int]): Column =
-    pmod(hash(keys.map(col): _*), lit(nBuckets)).isin(touched: _*)
 
   /** The plain merged dim image (no tag). */
   def merge(dim: DataFrame, snapshot: DataFrame,
@@ -172,38 +164,32 @@ object Scd1 {
     s.join(d, on, "full").select(cols: _*)
   }
 
-  /** [[mergeAuditIncremental]] as a WAREHOUSE write with the nightly
-    * Pipeline's bucket-pruning discipline: when the dim is bucketed by
-    * the (single) merge key, [[changedKeyBuckets]] finds the buckets
-    * holding inserted/changed keys (delete detection off — absence
-    * from a delta means "unchanged"), BOTH merge inputs prune to those
-    * buckets, and only their files rewrite — the rest hard-link
-    * byte-identically ([[Txn.overwriteBuckets]]). A delta that changes
-    * nothing (e.g. an at-least-once replay of an already-applied
-    * batch) writes nothing at all; an unbucketed dim falls back to the
-    * full-image overwrite. Shared by the streamed CDC upsert
-    * ([[graft.streaming.StreamingOps.scd1UpsertStream]]) so continuous
-    * ingestion pays churn-sized writes like the nightly run does.
+  /** The SCD1 merge of `snapshot` into warehouse dim `table`, inside
+    * the caller's transaction — the nightly run's per-dim step and the
+    * streamed CDC upsert's per-batch write. `deletesVisible` picks the
+    * merge: a full snapshot ([[mergeAudit]], absent keys are deleted)
+    * or an incremental delta ([[mergeAuditIncremental]], absence means
+    * "unchanged"). On a dim bucketed by its key ([[Txn.keyedSlice]]),
+    * [[changedKeyBuckets]] finds the buckets holding any insert /
+    * update / delete, BOTH merge inputs prune to them — the dim side
+    * reads as a bucketed scan, so neither the detection join nor the
+    * merge exchanges dim rows — and only their files rewrite; the rest
+    * hard-link byte-identically. A snapshot or delta that changes
+    * nothing (e.g. an at-least-once replay of an applied batch) writes
+    * nothing; the initial load and an unbucketed dim overwrite the
+    * whole image. At a 100 TB dim with ~1% daily churn both the merge
+    * shuffle and the write shrink ~100×.
     */
-  def upsertIncrementalWarehouse(txn: Txn, table: String, delta: DataFrame,
-                                 keys: Seq[String], compareCols: Seq[String],
-                                 runTs: java.sql.Timestamp): Unit = {
-    val dimDf = txn.read(table)
-    txn.wh.bucketSpec.get(table) match {
-      case Some((bucketKey, n)) if keys == Seq(bucketKey) &&
-          txn.currentDirs(table).length == 1 =>
-        val touched = changedKeyBuckets(dimDf, delta, keys, compareCols, n,
-          deletesVisible = false)
-        if (touched.nonEmpty) {
-          val inT = inBuckets(keys, n, touched.toIndexedSeq)
-          txn.overwriteBuckets(table,
-            mergeAuditIncremental(dimDf.filter(inT), delta.filter(inT),
-              keys, compareCols, runTs),
-            touched.toIndexedSeq)
-        }
-      case _ =>
-        txn.overwrite(table,
-          mergeAuditIncremental(dimDf, delta, keys, compareCols, runTs))
-    }
+  def mergeAuditWarehouse(txn: Txn, table: String, snapshot: DataFrame,
+                          keys: Seq[String], compareCols: Seq[String],
+                          runTs: java.sql.Timestamp,
+                          deletesVisible: Boolean): Unit = {
+    val dim = txn.read(table)
+    val slice = txn.keyedSlice(table, keys)(
+      changedKeyBuckets(dim, snapshot, keys, compareCols, _, deletesVisible))
+    val (d, s) = (slice.of(dim), slice.of(snapshot))
+    txn.overwriteSlice(table, slice,
+      if (deletesVisible) mergeAudit(d, s, keys, compareCols, runTs)
+      else mergeAuditIncremental(d, s, keys, compareCols, runTs))
   }
 }

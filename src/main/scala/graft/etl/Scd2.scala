@@ -224,31 +224,22 @@ object Scd2 {
         c.withColumn("__sexists", lit(1)).alias("s"),
         keys, attrs, asOf, deltaClassify(compareCols))
 
-    txn.wh.bucketSpec.get(currentTable) match {
-      // same soundness guard as mergeWarehouse/Merge.into: pruning is
-      // only valid when the merge key IS the bucket key
-      case Some((bucketKey, n)) if keys == Seq(bucketKey) &&
-          txn.currentDirs(currentTable).length == 1 =>
-        val chgP = chg.persist()
+    val chgP = chg.persist()
+    try {
+      val slice = txn.keyedSlice(currentTable, keys)(Warehouse.bucketsOf(chgP, keys, _))
+      if (!slice.isEmpty) { // empty delta: the history is already exact
+        // on a bucket slice, the touched current rows feed two actions
+        // (the overwrite and the closed append): persist them
+        val pruned = slice.touched.isDefined
+        val curT = slice.of(txn.read(currentTable))
+        if (pruned) curT.persist()
         try {
-          val touched = chgP
-            .select(pmod(hash(keys.map(col): _*), lit(n)).as("b"))
-            .distinct().collect().map(_.getInt(0)).toIndexedSeq // ≤ n
-          if (touched.nonEmpty) {
-            val inT = Scd1.inBuckets(keys, n, touched)
-            val curT = txn.read(currentTable).filter(inT).persist()
-            try {
-              val (newCur, closedRows) = branches(curT, chgP)
-              txn.overwriteBuckets(currentTable, newCur, touched)
-              txn.append(closedTable, closedRows)
-            } finally curT.unpersist()
-          } // empty delta: the history is already exact — write nothing
-        } finally chgP.unpersist()
-      case _ =>
-        val (newCur, closedRows) = branches(txn.read(currentTable), chg)
-        txn.overwrite(currentTable, newCur)
-        txn.append(closedTable, closedRows)
-    }
+          val (newCur, closedRows) = branches(curT, chgP)
+          txn.overwriteSlice(currentTable, slice, newCur)
+          txn.append(closedTable, closedRows)
+        } finally if (pruned) curT.unpersist()
+      }
+    } finally chgP.unpersist()
   }
 
   /** Point-in-time lookup: the version of each key valid at `at` —
@@ -362,36 +353,22 @@ object Scd2 {
         snap.withColumn("__sexists", lit(1)).alias("s"),
         keys, attrs, asOf, snapshotClassify(compareCols))
 
-    wh.bucketSpec.get(currentTable) match {
-      // the pruned path is sound only when the MERGE key is exactly the
-      // table's bucket key: touched buckets are computed from
-      // hash(keys), the carried-over files encode hash(bucketKey) — in
-      // different hash spaces a changed row would be BOTH carried over
-      // (old version) and rewritten (new version). Same guard as
-      // Merge.into; any other key set takes the full-overwrite path.
-      case Some((bucketKey, n)) if keys == Seq(bucketKey) &&
-          txn.currentDirs(currentTable).length == 1 =>
-        val cur = txn.read(currentTable)
-        val touched = Scd1.changedKeyBuckets(cur, snapC, keys, compareCols, n,
-          deletesVisible = true)
-        if (touched.nonEmpty) {
-          val inT = Scd1.inBuckets(keys, n, touched.toIndexedSeq)
-          // persist the touched-bucket-sized inputs: the current-slice
-          // overwrite and the closed append are two Spark actions over
-          // the same join, and without the cache each re-reads and
-          // re-filters both sides
-          val curT = cur.filter(inT).persist()
-          val snapT = snapC.filter(inT).persist()
-          try {
-            val (newCur, closed) = branches(curT, snapT)
-            txn.overwriteBuckets(currentTable, newCur, touched.toIndexedSeq)
-            txn.append(closedTable, closed)
-          } finally { curT.unpersist(); snapT.unpersist() }
-        } // else: nothing changed — the history is already exact
-      case _ =>
-        val (newCur, closed) = branches(txn.read(currentTable), snapC)
-        txn.overwrite(currentTable, newCur)
+    val cur = txn.read(currentTable)
+    val slice = txn.keyedSlice(currentTable, keys)(
+      Scd1.changedKeyBuckets(cur, snapC, keys, compareCols, _, deletesVisible = true))
+    if (!slice.isEmpty) { // else: nothing changed — the history is already exact
+      // on a bucket slice, persist the touched-bucket-sized inputs: the
+      // current-slice overwrite and the closed append are two Spark
+      // actions over the same join, and without the cache each re-reads
+      // and re-filters both sides
+      val pruned = slice.touched.isDefined
+      val (curT, snapT) = (slice.of(cur), slice.of(snapC))
+      if (pruned) { curT.persist(); snapT.persist() }
+      try {
+        val (newCur, closed) = branches(curT, snapT)
+        txn.overwriteSlice(currentTable, slice, newCur)
         txn.append(closedTable, closed)
+      } finally if (pruned) { curT.unpersist(); snapT.unpersist() }
     }
     txn.commit()
   }

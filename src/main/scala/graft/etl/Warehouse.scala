@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, to_date}
+import org.apache.spark.sql.functions.{broadcast, col, hash, lit, pmod, to_date}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -41,9 +41,12 @@ import scala.jdk.CollectionConverters._
   * external bucketed table registration, so the nightly SCD1 merge
   * (a) plans with NO dim-side Exchange — the scan's HashPartitioning
   * satisfies the join's distribution from the files themselves — and
-  * (b) via [[Txn.overwriteBuckets]] rewrites ONLY the buckets containing
-  * changed keys, hard-linking the untouched buckets' files byte-
-  * identically into the new immutable dir. At a 100 TB dim with ~1%
+  * (b) rewrites ONLY the buckets containing changed keys, hard-linking
+  * the untouched buckets' files byte-identically into the new immutable
+  * dir. Every keyed writer (SCD1/SCD2 merges, MERGE INTO, view refresh,
+  * the CDC store consumers, targeted delete) asks [[Txn.keyedSlice]]
+  * which buckets it may rewrite — the one owner of the soundness guard
+  * — and writes through [[Txn.overwriteSlice]]. At a 100 TB dim with ~1%
   * daily churn that turns the run's dominant cost (full dim shuffle +
   * full rewrite) into a delta-sized merge + delta-sized write.
   *
@@ -849,14 +852,16 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
 
   /** PARTIAL overwrite of a bucketed table: `touchedDf` must hold the
     * new image of exactly the buckets in `touched` (every row's
-    * `pmod(hash(key), n)` ∈ touched — the caller filters); every other
+    * [[Warehouse.bucketOf]] ∈ touched — the caller filters); every other
     * bucket's files are hard-linked byte-identically from the current
     * dir into the fresh one. The commit is still a whole-dir swap
     * (immutability and snapshot isolation unchanged) — what shrinks to
-    * delta size is the WRITE, not the catalog semantics.
+    * delta size is the WRITE, not the catalog semantics. Keyed writers
+    * reach it only through [[overwriteSlice]], behind [[keyedSlice]]'s
+    * soundness guard.
     */
-  def overwriteBuckets(table: String, touchedDf: DataFrame,
-                       touched: Seq[Int]): Unit = {
+  private[etl] def overwriteBuckets(table: String, touchedDf: DataFrame,
+                                    touched: Seq[Int]): Unit = {
     require(wh.bucketSpec.contains(table), s"$table has no bucket spec")
     val current = currentDirs(table)
     require(current.length == 1,
@@ -916,21 +921,58 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     } else pending(Warehouse.dvKey(table)) = Seq(dvDir)
   }
 
+  /** Which part of `table` a write keyed by `keys` has to rewrite: the
+    * one place the bucket-pruned rewrite policy lives. The touched
+    * key-hash buckets are returned only when the pruned path is sound:
+    *  - `table` is bucketed by exactly `keys`. Touched buckets are
+    *    computed in the hash space of `keys`, carried-over files encode
+    *    the hash of the bucket key; in different hash spaces a changed
+    *    row would be BOTH carried over (old version) and rewritten (new
+    *    version).
+    *  - `table` has exactly one current dir (the steady state every
+    *    overwrite leaves; [[overwriteBuckets]] hard-links from it).
+    * Only then is `buckets(n)` called — a caller passes its own
+    * detection (e.g. [[Scd1.changedKeyBuckets]], or
+    * [[Warehouse.bucketsOf]] over a delta's keys), so the driver-side
+    * collect runs only when its answer is used. Every other table
+    * (initial load, unbucketed, multi-dir, a bucket key that is not
+    * the write key) gets the whole-table slice. Write the result with
+    * [[overwriteSlice]].
+    */
+  def keyedSlice(table: String, keys: Seq[String])(buckets: Int => Seq[Int]): KeyedSlice =
+    wh.bucketSpec.get(table) match {
+      case Some((bucketKey, n)) if keys == Seq(bucketKey) &&
+          currentDirs(table).length == 1 =>
+        val touched = buckets(n).sorted.toIndexedSeq
+        new KeyedSlice(Some(touched), Warehouse.bucketOf(keys.map(col), n).isin(touched: _*))
+      case _ => KeyedSlice.Whole
+    }
+
+  /** Write `image` — the new rows of exactly `slice` — as `table`'s new
+    * content: an empty bucket slice writes nothing (the table is already
+    * exact), a bucket slice rewrites only its buckets (the rest
+    * hard-link, [[overwriteBuckets]]), the whole-table slice overwrites.
+    * `image` is only built when something is written.
+    */
+  def overwriteSlice(table: String, slice: KeyedSlice, image: => DataFrame): Unit =
+    slice.touched match {
+      case Some(touched) => if (touched.nonEmpty) overwriteBuckets(table, image, touched)
+      case None => overwrite(table, image)
+    }
+
   /** CHURN-SIZED keyed upsert — the write primitive behind the CDC
     * store consumers (signature store, image-hash store, ANN index):
     * drop the `gone` keys' rows and append `build(pruned)`'s new rows,
     * rewriting ONLY the key-hash buckets the delta touches when the
-    * table is bucketed by `key` — every other bucket's files hard-link
-    * byte-identically into the fresh dir via [[overwriteBuckets]].
-    * Per call, write bytes are proportional to the delta's bucket
-    * footprint, not the table. The delta-sized `gone ∪ arrived` key
-    * set derives the touched buckets (driver result bounded by the
-    * bucket count); `build` sees the table pruned to those buckets,
-    * which is equivalent for both an anti-join idempotence guard and
-    * the appends because every appended row's key must be an `arrived`
-    * key and so hashes into a touched bucket by construction (caller
-    * contract). An unbucketed table falls back to a full overwrite
-    * (same rows, table-sized write). An empty delta writes nothing.
+    * table is bucketed by `key` ([[keyedSlice]]). Per call, write bytes
+    * are proportional to the delta's bucket footprint, not the table.
+    * The delta-sized `gone ∪ arrived` key set derives the touched
+    * buckets; `build` sees the table pruned to those buckets, which is
+    * equivalent for both an anti-join idempotence guard and the appends
+    * because every appended row's key must be an `arrived` key and so
+    * hashes into a touched bucket by construction (caller contract).
+    * Any other table falls back to a full overwrite (same rows,
+    * table-sized write). An empty delta writes nothing.
     *
     * File-count note: when the write executes inside a streaming
     * foreachBatch-derived plan, the optimizer has been observed to
@@ -948,38 +990,10 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
   def pruneAppendKeyed(table: String, key: String, gone: DataFrame,
                        arrived: DataFrame,
                        build: DataFrame => DataFrame): Unit = {
-    val keys = gone.select(org.apache.spark.sql.functions.col(key))
-      .unionByName(arrived.select(org.apache.spark.sql.functions.col(key)))
-    bucketSlice(table, key, keys) match {
-      case (slice, Some(touched)) =>
-        if (touched.nonEmpty)
-          overwriteBuckets(table,
-            build(slice.join(gone, Seq(key), "left_anti")), touched)
-      case (full, None) =>
-        overwrite(table, build(full.join(gone, Seq(key), "left_anti")))
-    }
-  }
-
-  /** The read-side companion of [[overwriteBuckets]]: the table
-    * restricted to the key-hash buckets `keysDf` touches, plus the
-    * touched bucket list, when the bucketed partial path applies
-    * (table bucketed by `key`, one current dir — the same guard every
-    * bucket-pruned writer uses). Otherwise the full table and `None`.
-    * The touched derivation collects one row per DISTINCT bucket —
-    * bounded by the bucket count, never the delta.
-    */
-  def bucketSlice(table: String, key: String, keysDf: DataFrame)
-      : (DataFrame, Option[IndexedSeq[Int]]) = {
-    import org.apache.spark.sql.functions.{col, hash, lit => l, pmod}
-    wh.bucketSpec.get(table) match {
-      case Some((bucketKey, n)) if bucketKey == key &&
-          currentDirs(table).length == 1 =>
-        val touched = keysDf
-          .select(pmod(hash(col(key)), l(n)).as("b"))
-          .distinct().collect().map(_.getInt(0)).sorted.toIndexedSeq
-        (read(table).filter(Scd1.inBuckets(Seq(key), n, touched)), Some(touched))
-      case _ => (read(table), None)
-    }
+    val keys = gone.select(col(key)).unionByName(arrived.select(col(key)))
+    val slice = keyedSlice(table, Seq(key))(Warehouse.bucketsOf(keys, Seq(key), _))
+    overwriteSlice(table, slice,
+      build(slice.of(read(table)).join(gone, Seq(key), "left_anti")))
   }
 
   /** Targeted DELETE (GDPR erasure, bad-batch retraction): remove the
@@ -1003,31 +1017,25 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     * a filtered full overwrite (which also MATERIALIZES the DVs).
     */
   def deleteWhere(table: String, predicate: Column): Unit = {
-    import org.apache.spark.sql.functions.{coalesce => cl, hash, lit => l, not, pmod}
+    import org.apache.spark.sql.functions.{coalesce => cl, lit => l, not}
     val keep = not(cl(predicate, l(false)))
-    def touchedIn(df: DataFrame, key: String, n: Int): Array[Int] =
-      df.filter(predicate)
-        .select(pmod(hash(org.apache.spark.sql.functions.col(key)), l(n)).as("b"))
-        .distinct().collect().map(_.getInt(0)).sorted
     wh.bucketSpec.get(table) match {
-      case Some((key, n)) if currentDirs(table).length == 1 =>
+      case Some((key, _)) if currentDirs(table).length == 1 =>
+        // a match-less predicate touches no bucket: nothing is written
         val cur = read(table)
-        val touched = touchedIn(cur, key, n)
-        if (touched.nonEmpty) {
-          val inT = Scd1.inBuckets(Seq(key), n, touched.toIndexedSeq)
-          overwriteBuckets(table, cur.filter(inT && keep), touched.toIndexedSeq)
-        } // no matches: the table is already exact — write nothing
+        val slice = keyedSlice(table, Seq(key))(
+          Warehouse.bucketsOf(cur.filter(predicate), Seq(key), _))
+        overwriteSlice(table, slice, slice.of(cur).filter(keep))
       case Some((key, n)) if currentDvDirs(table).isEmpty =>
         // multi-dir (the append-only fact shape): replace ONLY dirs
         // holding matching rows, each rewritten bucket-pruned
         val fields = wh.schemas(table).fieldNames.toIndexedSeq
         val newDirs = currentDirs(table).map { d =>
-          val part = wh.readBucketedDir(table, d)
-            .select(fields.map(org.apache.spark.sql.functions.col): _*)
-          val touched = touchedIn(part, key, n)
+          val part = wh.readBucketedDir(table, d).select(fields.map(col): _*)
+          val touched = Warehouse.bucketsOf(part.filter(predicate), Seq(key), n)
           if (touched.isEmpty) d // untouched dir: zero bytes move
           else {
-            val inT = Scd1.inBuckets(Seq(key), n, touched.toIndexedSeq)
+            val inT = Warehouse.bucketOf(Seq(col(key)), n).isin(touched: _*)
             val dir = wh.writeDataDir(table, align(table, part.filter(inT && keep)))
             wh.copyUntouchedBuckets(d, dir, touched.toSet)
             graft.sources.DataSkipping.writeSidecar(wh.spark, dir)
@@ -1272,6 +1280,20 @@ object Warehouse {
       // fact_blacklist stays unbucketed: dozens of rows, broadcast-sized.
       Map("fact_transactions" -> ("trans_id", 16))
 
+  /** The bucket of a row keyed by `cols` in an `n`-bucket layout —
+    * Spark's own bucket assignment (`HashPartitioning.partitionIdExpression`:
+    * Murmur3 mod n), so these ids line up with the bucketed writer's file
+    * naming. The one hash every bucket-pruned read and rewrite uses.
+    */
+  def bucketOf(cols: Seq[Column], n: Int): Column = pmod(hash(cols: _*), lit(n))
+
+  /** The distinct buckets the rows of `keysDf` (keyed by `keys`) fall
+    * in, sorted: a driver result bounded by `n`, never by the data.
+    */
+  def bucketsOf(keysDf: DataFrame, keys: Seq[String], n: Int): IndexedSeq[Int] =
+    keysDf.select(bucketOf(keys.map(col), n).as("b"))
+      .distinct().collect().map(_.getInt(0)).sorted.toIndexedSeq
+
   /** DELETION VECTORS: a table's outstanding tombstones live in
     * delete-sized parquet dirs under `data/_dv_<table>/` referenced by
     * the catalog key `_dv_<table>` — the same snapshot/commit/vacuum
@@ -1295,6 +1317,24 @@ object Warehouse {
     "graft_bkt_" + java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes(StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString.take(20)
+}
+
+/** The part of a table a keyed write rewrites: `touched` holds the
+  * key-hash buckets of a bucket-pruned rewrite (empty: nothing to
+  * write), `None` the whole table; `rows` selects the slice's rows.
+  * Only [[Txn.keyedSlice]] builds a bucket slice, so no caller outside
+  * `etl` can hand [[Txn.overwriteSlice]] buckets the guard did not
+  * grant.
+  */
+final class KeyedSlice private[etl] (val touched: Option[IndexedSeq[Int]], rows: Column) {
+  def isEmpty: Boolean = touched.exists(_.isEmpty)
+
+  /** `df` restricted to the slice (unfiltered for the whole table). */
+  def of(df: DataFrame): DataFrame = if (touched.isDefined) df.filter(rows) else df
+}
+
+object KeyedSlice {
+  private[etl] val Whole: KeyedSlice = new KeyedSlice(None, lit(true))
 }
 
 /** Minimal JSON for `Map[String, Seq[String]]` — no external deps in the

@@ -325,14 +325,11 @@ object StreamingOps {
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
         val txn = wh.begin()
-        // bucket-pruned write when the dim is bucketed by the merge key
-        // (the nightly Pipeline's exact discipline): only the buckets
-        // holding inserted/changed keys rewrite, the rest hard-link —
-        // per batch the write is churn-sized, not dim-sized. A batch
-        // that changes nothing (e.g. an at-least-once replay of an
-        // already-applied delta) writes nothing at all.
-        graft.etl.Scd1.upsertIncrementalWarehouse(txn, table, compacted,
-          keys, compareCols, runTsFor(batchId))
+        // the nightly run's bucket-pruned dim merge, in delta mode: per
+        // batch the write is churn-sized, not dim-sized, and a batch
+        // that changes nothing writes nothing at all
+        graft.etl.Scd1.mergeAuditWarehouse(txn, table, compacted,
+          keys, compareCols, runTsFor(batchId), deletesVisible = false)
         txn.commit()
       }
       .option("checkpointLocation", checkpointDir)
@@ -989,17 +986,12 @@ object StreamingOps {
           // the batch's KEY SPREAD, not the view: the view of a 100 TB
           // fact is itself large, and rewriting it whole per
           // micro-batch is the same store-sized write the CDC store
-          // consumers shed this round. Unbucketed views keep the full
-          // overwrite (bucketSlice's None branch).
-          val (slice, touched) = txn.bucketSlice(viewTable, keys.head,
-            prepared.select(keys.head))
-          val merged = graft.operators.MaterializedAgg.refresh(
-            slice, prepared, keys, measures)
-          touched match {
-            case Some(t) if t.isEmpty => () // empty batch: view untouched
-            case Some(t) => txn.overwriteBuckets(viewTable, merged, t)
-            case None    => txn.overwrite(viewTable, merged)
-          }
+          // consumers shed. Unbucketed views keep the full overwrite;
+          // an empty batch leaves the view untouched.
+          val slice = txn.keyedSlice(viewTable, keys.take(1))(
+            graft.etl.Warehouse.bucketsOf(prepared, keys.take(1), _))
+          txn.overwriteSlice(viewTable, slice, graft.operators.MaterializedAgg.refresh(
+            slice.of(txn.read(viewTable)), prepared, keys, measures))
           import spark.implicits._
           txn.overwrite(metaTable, Seq(batchId).toDF("last_batch"))
           txn.commit()
@@ -1171,14 +1163,6 @@ object StreamingOps {
     * [[graft.operators.Dedup.signatureStore]] of the final image
     * (spec-pinned, and the `q_stream_dedup` driver gate hashes it).
     */
-  /** The churn-sized store write the CDC store consumers share —
-    * see [[graft.etl.Txn.pruneAppendKeyed]].
-    */
-  private def storeUpsert(txn: graft.etl.Txn, table: String, key: String,
-                          gone: DataFrame, arrived: DataFrame,
-                          build: DataFrame => DataFrame): Unit =
-    txn.pruneAppendKeyed(table, key, gone, arrived, build)
-
   def changeFeedSignatureStore(spark: SparkSession, wh: graft.etl.Warehouse,
                                storeTable: String, docSchema: StructType,
                                n: Int, logDir: String,
@@ -1197,7 +1181,7 @@ object StreamingOps {
             .filter(col("change_type").isin("insert", "update_post"))
             .select("doc_id", "text")
           val txn = wh.begin()
-          storeUpsert(txn, storeTable, "doc_id", gone, arrived.select("doc_id"),
+          txn.pruneAppendKeyed(storeTable, "doc_id", gone, arrived.select("doc_id"),
             pruned => pruned.unionByName(Dedup.signatureStore(arrived, n)
               .join(pruned.select("doc_id"), Seq("doc_id"), "left_anti")))
           txn.commit()
@@ -1249,23 +1233,19 @@ object StreamingOps {
             .filter(col("change_type").isin("insert", "update_post"))
             .select("doc_id", "text")
           val txn = wh.begin()
-          val (slice, touched) = txn.bucketSlice(storeTable, "doc_id",
-            gone.unionByName(arrived.select("doc_id")))
-          if (touched.forall(_.nonEmpty)) {
+          val slice = txn.keyedSlice(storeTable, Seq("doc_id"))(graft.etl.Warehouse.bucketsOf(
+            gone.unionByName(arrived.select("doc_id")), Seq("doc_id"), _))
+          if (!slice.isEmpty) {
+            val cur = slice.of(txn.read(storeTable))
             // removed/appended are the EXACT row deltas of this batch's
             // store write — the census moves by their bands and nothing
             // else (a redelivered no-op batch cancels to zero deltas)
-            val removed = slice.join(gone, Seq("doc_id"), "left_semi").persist()
-            val pruned = slice.join(gone, Seq("doc_id"), "left_anti")
+            val removed = cur.join(gone, Seq("doc_id"), "left_semi").persist()
+            val pruned = cur.join(gone, Seq("doc_id"), "left_anti")
             val appended = Dedup.signatureStore(arrived, n)
               .join(pruned.select("doc_id"), Seq("doc_id"), "left_anti").persist()
             try {
-              touched match {
-                case Some(t) =>
-                  txn.overwriteBuckets(storeTable, pruned.unionByName(appended), t)
-                case None =>
-                  txn.overwrite(storeTable, pruned.unionByName(appended))
-              }
+              txn.overwriteSlice(storeTable, slice, pruned.unionByName(appended))
               maintainBandCensus(txn, countsTable, histTable,
                 Dedup.storeBands(removed, bandSize).select("bkey"),
                 Dedup.storeBands(appended, bandSize).select("bkey"))
@@ -1290,23 +1270,19 @@ object StreamingOps {
       .unionByName(addedBands.withColumn("d", lit(1L)))
       .groupBy("bkey").agg(sum(col("d")).as("d"))
       .filter(col("d") =!= 0L)
-    val (slice, touched) = txn.bucketSlice(countsTable, "bkey",
-      delta.select("bkey"))
-    if (touched.exists(_.isEmpty)) return // no net band movement
-    val joined = delta.join(slice, Seq("bkey"), "left")
+    val slice = txn.keyedSlice(countsTable, Seq("bkey"))(
+      graft.etl.Warehouse.bucketsOf(delta, Seq("bkey"), _))
+    if (slice.isEmpty) return // no net band movement
+    val cur = slice.of(txn.read(countsTable))
+    val joined = delta.join(cur, Seq("bkey"), "left")
       .select(col("bkey"), coalesce(col("cnt"), lit(0L)).as("oldc"),
         (coalesce(col("cnt"), lit(0L)) + col("d")).as("newc"))
       .persist()
     try {
       val newCounts = joined.filter(col("newc") > 0)
         .select(col("bkey"), col("newc").as("cnt"))
-      val pruned = slice.join(joined.select("bkey"), Seq("bkey"), "left_anti")
-      touched match {
-        case Some(t) =>
-          txn.overwriteBuckets(countsTable, pruned.unionByName(newCounts), t)
-        case None =>
-          txn.overwrite(countsTable, pruned.unionByName(newCounts))
-      }
+      val pruned = cur.join(joined.select("bkey"), Seq("bkey"), "left_anti")
+      txn.overwriteSlice(countsTable, slice, pruned.unionByName(newCounts))
       val histDelta = joined
         .select(col("oldc").as("bn"), lit(-1L).as("dk")).filter(col("bn") > 0)
         .unionByName(joined
@@ -1360,7 +1336,7 @@ object StreamingOps {
             .select("doc_id", "fmt", "payload")
             .filter(col("fmt") =!= "wav")
           val txn = wh.begin()
-          storeUpsert(txn, storeTable, "doc_id", gone, arrived.select("doc_id"),
+          txn.pruneAppendKeyed(storeTable, "doc_id", gone, arrived.select("doc_id"),
             pruned => pruned.unionByName(Multimodal.imageAHash(arrived)
               .join(pruned.select("doc_id"), Seq("doc_id"), "left_anti")))
           txn.commit()
@@ -1402,20 +1378,16 @@ object StreamingOps {
             .select("doc_id", "fmt", "payload")
             .filter(col("fmt") =!= "wav")
           val txn = wh.begin()
-          val (slice, touched) = txn.bucketSlice(storeTable, "doc_id",
-            gone.unionByName(arrived.select("doc_id")))
-          if (touched.forall(_.nonEmpty)) {
-            val removed = slice.join(gone, Seq("doc_id"), "left_semi").persist()
-            val pruned = slice.join(gone, Seq("doc_id"), "left_anti")
+          val slice = txn.keyedSlice(storeTable, Seq("doc_id"))(graft.etl.Warehouse.bucketsOf(
+            gone.unionByName(arrived.select("doc_id")), Seq("doc_id"), _))
+          if (!slice.isEmpty) {
+            val cur = slice.of(txn.read(storeTable))
+            val removed = cur.join(gone, Seq("doc_id"), "left_semi").persist()
+            val pruned = cur.join(gone, Seq("doc_id"), "left_anti")
             val appended = Multimodal.imageAHash(arrived)
               .join(pruned.select("doc_id"), Seq("doc_id"), "left_anti").persist()
             try {
-              touched match {
-                case Some(t) =>
-                  txn.overwriteBuckets(storeTable, pruned.unionByName(appended), t)
-                case None =>
-                  txn.overwrite(storeTable, pruned.unionByName(appended))
-              }
+              txn.overwriteSlice(storeTable, slice, pruned.unionByName(appended))
               maintainBandCensus(txn, countsTable, histTable,
                 Multimodal.hashBands(removed).select("bkey"),
                 Multimodal.hashBands(appended).select("bkey"))
@@ -1475,7 +1447,7 @@ object StreamingOps {
             .filter(col("change_type").isin("insert", "update_post"))
             .select("vec_id", "embedding")
           val txn = wh.begin()
-          storeUpsert(txn, indexTable, "vec_id", gone, added.select("vec_id"),
+          txn.pruneAppendKeyed(indexTable, "vec_id", gone, added.select("vec_id"),
             pruned => Similarity.ivfpqIndexAppend(
               pruned, seedEmbeddings, added, coarsePred, pqPred, m))
           txn.commit()
@@ -1520,20 +1492,18 @@ object StreamingOps {
             .filter(col("change_type").isin("insert", "update_post"))
             .select("vec_id", "embedding")
           val txn = wh.begin()
-          val (slice, touched) = txn.bucketSlice(indexTable, "vec_id",
-            gone.unionByName(added.select("vec_id")))
-          if (touched.forall(_.nonEmpty)) {
-            val removed = slice.join(gone, Seq("vec_id"), "left_semi").persist()
-            val pruned = slice.join(gone, Seq("vec_id"), "left_anti")
+          val slice = txn.keyedSlice(indexTable, Seq("vec_id"))(graft.etl.Warehouse.bucketsOf(
+            gone.unionByName(added.select("vec_id")), Seq("vec_id"), _))
+          if (!slice.isEmpty) {
+            val cur = slice.of(txn.read(indexTable))
+            val removed = cur.join(gone, Seq("vec_id"), "left_semi").persist()
+            val pruned = cur.join(gone, Seq("vec_id"), "left_anti")
             val newSlice = Similarity.ivfpqIndexAppend(
               pruned, seedEmbeddings, added, coarsePred, pqPred, m).persist()
             val appended = newSlice
               .join(pruned.select("vec_id"), Seq("vec_id"), "left_anti")
             try {
-              touched match {
-                case Some(t) => txn.overwriteBuckets(indexTable, newSlice, t)
-                case None    => txn.overwrite(indexTable, newSlice)
-              }
+              txn.overwriteSlice(indexTable, slice, newSlice)
               maintainListCounts(txn, listCountsTable,
                 removed.select("co_id"), appended.select("co_id"))
               txn.commit()

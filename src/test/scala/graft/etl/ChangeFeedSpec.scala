@@ -99,7 +99,7 @@ class ChangeFeedSpec extends AnyFunSuite {
     assert(touched.nonEmpty && touched.length < 8, "churn should touch a strict subset")
     val t1 = wh.begin()
     t1.overwriteBuckets("t",
-      snapshot.filter(Scd1.inBuckets(Seq("k"), 8, touched.toSeq)), touched.toSeq)
+      snapshot.filter(Warehouse.bucketOf(Seq(col("k")), 8).isin(touched.toSeq: _*)), touched.toSeq)
     t1.commit()
     val vB = wh.versions().last
 

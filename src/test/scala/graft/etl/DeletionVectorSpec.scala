@@ -138,7 +138,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     val bucket13 = spark.range(1).select(
       pmod(hash(lit("C013")), lit(nBuckets))).head().getInt(0)
     assume(!touched.contains(bucket13), "recipe must leave C013's bucket untouched")
-    val inT = Scd1.inBuckets(keys, nBuckets, touched.toIndexedSeq)
+    val inT = Warehouse.bucketOf(keys.map(col), nBuckets).isin(touched.toIndexedSeq: _*)
     txn.overwriteBuckets("dim_clients",
       Scd1.mergeAudit(txn.read("dim_clients").filter(inT), snap.filter(inT),
         keys, cmp, mar2),
@@ -194,7 +194,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     // partial overwrite touching ONLY the other bucket
     val other = (0 until nBuckets).filter(_ != b1)
     val txn = wh.begin()
-    val inT = Scd1.inBuckets(Seq("id"), nBuckets, other.toIndexedSeq)
+    val inT = Warehouse.bucketOf(Seq(col("id")), nBuckets).isin(other: _*)
     txn.overwriteBuckets("t",
       txn.read("t").filter(inT).withColumn("v", concat(col("v"), lit("!"))),
       other.toIndexedSeq)

@@ -6,6 +6,7 @@ import graft.TestSpark
 import graft.sources.BankSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -115,7 +116,7 @@ class WarehouseBucketingSpec extends AnyFunSuite {
       snapshotWithProcessed(snap), keys, cmp, n, deletesVisible = true)
     assert(touched.nonEmpty && touched.length <= 3,
       s"3 changed keys must touch at most 3 of $n buckets, got ${touched.toSeq}")
-    val inT = Scd1.inBuckets(keys, n, touched.toIndexedSeq)
+    val inT = Warehouse.bucketOf(keys.map(col), n).isin(touched.toIndexedSeq: _*)
     txn.overwriteBuckets("dim_clients",
       Scd1.mergeAudit(txn.read("dim_clients").filter(inT),
         snapshotWithProcessed(snap).filter(inT), keys, cmp, mar2),
@@ -208,5 +209,76 @@ class WarehouseBucketingSpec extends AnyFunSuite {
     val agg = wh.read("fact_transactions").groupBy("trans_id").count()
     assert(!agg.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning"),
       "groupBy on the bucket key should need no exchange after compaction")
+  }
+
+  test("a table bucketed by a column other than the merge key takes the whole-table path") {
+    // Txn.keyedSlice prunes only when the bucket key IS the merge key:
+    // touched buckets are computed in the merge key's hash space, the
+    // carried-over files encode the bucket column's. Each keyed writer
+    // runs once on a table bucketed by a NON-key column and once
+    // unbucketed; the resulting rows must agree.
+    import spark.implicits._
+    val n = 4
+    def tmp(tag: String): String = Files.createTempDirectory(tag).toString
+
+    def nightly(spec: Map[String, (String, Int)]): DataFrame = {
+      val wh = new Warehouse(spark, tmp("wh-guard-pipe"), bucketSpec = spec)
+      val pipe = new Pipeline(spark, wh, Reports.Corrected)
+      def bank(ids: Seq[Int], phone: Int => String) = new BankSource {
+        def clients(s: SparkSession): DataFrame = clientsDf(ids.map(i => clientRow(i, phone(i))))
+        def accounts(s: SparkSession): DataFrame = ReplayFixtures.accountsDf(s,
+          Seq(("A1", Date.valueOf("2030-01-01"), "C001", feb1, None: Option[Timestamp])))
+        def cards(s: SparkSession): DataFrame = ReplayFixtures.cardsDf(s,
+          Seq(("K1", "A1", feb1, None: Option[Timestamp])))
+      }
+      pipe.run(bank(1 to 40, i => s"+7 00${i % 5}"), None, mar1)
+      // night 2: update C007's phone, delete C013, insert C041
+      pipe.run(bank((1 to 41).filter(_ != 13),
+        i => if (i == 7) "+7 999" else s"+7 00${i % 5}"), None, mar2)
+      wh.read("dim_clients")
+    }
+
+    val mergeSchema = new StructType().add("id", "long").add("v", "string")
+    def mergeInto(spec: Map[String, (String, Int)]): DataFrame = {
+      val wh = new Warehouse(spark, tmp("wh-guard-merge"), Map("t" -> mergeSchema),
+        partitionSpec = Map.empty, bucketSpec = spec)
+      val t0 = wh.begin()
+      t0.overwrite("t", (1L to 12L).map(i => (i, s"v$i")).toDF("id", "v"))
+      t0.commit()
+      val txn = wh.begin()
+      // one update, one insert: two keys leave most buckets untouched
+      Merge.into(txn, "t", Seq((10L, "s10"), (13L, "s13")).toDF("id", "v"), Seq("id"),
+        whenMatched = Seq(Merge.UpdateAll()), whenNotMatched = Seq(Merge.Insert()))
+      txn.commit()
+      wh.read("t")
+    }
+
+    val curSchema = new StructType().add("k", "string").add("a", "string")
+      .add("valid_from", "timestamp")
+    def scd2(spec: Map[String, (String, Int)]): DataFrame = {
+      val wh = new Warehouse(spark, tmp("wh-guard-scd2"),
+        Map("cur" -> curSchema, "closed" -> curSchema.add("valid_to", "timestamp")),
+        partitionSpec = Map.empty, bucketSpec = spec)
+      def load(rows: Seq[(String, String)], at: Timestamp): Unit =
+        Scd2.mergeWarehouse(wh, "cur", "closed", rows.toDF("k", "a"), Seq("k"), Seq("a"), at)
+      load((1 to 12).map(i => (s"k$i", s"a${i % 3}")), mar1)
+      load((1 to 13).filter(_ != 5).map(i => (s"k$i", if (i == 7) "a9" else s"a${i % 3}")), mar2)
+      Scd2.readHistory(wh, "cur", "closed")
+    }
+
+    val cases: Seq[(String, Map[String, (String, Int)], Map[String, (String, Int)],
+        Map[String, (String, Int)] => DataFrame)] = Seq(
+      ("Pipeline.run", Warehouse.defaultBuckets + ("dim_clients" -> ("phone", n)),
+        Warehouse.defaultBuckets - "dim_clients", nightly),
+      ("Merge.into", Map("t" -> ("v", n)), Map.empty, mergeInto),
+      ("Scd2.mergeWarehouse", Map("cur" -> ("a", n)), Map.empty, scd2))
+    // a multiset: a wrongly carried-over bucket shows up as duplicates
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val differing = cases.collect {
+      case (name, mismatched, unbucketed, run) if rows(run(mismatched)) != rows(run(unbucketed)) =>
+        name
+    }
+    assert(differing.isEmpty, "bucketed by a non-key column, these writers got other rows " +
+      s"than on the unbucketed table: ${differing.mkString(", ")}")
   }
 }

@@ -204,7 +204,8 @@ class StreamingChurnWriteSpec extends AnyFunSuite {
     val runTs = java.sql.Timestamp.valueOf("2021-03-01 00:00:00")
     def apply(d: DataFrame): Unit = {
       val t = wh.begin()
-      Scd1.upsertIncrementalWarehouse(t, "dim_test", d, Seq("k"), Seq("a"), runTs)
+      Scd1.mergeAuditWarehouse(t, "dim_test", d, Seq("k"), Seq("a"), runTs,
+        deletesVisible = false)
       t.commit()
     }
     apply(delta((0L until 16L).map(i => (i, s"v$i")): _*)) // seed inserts
