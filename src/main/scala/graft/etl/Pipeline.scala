@@ -6,13 +6,26 @@ import org.apache.spark.sql.functions._
 import graft.sources.{BankSource, DropFolder, FileSources}
 
 /** The daily run (`main.py` top to bottom) as a pure function over a
-  * [[Warehouse]]: stage → SCD1-merge dims → meta watermarks → append
-  * facts → build reports → ONE atomic commit → archive input files.
+  * [[Warehouse]]: stage → SCD1-merge dims, meta watermarks, append facts
+  * → build reports → ONE atomic commit → archive input files.
   *
-  * Ordering is the reference's (SURVEY §3 entry point 1), with one
-  * deliberate fix: files are archived AFTER the commit, where the
-  * reference renames them mid-run (main.py:70) and loses them if the
-  * transaction later rolls back.
+  * The reference runs its statements one after another inside one
+  * Postgres transaction (main.py:18, commit at main.py:472). Their
+  * writes form a fixed dependency graph of three levels, and each
+  * level's writes run concurrently, one thread per write, inside the
+  * one [[Txn]]:
+  *  1. staging: the six `stg_*` tables, from the inputs alone;
+  *  2. the four dim merges, the meta watermarks and the two fact
+  *     appends: each reads only staging and the table it writes;
+  *  3. the reports: ONE `rep_fraud` append of the three reports, which
+  *     read the merged dims and the appended facts.
+  * No write is visible outside the txn before the single commit, so
+  * running a level's statements concurrently cannot be observed: the
+  * committed image is the one the reference's order produces.
+  *
+  * One deliberate fix to the reference's order: files are archived
+  * AFTER the commit, where the reference renames them mid-run
+  * (main.py:70) and loses them if the transaction later rolls back.
   *
   * `incremental = true` enables the corrected-mode improvement the
   * reference's own meta table begs for: the recorded watermark
@@ -29,15 +42,15 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
 
   /** One nightly run. `runTs` is captured once and truncated to whole
     * seconds — PG `now()` is statement-stable and TIMESTAMP(0) rounds to
-    * seconds (SURVEY §2.8).
+    * seconds (SURVEY §2.8). Throws the first failed write of a level
+    * (see [[Pipeline.concurrently]]); then nothing is committed and no
+    * input file is archived.
     */
   def run(bank: BankSource, dropDir: Option[String], runTs: Timestamp): Unit = {
     val ts = new Timestamp(runTs.getTime / 1000 * 1000)
     val txn = wh.begin()
-
-    // ---- staging: truncate (K1) happens implicitly — each stg table is
-    // rebuilt from scratch this run.
-    val processed = lit(ts)
+    val dims = Schemas.dimKeys.keys.toSeq.sorted
+    def stgOf(dim: String): String = "stg_" + dim.stripPrefix("dim_")
 
     // previous watermarks, ONE driver read of the (dims-sized) meta
     // table per run — not one lookup per dim: at a 1,000-table warehouse
@@ -55,70 +68,77 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
       case None => df
     }
 
-    txn.overwrite("stg_clients",
-      extract(bank.clients(spark), "dim_clients").withColumn("processed_dt", processed))
-    txn.overwrite("stg_accounts",
-      extract(bank.accounts(spark), "dim_accounts").withColumn("processed_dt", processed))
-    txn.overwrite("stg_cards",
-      extract(bank.cards(spark), "dim_cards").withColumn("processed_dt", processed))
-    txn.overwrite("stg_terminals", wh.emptyDf("stg_terminals"))
-    txn.overwrite("stg_transactions", wh.emptyDf("stg_transactions"))
-    txn.overwrite("stg_blacklist", wh.emptyDf("stg_blacklist"))
-
-    // ---- file ingestion (S4-S7): route, parse, append to staging
+    // ---- level 1, staging: truncate (K1) happens implicitly — each stg
+    // table is rebuilt from scratch this run with ONE write. File-fed
+    // tables (S4-S7) stage the union of their kind's drop files in
+    // discovery order, or nothing when none was dropped.
     val files = dropDir.map(DropFolder.discover).getOrElse(Nil)
-    files.foreach { f =>
-      val path = f.path.toString
-      f.kind match {
-        case DropFolder.Transactions =>
-          txn.append("stg_transactions", FileSources.transactionsCsv(spark, path))
-        case DropFolder.Terminals =>
-          txn.append("stg_terminals", FileSources.terminalsXlsx(spark, path,
-            Timestamp.valueOf(f.fileDate.atStartOfDay), ts))
-        case DropFolder.Blacklist =>
-          val df = FileSources.blacklistXlsx(spark, path)
-          val staged = mode match {
-            case Reports.Faithful => df // keep styled-empty (all-null) rows
-            case Reports.Corrected =>
-              df.filter(col("entry_dt").isNotNull || col("passport_num").isNotNull)
-          }
-          txn.append("stg_blacklist", staged)
-      }
-    }
+    def fromFiles(kind: DropFolder.Kind, table: String)
+                 (parse: DropFolder.DropFile => DataFrame): DataFrame =
+      files.filter(_.kind == kind).map(parse).reduceOption(_ unionByName _)
+        .getOrElse(wh.emptyDf(table))
+    def fromBank(dim: String, source: SparkSession => DataFrame): DataFrame =
+      extract(source(spark), dim).withColumn("processed_dt", lit(ts))
+    val staging: Seq[(String, () => DataFrame)] = Seq(
+      "stg_clients" -> (() => fromBank("dim_clients", bank.clients)),
+      "stg_accounts" -> (() => fromBank("dim_accounts", bank.accounts)),
+      "stg_cards" -> (() => fromBank("dim_cards", bank.cards)),
+      "stg_terminals" -> (() => fromFiles(DropFolder.Terminals, "stg_terminals")(f =>
+        FileSources.terminalsXlsx(spark, f.path.toString,
+          Timestamp.valueOf(f.fileDate.atStartOfDay), ts))),
+      "stg_transactions" -> (() => fromFiles(DropFolder.Transactions, "stg_transactions")(f =>
+        FileSources.transactionsCsv(spark, f.path.toString))),
+      "stg_blacklist" -> { () =>
+        val df = fromFiles(DropFolder.Blacklist, "stg_blacklist")(f =>
+          FileSources.blacklistXlsx(spark, f.path.toString))
+        mode match {
+          case Reports.Faithful => df // keep styled-empty (all-null) rows
+          case Reports.Corrected =>
+            df.filter(col("entry_dt").isNotNull || col("passport_num").isNotNull)
+        }
+      })
+    Pipeline.concurrently(staging.map { case (t, df) => t -> (() => txn.overwrite(t, df())) })
 
-    // ---- SCD1 merge, one per dim (K4+K6+K7 via Scd1.mergeAudit),
+    // ---- level 2, SCD1 merge, one per dim (K4+K6+K7 via Scd1.mergeAudit),
     // bucket-pruned on a bucketed dim (Scd1.mergeAuditWarehouse).
     // Incremental mode: bank dims merge their delta with no delete path;
     // terminals are file-fed full snapshots either way.
-    Schemas.dimKeys.keys.toSeq.sorted.foreach { dim =>
-      Scd1.mergeAuditWarehouse(txn, dim, txn.read("stg_" + dim.stripPrefix("dim_")),
+    val merges = dims.map { dim =>
+      dim -> (() => Scd1.mergeAuditWarehouse(txn, dim, txn.read(stgOf(dim)),
         Seq(Schemas.dimKeys(dim)), Schemas.dimCompareCols(dim), ts,
-        deletesVisible = !incremental || dim == "dim_terminals")
+        deletesVisible = !incremental || dim == "dim_terminals"))
     }
 
-    // ---- meta watermarks (K9): the reference seeds 1900-01-01 for a
-    // missing row (main.py:350-357) but the unconditional UPDATE right
-    // after (main.py:359-366) overwrites it with the staging scalar —
-    // which is NULL when staging is empty. Net effect each run: the row
-    // exists and holds coalesce(max(update_dt), max(create_dt)) or NULL.
-    val metaRows = Schemas.dimKeys.keys.toSeq.sorted.map { dim =>
-      val stg = txn.read("stg_" + dim.stripPrefix("dim_"))
-      val wm = stg.agg(coalesce(max("update_dt"), max("create_dt"))).head().get(0)
-      val stgWm = Option(wm).map(_.asInstanceOf[Timestamp])
-      // incremental: an empty delta means "no change" — keep the previous
-      // watermark instead of faithfully overwriting it with NULL
-      val kept = if (incremental) stgWm.orElse(wmFor(dim)) else stgWm
-      ("deaian", "lapp_dwh_" + dim, kept)
+    // ---- level 2, meta watermarks (K9): the reference seeds 1900-01-01
+    // for a missing row (main.py:350-357) but the unconditional UPDATE
+    // right after (main.py:359-366) overwrites it with the staging
+    // scalar — which is NULL when staging is empty. Net effect each run:
+    // the row exists and holds coalesce(max(update_dt), max(create_dt))
+    // or NULL. All four scalars come from ONE action over the union of
+    // the staging tables.
+    def metaImage(): DataFrame = {
+      val stgWm: Map[String, Option[Timestamp]] = dims
+        .map(d => txn.read(stgOf(d)).select(lit(d).as("dim"), col("update_dt"), col("create_dt")))
+        .reduce(_ unionByName _)
+        .groupBy("dim").agg(coalesce(max("update_dt"), max("create_dt")))
+        .collect().map(r => r.getString(0) -> Option(r.getTimestamp(1))).toMap
+      val metaRows = dims.map { dim =>
+        val wm = stgWm.getOrElse(dim, None)
+        // incremental: an empty delta means "no change" — keep the previous
+        // watermark instead of faithfully overwriting it with NULL
+        val kept = if (incremental) wm.orElse(wmFor(dim)) else wm
+        ("deaian", "lapp_dwh_" + dim, kept)
+      }
+      import spark.implicits._
+      val metaNew = metaRows.toDF("schema_name", "table_name", "max_update_dt")
+      val metaKept = txn.read("meta").alias("m")
+        .join(metaNew.select(col("schema_name").as("s"), col("table_name").as("t")),
+          col("m.schema_name") === col("s") && col("m.table_name") === col("t"), "left_anti")
+      metaKept.unionByName(metaNew)
     }
-    import spark.implicits._
-    val metaNew = metaRows.toDF("schema_name", "table_name", "max_update_dt")
-    val metaKept = txn.read("meta").alias("m")
-      .join(metaNew.select(col("schema_name").as("s"), col("table_name").as("t")),
-        col("m.schema_name") === col("s") && col("m.table_name") === col("t"), "left_anti")
-    txn.overwrite("meta", metaKept.unionByName(metaNew))
 
-    // ---- facts (K8): anti-join dedup append, blacklist first
-    // (main.py:390-391). Two fact-side defenses compose:
+    // ---- level 2, facts (K8): anti-join dedup append. Two fact-side
+    // defenses compose:
     //  - Bloom prune BELOW the join (graft.operators.BloomJoin): one
     //    filter built from the day's staging keys (ONE small-side
     //    action, reused across every fact dir), so fact ids that cannot
@@ -134,25 +154,26 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
     //    what keeps the big-delta regime safe: when the Bloom auto-sizer
     //    declines (too many staging keys to filter profitably), an
     //    unbucketed plan would shuffle the FULL 100 TB fact id set.
-    def appendFact(fact: String, stg: String, id: String): Unit =
-      txn.append(fact, freshFactRows(txn, fact, stg, id))
-    appendFact("fact_blacklist", "stg_blacklist", "passport_num")
-    appendFact("fact_transactions", "stg_transactions", "trans_id")
+    def appendFact(fact: String, stg: String, id: String): (String, () => Unit) =
+      fact -> (() => txn.append(fact, freshFactRows(txn, fact, stg, id)))
+    Pipeline.concurrently(merges ++ Seq(
+      "meta" -> (() => txn.overwrite("meta", metaImage())),
+      appendFact("fact_blacklist", "stg_blacklist", "passport_num"),
+      appendFact("fact_transactions", "stg_transactions", "trans_id")))
 
-    // ---- reports (K10): three appends, no dedup (reruns duplicate rows,
-    // as in the reference)
+    // ---- level 3, reports (K10): the three reports appended as ONE
+    // write, no dedup (reruns duplicate rows, as in the reference)
     val fact = txn.read("fact_transactions")
     val cards = txn.read("dim_cards")
     val accounts = txn.read("dim_accounts")
     val clients = txn.read("dim_clients")
     val terminals = txn.read("dim_terminals")
     val blacklist = txn.read("fact_blacklist")
-    txn.append("rep_fraud",
-      Reports.fraudExpiredPassport(fact, cards, accounts, clients, blacklist, mode))
-    txn.append("rep_fraud",
-      Reports.fraudInactiveAccount(fact, cards, accounts, clients))
-    txn.append("rep_fraud",
+    txn.append("rep_fraud", Seq(
+      Reports.fraudExpiredPassport(fact, cards, accounts, clients, blacklist, mode),
+      Reports.fraudInactiveAccount(fact, cards, accounts, clients),
       Reports.fraudCityHopping(fact, cards, terminals, accounts, clients))
+      .reduce(_ unionByName _))
 
     // ---- K11: one atomic commit, then (and only then) archive inputs
     txn.commit()
@@ -170,6 +191,26 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
 }
 
 object Pipeline {
+  /** Run `writes` (table → the write) concurrently, one thread per
+    * write, started by the calling thread so that each inherits its
+    * Spark local properties. Returns only once EVERY write has finished;
+    * if any failed, throws the first failure, the others added to it as
+    * suppressed exceptions.
+    */
+  private[etl] def concurrently(writes: Seq[(String, () => Unit)]): Unit = {
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = writes.map { case (table, write) =>
+      new Thread(() => try write() catch { case t: Throwable => failures.add(t) },
+        s"graft-pipeline-$table")
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    Option(failures.poll()).foreach { first =>
+      failures.forEach(first.addSuppressed(_))
+      throw first
+    }
+  }
+
   /** The rows of `batch` whose `id` is NOT already in `fact` — the K8
     * dedup plan, reusable against any incoming frame (nightly staging
     * or a streaming micro-batch): a batch-sized Bloom filter prunes

@@ -24,6 +24,10 @@ import scala.jdk.CollectionConverters._
   *                                      // ATOMIC_MOVE => all-or-nothing runs)
   *   data/<table>/<uuid>/part-*.parquet // immutable, write-once
   * }}}
+  * The catalog and its `_versions/` snapshots name data dirs RELATIVE to
+  * `root`, so a copied or moved root is a complete warehouse of its own;
+  * every reader resolves them against `root` (absolute entries, as older
+  * catalogs hold, read as they are).
   *
   * Scale notes (100 TB): commits are O(1) metadata, appends never rewrite
   * existing data (a new data dir is referenced alongside the old ones —
@@ -64,6 +68,7 @@ class Warehouse(val spark: SparkSession, val root: String,
                 val autoCompactThreshold: Int = 64,
                 val bucketSpec: Map[String, (String, Int)] = Warehouse.defaultBuckets) {
 
+  private val rootPath: Path = Paths.get(root)
   private val catalogPath: Path = Paths.get(root, "_catalog.json")
   private val versionsDir: Path = Paths.get(root, "_versions")
   // per-root, JVM-wide (instances over one root share it): serializes
@@ -85,9 +90,7 @@ class Warehouse(val spark: SparkSession, val root: String,
   }
 
   /** Committed catalog: table → data dirs, in append order. */
-  def catalog(): Map[String, Seq[String]] =
-    if (!Files.exists(catalogPath)) Map.empty
-    else CatalogJson.parse(Files.readString(catalogPath))
+  def catalog(): Map[String, Seq[String]] = parseCatalogRaw(readCatalogRaw())
 
   /** Raw catalog file content ("" = absent) — the CAS token every
     * read-modify-retry loop compares through [[commitCatalogIf]]; one
@@ -96,8 +99,23 @@ class Warehouse(val spark: SparkSession, val root: String,
   private[etl] def readCatalogRaw(): String =
     if (Files.exists(catalogPath)) Files.readString(catalogPath) else ""
 
+  /** Parse catalog file content, resolving its root-relative dirs
+    * against `root` (an absolute entry resolves to itself).
+    */
   private[etl] def parseCatalogRaw(raw: String): Map[String, Seq[String]] =
-    if (raw.isEmpty) Map.empty else CatalogJson.parse(raw)
+    if (raw.isEmpty) Map.empty
+    else CatalogJson.parse(raw).map { case (t, ds) => t -> ds.map(rootPath.resolve(_).toString) }
+
+  /** Catalog file content for `entries`, dirs under `root` written
+    * relative to it.
+    */
+  private def renderCatalog(entries: Map[String, Seq[String]]): String =
+    CatalogJson.render(entries.map { case (t, ds) =>
+      t -> ds.map { d =>
+        val p = Paths.get(d)
+        if (p.startsWith(rootPath)) rootPath.relativize(p).toString else d
+      }
+    })
 
   /** Read the committed image of a table (partition columns dropped —
     * the declared schema is the contract; also robust to all-empty data
@@ -378,7 +396,6 @@ class Warehouse(val spark: SparkSession, val root: String,
     }
   }
 
-  /** Delete data directories no longer referenced by the catalog. */
   /** Reclaim data dirs referenced by neither the current catalog nor the
     * newest `retainVersions` historical versions, and prune version
     * files past that horizon (the newest version file — the current
@@ -434,8 +451,15 @@ class Warehouse(val spark: SparkSession, val root: String,
     * `dt=`-style directories each, so date-filtered scans prune whole
     * days and a 100 TB fact table never rewrites history. Tables with a
     * `bucketSpec` entry write through the bucketed path instead.
+    *
+    * `carry = Some((fromDir, touched))` completes a PARTIAL rewrite:
+    * `df` holds the new rows of the `touched` buckets only, and every
+    * other bucket's files are hard-linked in from `fromDir`
+    * ([[copyUntouchedBuckets]]) before the sidecar pass, so the one
+    * sidecar covers the whole dir.
     */
-  private[etl] def writeDataDir(table: String, df: DataFrame): String = {
+  private[etl] def writeDataDir(table: String, df: DataFrame,
+                                carry: Option[(String, Set[Int])] = None): String = {
     val dir = newDataDir(table)
     (partitionSpec.get(table), bucketSpec.get(table)) match {
       case (Some((name, derive)), Some(_)) =>
@@ -451,6 +475,7 @@ class Warehouse(val spark: SparkSession, val root: String,
       case _ =>
         df.write.parquet(dir)
     }
+    carry.foreach { case (fromDir, touched) => copyUntouchedBuckets(fromDir, dir, touched) }
     // every data dir gets a file-stats sidecar at WRITE time (footers
     // are hot in the page cache right now; partition subdirs walked
     // recursively), so [[readSkipping]] prunes with zero per-file
@@ -544,38 +569,43 @@ class Warehouse(val spark: SparkSession, val root: String,
     * the session catalog, not the files, so each dir gets a
     * deterministic external-table registration (name = digest of the
     * path; dirs are immutable, so a registration never goes stale —
-    * [[vacuum]] drops it with the dir).
+    * [[vacuum]] drops it with the dir). The check and the registration
+    * run under the name's lock: threads making the first read of one
+    * dir at once register it once, and none of them sees the table
+    * before its partitions and statistics are in place.
     */
   private[etl] def readBucketedDir(table: String, dir: String): DataFrame = {
     val (key, n) = bucketSpec(table)
     val name = Warehouse.bucketedTableName(dir)
-    if (!spark.catalog.tableExists(name)) {
-      // partitioned+bucketed dirs (facts) declare the partition column
-      // too — its type is derived from the partition expression so the
-      // registration never drifts from what writeDataDir produced
-      val (cols, partClause) = partitionSpec.get(table) match {
-        case Some((p, derive)) =>
-          val pType = emptyDf(table).withColumn(p, derive).schema(p).dataType.sql
-          (s"${schemas(table).toDDL}, `$p` $pType", s"PARTITIONED BY (`$p`)")
-        case None => (schemas(table).toDDL, "")
+    Warehouse.registrationLock(name).synchronized {
+      if (!spark.catalog.tableExists(name)) {
+        // partitioned+bucketed dirs (facts) declare the partition column
+        // too — its type is derived from the partition expression so the
+        // registration never drifts from what writeDataDir produced
+        val (cols, partClause) = partitionSpec.get(table) match {
+          case Some((p, derive)) =>
+            val pType = emptyDf(table).withColumn(p, derive).schema(p).dataType.sql
+            (s"${schemas(table).toDDL}, `$p` $pType", s"PARTITIONED BY (`$p`)")
+          case None => (schemas(table).toDDL, "")
+        }
+        spark.sql(
+          s"""CREATE TABLE `$name` ($cols)
+             |USING PARQUET
+             |$partClause
+             |CLUSTERED BY (`$key`) SORTED BY (`$key`) INTO $n BUCKETS
+             |LOCATION '$dir'""".stripMargin)
+        // datasource tables with a LOCATION don't discover partitions on
+        // their own; dirs are immutable so one recovery at registration
+        // time is complete forever
+        if (partitionSpec.contains(table))
+          spark.sql(s"ALTER TABLE `$name` RECOVER PARTITIONS")
+        // a catalog table without stats planwise weighs Long.MaxValue —
+        // no plan reading it could ever choose a broadcast. NOSCAN fills
+        // in sizeInBytes from file sizes (metadata-only, once per
+        // immutable dir), so a small dim still broadcasts into report
+        // joins while a 100 TB scan keeps the co-located SMJ.
+        spark.sql(s"ANALYZE TABLE `$name` COMPUTE STATISTICS NOSCAN")
       }
-      spark.sql(
-        s"""CREATE TABLE `$name` ($cols)
-           |USING PARQUET
-           |$partClause
-           |CLUSTERED BY (`$key`) SORTED BY (`$key`) INTO $n BUCKETS
-           |LOCATION '$dir'""".stripMargin)
-      // datasource tables with a LOCATION don't discover partitions on
-      // their own; dirs are immutable so one recovery at registration
-      // time is complete forever
-      if (partitionSpec.contains(table))
-        spark.sql(s"ALTER TABLE `$name` RECOVER PARTITIONS")
-      // a catalog table without stats planwise weighs Long.MaxValue —
-      // no plan reading it could ever choose a broadcast. NOSCAN fills
-      // in sizeInBytes from file sizes (metadata-only, once per
-      // immutable dir), so a small dim still broadcasts into report
-      // joins while a 100 TB scan keeps the co-located SMJ.
-      spark.sql(s"ANALYZE TABLE `$name` COMPUTE STATISTICS NOSCAN")
     }
     spark.table(name)
   }
@@ -589,8 +619,8 @@ class Warehouse(val spark: SparkSession, val root: String,
     * its files inside `dt=`-style subdirs, and a flat listing would
     * silently carry nothing.
     */
-  private[etl] def copyUntouchedBuckets(fromDir: String, toDir: String,
-                                        touched: Set[Int]): Unit = {
+  private def copyUntouchedBuckets(fromDir: String, toDir: String,
+                                   touched: Set[Int]): Unit = {
     val bucketRe = """.*_(\d+)(?:\..*)?$""".r
     val from = Paths.get(fromDir)
     Files.createDirectories(Paths.get(toDir))
@@ -612,7 +642,7 @@ class Warehouse(val spark: SparkSession, val root: String,
 
   private[etl] def commitCatalog(entries: Map[String, Seq[String]]): Unit =
     commitLock.synchronized {
-    val bytes = CatalogJson.render(entries).getBytes(StandardCharsets.UTF_8)
+    val bytes = renderCatalog(entries).getBytes(StandardCharsets.UTF_8)
     // TIME TRAVEL: an immutable numbered copy per commit, written BEFORE
     // the pointer swap so the history is always a superset of pointer
     // states (a version file whose swap lost a race is a version that
@@ -651,7 +681,7 @@ class Warehouse(val spark: SparkSession, val root: String,
   def catalogAsOf(version: Long): Map[String, Seq[String]] = {
     val p = versionsDir.resolve(f"v$version%08d.json")
     require(Files.exists(p), s"version $version not found (vacuumed?)")
-    CatalogJson.parse(Files.readString(p))
+    parseCatalogRaw(Files.readString(p))
   }
 
   /** TIME TRAVEL read: the committed image of `table` as of `version`.
@@ -796,11 +826,21 @@ class Warehouse(val spark: SparkSession, val root: String,
 /** One run's transaction: reads see committed state plus this txn's own
   * writes; nothing becomes visible to other readers until `commit()`
   * swaps the catalog (K11).
+  *
+  * THREAD SAFETY: several threads may read and write through one txn at
+  * once as long as each writes DISTINCT tables (the nightly run's
+  * concurrent levels, [[Pipeline]]); every read and update of the
+  * pending writes is atomic. Two threads writing the SAME table race
+  * (an append may be lost), and `commit()` must follow every write.
   */
 class Txn private[etl] (private[etl] val wh: Warehouse) {
   private val snapshot: Map[String, Seq[String]] = wh.catalog()
+  // guarded by `this`
   private val pending = mutable.LinkedHashMap[String, Seq[String]]()
   private var committed = false
+
+  private def setPending(key: String, dirs: Seq[String]): Unit =
+    synchronized { pending(key) = dirs }
 
   /** Abandon the transaction without committing. begin() is a pure
     * in-memory catalog snapshot today, so this only clears the pending
@@ -808,7 +848,7 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     * MUST route through here, so that if Txn ever acquires external
     * state (locks, staged files) the release has one place to live.
     */
-  def discard(): Unit = pending.clear()
+  def discard(): Unit = synchronized { pending.clear() }
 
   def read(table: String): DataFrame =
     wh.readDirs(table, currentDirs(table), currentDvDirs(table))
@@ -817,13 +857,11 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     * else committed snapshot).
     */
   private[etl] def currentDirs(table: String): Seq[String] =
-    pending.getOrElse(table, snapshot.getOrElse(table, Nil))
+    synchronized { pending.getOrElse(table, snapshot.getOrElse(table, Nil)) }
 
   /** The deletion-vector dirs this txn currently sees for `table`. */
-  private[etl] def currentDvDirs(table: String): Seq[String] = {
-    val k = Warehouse.dvKey(table)
-    pending.getOrElse(k, snapshot.getOrElse(k, Nil))
-  }
+  private[etl] def currentDvDirs(table: String): Seq[String] =
+    currentDirs(Warehouse.dvKey(table))
 
   /** Each of the table's data dirs as its own BUCKETED scan (declared
     * columns only — partition columns dropped, like [[read]]). A multi-
@@ -846,8 +884,8 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     * same commit.
     */
   def overwrite(table: String, df: DataFrame): Unit = {
-    pending(table) = Seq(wh.writeDataDir(table, align(table, df)))
-    if (currentDvDirs(table).nonEmpty) pending(Warehouse.dvKey(table)) = Nil
+    setPending(table, Seq(wh.writeDataDir(table, align(table, df))))
+    if (currentDvDirs(table).nonEmpty) setPending(Warehouse.dvKey(table), Nil)
   }
 
   /** PARTIAL overwrite of a bucketed table: `touchedDf` must hold the
@@ -866,12 +904,8 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     val current = currentDirs(table)
     require(current.length == 1,
       s"partial bucket overwrite needs exactly one current dir for $table, got ${current.length}")
-    val dir = wh.writeDataDir(table, align(table, touchedDf))
-    wh.copyUntouchedBuckets(current.head, dir, touched.toSet)
-    // the hard-linked files landed after writeDataDir's sidecar pass —
-    // refresh it so the skipping stats cover the whole dir again
-    graft.sources.DataSkipping.writeSidecar(wh.spark, dir)
-    pending(table) = Seq(dir)
+    val dir = wh.writeDataDir(table, align(table, touchedDf), Some((current.head, touched.toSet)))
+    setPending(table, Seq(dir))
     remapDv(table, current.head, dir)
   }
 
@@ -917,8 +951,8 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     val n = wh.spark.read.schema(Warehouse.dvSchema).parquet(dvDir).count()
     if (n == 0L) {
       wh.deleteRecursively(Paths.get(dvDir))
-      pending(Warehouse.dvKey(table)) = Nil
-    } else pending(Warehouse.dvKey(table)) = Seq(dvDir)
+      setPending(Warehouse.dvKey(table), Nil)
+    } else setPending(Warehouse.dvKey(table), Seq(dvDir))
   }
 
   /** Which part of `table` a write keyed by `keys` has to rewrite: the
@@ -1036,13 +1070,10 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
           if (touched.isEmpty) d // untouched dir: zero bytes move
           else {
             val inT = Warehouse.bucketOf(Seq(col(key)), n).isin(touched: _*)
-            val dir = wh.writeDataDir(table, align(table, part.filter(inT && keep)))
-            wh.copyUntouchedBuckets(d, dir, touched.toSet)
-            graft.sources.DataSkipping.writeSidecar(wh.spark, dir)
-            dir
+            wh.writeDataDir(table, align(table, part.filter(inT && keep)), Some((d, touched.toSet)))
           }
         }
-        if (newDirs != currentDirs(table)) pending(table) = newDirs
+        if (newDirs != currentDirs(table)) setPending(table, newDirs)
       case _ =>
         overwrite(table, read(table).filter(keep))
     }
@@ -1077,7 +1108,7 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     tomb.write.parquet(dir)
     val n = wh.spark.read.schema(Warehouse.dvSchema).parquet(dir).count()
     if (n == 0L) wh.deleteRecursively(Paths.get(dir))   // match-less: no-op
-    else pending(Warehouse.dvKey(table)) = dvd :+ dir
+    else setPending(Warehouse.dvKey(table), dvd :+ dir)
     n
   }
 
@@ -1086,7 +1117,7 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     */
   def append(table: String, df: DataFrame): Unit = {
     val dir = wh.writeDataDir(table, align(table, df))
-    pending(table) = pending.getOrElse(table, snapshot.getOrElse(table, Nil)) :+ dir
+    synchronized { setPending(table, currentDirs(table) :+ dir) }
   }
 
   /** Append with COMMIT-TIME CONSTRAINTS: the batch is audited against
@@ -1192,7 +1223,8 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     */
   def commit(): Unit = {
     require(!committed, "transaction already committed")
-    val guarded: Set[String] = pending.keys.flatMap { k =>
+    val written = synchronized(pending.toSeq)
+    val guarded: Set[String] = written.map(_._1).flatMap { k =>
       if (k.startsWith(Warehouse.DvPrefix))
         Seq(k, k.stripPrefix(Warehouse.DvPrefix))
       else Seq(k, Warehouse.dvKey(k))
@@ -1209,7 +1241,7 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
           s"commit conflict: ${conflicts.toSeq.sorted.mkString(", ")} " +
             "moved since this transaction began (first committer wins; " +
             "retry the transaction from a fresh begin())")
-      done = wh.commitCatalogIf(expected, cat ++ pending.toMap)
+      done = wh.commitCatalogIf(expected, cat ++ written)
       attempts += 1
     }
     if (!done)
@@ -1218,7 +1250,7 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     committed = true
     // the commit above is durable at this point: a compaction failure is a
     // maintenance problem (stale dir layout), never a commit failure
-    pending.keys.foreach { t =>
+    written.foreach { case (t, _) =>
       if (wh.catalog().getOrElse(t, Nil).length > wh.autoCompactThreshold)
         try {
           if (t.startsWith(Warehouse.DvPrefix)) wh.compactDvKey(t)
@@ -1311,6 +1343,14 @@ object Warehouse {
   private[etl] val dvSchema: StructType = StructType(Seq(
     StructField(DvFile, StringType, nullable = false),
     StructField(DvPos, LongType, nullable = false)))
+
+  /** Striped locks for [[Warehouse.readBucketedDir]]'s one-time
+    * registration: first reads of different dirs rarely wait on each
+    * other, and the lock set stays bounded however many dirs a JVM reads.
+    */
+  private val registrationLocks = Array.fill(64)(new Object)
+  private def registrationLock(name: String): Object =
+    registrationLocks(math.floorMod(name.hashCode, registrationLocks.length))
 
   /** Deterministic registration name for a bucketed data dir. */
   private[etl] def bucketedTableName(dir: String): String =

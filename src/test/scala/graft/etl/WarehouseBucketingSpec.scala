@@ -281,4 +281,48 @@ class WarehouseBucketingSpec extends AnyFunSuite {
     assert(differing.isEmpty, "bucketed by a non-key column, these writers got other rows " +
       s"than on the unbucketed table: ${differing.mkString(", ")}")
   }
+
+  test("a partial rewrite writes one stats sidecar that covers the whole dir") {
+    import spark.implicits._
+    def sidecar(dir: String): Seq[String] =
+      Files.readAllLines(Paths.get(dir, "_graft_stats.tsv")).asScala.toSeq.sorted
+    def assertWholeDir(dir: String): Unit = {
+      val written = sidecar(dir)
+      assert(written.map(_.split("\t")(0)).distinct.length ==
+        parquetFilesDeep(dir).length, s"sidecar of $dir misses files")
+      graft.sources.DataSkipping.writeSidecar(spark, dir)
+      assert(written == sidecar(dir), s"sidecar of $dir differs from a fresh one")
+    }
+    val wh = new Warehouse(spark, Files.createTempDirectory("wh-bkt-sidecar").toString)
+    // the single-dir path (Txn.overwriteBuckets), one dim key changed
+    val t1 = wh.begin()
+    t1.overwrite("dim_clients", snapshotWithProcessed(clientsDf((1 to 40).map(clientRow(_)))))
+    t1.commit()
+    val t2 = wh.begin()
+    Scd1.mergeAuditWarehouse(t2, "dim_clients", snapshotWithProcessed(clientsDf(
+      (1 to 40).map(i => clientRow(i, if (i == 7) "+7 999" else "+7 000")))),
+      Seq("client_id"), Schemas.dimCompareCols("dim_clients"), mar2, deletesVisible = true)
+    t2.commit()
+    assertWholeDir(wh.catalog()("dim_clients").head)
+
+    // the multi-dir path (Txn.deleteWhere on the fact layout)
+    def batch(ids: Range, day: Int): DataFrame =
+      ids.map(i => (s"T$i", Timestamp.valueOf(f"2021-03-0$day 10:00:00"),
+          BigDecimal(i), s"K$i", "PAY", "OK", s"A$i"))
+        .toDF("trans_id", "trans_date", "amt", "card_num", "oper_type",
+          "oper_result", "terminal")
+    val t3 = wh.begin(); t3.append("fact_transactions", batch(1 to 50, 1)); t3.commit()
+    val t4 = wh.begin(); t4.append("fact_transactions", batch(51 to 90, 2)); t4.commit()
+    val before = wh.catalog()("fact_transactions")
+    val t5 = wh.begin(); t5.deleteWhere("fact_transactions", col("trans_id") === "T5"); t5.commit()
+    val rewritten = wh.catalog()("fact_transactions").filterNot(before.contains)
+    assert(rewritten.length == 1)
+    assertWholeDir(rewritten.head)
+  }
+
+  private def parquetFilesDeep(dir: String): Seq[Path] = {
+    val st = Files.walk(Paths.get(dir))
+    try st.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    finally st.close()
+  }
 }

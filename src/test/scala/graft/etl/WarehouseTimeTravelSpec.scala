@@ -97,4 +97,51 @@ class WarehouseTimeTravelSpec extends AnyFunSuite {
     assert(removed >= 1, s"expected the v1 dir reclaimed, removed=$removed")
     assert(oldDirs.forall(d => !Files.exists(java.nio.file.Paths.get(d))))
   }
+
+  test("a copied root is a warehouse of its own once the original is gone") {
+    import java.nio.file.{Path, Paths}
+    val src = Files.createTempDirectory("whtt-src")
+    val wh = new Warehouse(spark, src.toString)
+    val facts = (1 to 30).map(i => (s"T$i", java.sql.Timestamp.valueOf(f"2021-03-0${1 + i % 2} 10:00:00"),
+        BigDecimal(i), s"K$i", "PAY", "OK", s"A$i"))
+      .toDF("trans_id", "trans_date", "amt", "card_num", "oper_type", "oper_result", "terminal")
+    val t1 = wh.begin(); t1.overwrite("meta", metaRow("v1")); t1.append("fact_transactions", facts)
+    t1.commit()
+    val t2 = wh.begin(); t2.overwrite("meta", metaRow("v2")); t2.commit()
+    val t3 = wh.begin(); t3.overwrite("meta", metaRow("v3")); t3.commit()
+    assert(!Files.readString(src.resolve("_catalog.json")).contains(src.toString),
+      "the catalog must name its dirs relative to the root")
+
+    val dst = Files.createTempDirectory("whtt-dst").resolve("copy")
+    def walk(p: Path): Seq[Path] = {
+      val st = Files.walk(p)
+      try { import scala.jdk.CollectionConverters._; st.iterator().asScala.toSeq } finally st.close()
+    }
+    walk(src).foreach(p => Files.copy(p, dst.resolve(src.relativize(p).toString)))
+    walk(src).reverse.foreach(Files.delete)
+
+    val copy = new Warehouse(spark, dst.toString)
+    assert(copy.catalog().values.flatten.forall(_.startsWith(dst.toString)))
+    assert(copy.read("meta").collect().map(_.getString(0)).toSeq == Seq("v3"))
+    assert(copy.readAsOf("meta", 2L).collect().map(_.getString(0)).toSeq == Seq("v2"))
+    assert(copy.read("fact_transactions").count() == 30)
+    // only the two retired meta dirs are unreferenced
+    assert(copy.vacuum(graceMs = 0L) == 2)
+    assert(copy.catalog().values.flatten.forall(d => Files.isDirectory(Paths.get(d))))
+    assert(copy.read("meta").collect().map(_.getString(0)).toSeq == Seq("v3"))
+    assert(copy.read("fact_transactions").count() == 30)
+  }
+
+  test("a catalog naming its dirs by absolute path still reads") {
+    val root = Files.createTempDirectory("whtt-abs")
+    val wh = new Warehouse(spark, root.toString)
+    val t1 = wh.begin(); t1.overwrite("meta", metaRow("abs")); t1.commit()
+    val dir = wh.catalog()("meta").head
+    assert(dir.startsWith(root.toString))
+    Files.writeString(root.resolve("_catalog.json"), s"""{\n  "meta": ["$dir"]\n}""")
+    assert(wh.catalog() == Map("meta" -> Seq(dir)))
+    assert(wh.read("meta").collect().map(_.getString(0)).toSeq == Seq("abs"))
+    assert(wh.vacuum(graceMs = 0L) == 0)
+    assert(wh.read("meta").collect().map(_.getString(0)).toSeq == Seq("abs"))
+  }
 }
