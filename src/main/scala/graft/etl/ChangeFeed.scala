@@ -693,7 +693,7 @@ object ChangeFeed {
       return tableChanges(wh, table, fromVersion, toVersion, keys)
 
     def dataFiles(dir: String): Seq[Path] =
-      wh.listDir(Paths.get(dir)).filter { p =>
+      Warehouse.listDir(Paths.get(dir)).filter { p =>
         val n = p.getFileName.toString
         n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
       }

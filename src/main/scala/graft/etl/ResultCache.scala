@@ -4,7 +4,6 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import scala.jdk.CollectionConverters._
 
 /** QUERY RESULT CACHE with table-granular invalidation — the
   * serving-side complement of the MV family: an MV answers a DECLARED
@@ -35,6 +34,7 @@ import scala.jdk.CollectionConverters._
   * catalog (i.e. whose source dirs were retired by later commits).
   */
 object ResultCache {
+  import Warehouse.{deleteRecursively, listDir}
 
   private def canonical(df: DataFrame) = df.queryExecution.analyzed.canonicalized
 
@@ -203,17 +203,4 @@ object ResultCache {
   // catalog paths are plain; plan rootPaths carry the fs scheme
   private def stripScheme(p: String): String =
     if (p.startsWith("file:")) new java.net.URI(p).getPath else p
-
-  // fd-safe listing: Files.list keeps an fd open until closed
-  private def listDir(p: Path): Seq[Path] = {
-    val st = Files.list(p)
-    try { import scala.jdk.CollectionConverters._; st.iterator().asScala.toSeq }
-    finally st.close()
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      listDir(p).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
-  }
 }

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, hash, lit, pmod, to_date}
+import org.apache.spark.sql.functions.{broadcast, col, hash, lit, pmod, substring_index, to_date}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -74,20 +74,11 @@ class Warehouse(val spark: SparkSession, val root: String,
   // per-root, JVM-wide (instances over one root share it): serializes
   // commitCatalogIf's compare+swap and commitCatalog's version numbering
   private val commitLock: Object = Warehouse.commitLockFor(root)
+  import Warehouse.{deleteRecursively, listDir}
   Files.createDirectories(Paths.get(root, "data"))
 
   def emptyDf(table: String): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schemas(table))
-
-  /** Snapshot a directory listing, CLOSING the underlying stream —
-    * `Files.list` holds an open fd until closed, and the recursive
-    * walks here (vacuum over thousands of retired dirs) would otherwise
-    * leak one fd per directory visited until GC.
-    */
-  private[etl] def listDir(p: Path): Seq[Path] = {
-    val st = Files.list(p)
-    try st.iterator().asScala.toSeq finally st.close()
-  }
 
   /** Committed catalog: table → data dirs, in append order. */
   def catalog(): Map[String, Seq[String]] = parseCatalogRaw(readCatalogRaw())
@@ -163,25 +154,21 @@ class Warehouse(val spark: SparkSession, val root: String,
   }
 
   /** Read `table`'s dirs with the row-provenance columns
-    * ([[Warehouse.DvFile]] = FULL file path, [[Warehouse.DvPos]] = row
-    * position within the file) riding after the declared columns — the
-    * identity a deletion-vector tombstone names. Full path, not
-    * basename: basenames repeat across dirs (hard-linked bucket
-    * carry-over, shallow clones share whole dirs), so a basename key
-    * could suppress rows in a DIFFERENT dir's same-named file.
+    * ([[Warehouse.DvFile]] = the file's [[Warehouse.dvFileKey]],
+    * [[Warehouse.DvPos]] = row position within the file) riding after
+    * the declared columns — the identity a deletion-vector tombstone
+    * names.
     */
   private[etl] def readWithProvenance(table: String, dirs: Seq[String]): DataFrame = {
     val schema = schemas(table)
     val fields = schema.fieldNames.toIndexedSeq
-    val meta = Seq(col("_metadata.file_path").as(Warehouse.DvFile),
-      col("_metadata.row_index").as(Warehouse.DvPos))
     if (bucketSpec.contains(table) && dirs.length == 1)
-      readBucketedDir(table, dirs.head).select(fields.map(col) ++ meta: _*)
+      readBucketedDir(table, dirs.head).select(fields.map(col) ++ provCols: _*)
     else if (!partitionSpec.contains(table))
-      spark.read.schema(schema).parquet(dirs: _*).select(fields.map(col) ++ meta: _*)
+      spark.read.schema(schema).parquet(dirs: _*).select(fields.map(col) ++ provCols: _*)
     else
       dirs.map(d => spark.read.schema(schema).parquet(d)
-          .select(fields.map(col) ++ meta: _*))
+          .select(fields.map(col) ++ provCols: _*))
         .reduce(_ unionByName _)
   }
 
@@ -205,13 +192,19 @@ class Warehouse(val spark: SparkSession, val root: String,
 
   /** The provenance columns for a single file-source scan. */
   private[etl] def provCols: Seq[Column] =
-    Seq(col("_metadata.file_path").as(Warehouse.DvFile),
+    Seq(Warehouse.dvFileKey(col("_metadata.file_path")).as(Warehouse.DvFile),
       col("_metadata.row_index").as(Warehouse.DvPos))
 
+  /** The tombstones in `dvDirs`, each naming its file by
+    * [[Warehouse.dvFileKey]] (tombstones written as absolute URIs,
+    * before the key was relative, are normalized on read).
+    */
   private[etl] def readDvDirs(dvDirs: Seq[String]): DataFrame =
     if (dvDirs.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Warehouse.dvSchema)
     else spark.read.schema(Warehouse.dvSchema).parquet(dvDirs: _*)
+      .select(Warehouse.dvFileKey(col(Warehouse.DvFile)).as(Warehouse.DvFile),
+        col(Warehouse.DvPos))
 
   /** Read keeping the physical partition column (when the table has one)
     * so date filters prune at the directory level —
@@ -435,12 +428,6 @@ class Warehouse(val spark: SparkSession, val root: String,
       }
     }
     removed
-  }
-
-  private[etl] def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      listDir(p).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
   }
 
   private[etl] def newDataDir(table: String): String =
@@ -913,7 +900,7 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     * those naming rewritten (touched-bucket) files were materialized by
     * the rewrite (the caller's frame derives from [[read]], DVs
     * applied) and die with their files; those naming hard-linked files
-    * survive under a NEW full path — same dir-RELATIVE path, new dir.
+    * survive under a NEW key — same dir-RELATIVE path, new dir.
     * Remap the survivors by the path BELOW the (unique, UUID-named) dir
     * segment, NOT the basename: Spark writes the SAME part-file
     * basename into every partition subdir a task touches, so on a
@@ -925,20 +912,20 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     * `relativize`); anything unmatched was rewritten and drops out.
     */
   private def remapDv(table: String, oldDir: String, newDir: String): Unit = {
-    import org.apache.spark.sql.functions.{broadcast, substring_index}
     val dvDirs = currentDvDirs(table)
     if (dvDirs.isEmpty) return
     val oldSeg = "/" + Paths.get(oldDir).getFileName.toString + "/"
     val newSeg = "/" + Paths.get(newDir).getFileName.toString + "/"
-    // relative path → new full path, derived from a scan of the new dir
-    // so the path STRING FORM matches what `_metadata.file_path` yields
-    // at read time exactly (it is a URI — a filesystem-listing path
-    // would silently never match). One row per file after the distinct.
+    // relative path → new key, derived from a scan of the new dir so
+    // the path STRING FORM matches what `_metadata.file_path` yields at
+    // read time exactly (it is a URI — a filesystem-listing path would
+    // silently never match). One row per file after the distinct.
     val mapDf = wh.spark.read.schema(wh.schemas(table)).parquet(newDir)
       .select(
         substring_index(org.apache.spark.sql.functions.col("_metadata.file_path"), newSeg, -1)
           .as("_graft_rel"),
-        org.apache.spark.sql.functions.col("_metadata.file_path").as("_graft_path"))
+        Warehouse.dvFileKey(org.apache.spark.sql.functions.col("_metadata.file_path"))
+          .as("_graft_path"))
       .distinct()
     val remapped = wh.readDvDirs(dvDirs)
       .join(broadcast(mapDf),
@@ -950,7 +937,7 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     remapped.write.parquet(dvDir)
     val n = wh.spark.read.schema(Warehouse.dvSchema).parquet(dvDir).count()
     if (n == 0L) {
-      wh.deleteRecursively(Paths.get(dvDir))
+      Warehouse.deleteRecursively(Paths.get(dvDir))
       setPending(Warehouse.dvKey(table), Nil)
     } else setPending(Warehouse.dvKey(table), Seq(dvDir))
   }
@@ -994,25 +981,34 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
       case None => overwrite(table, image)
     }
 
-  /** CHURN-SIZED keyed upsert — the write primitive behind the CDC
-    * store consumers (signature store, image-hash store, ANN index):
-    * drop the `gone` keys' rows and append `build(pruned)`'s new rows,
-    * rewriting ONLY the key-hash buckets the delta touches when the
-    * table is bucketed by `key` ([[keyedSlice]]). Per call, write bytes
-    * are proportional to the delta's bucket footprint, not the table.
-    * The delta-sized `gone ∪ arrived` key set derives the touched
-    * buckets; `build` sees the table pruned to those buckets, which is
-    * equivalent for both an anti-join idempotence guard and the appends
-    * because every appended row's key must be an `arrived` key and so
-    * hashes into a touched bucket by construction (caller contract).
-    * Any other table falls back to a full overwrite (same rows,
-    * table-sized write). An empty delta writes nothing.
+  /** CHURN-SIZED keyed upsert — the one prune-and-append write of a
+    * keyed store (the CDC store consumers' signature store, image-hash
+    * store and ANN index): drop the `gone` keys' rows and append
+    * `encode`'s rows for the `arrived` rows whose key is not stored
+    * after the prune (the idempotence guard: a redelivered arrival
+    * cannot duplicate a row), rewriting ONLY the key-hash buckets the
+    * delta touches when the table is bucketed by `key`
+    * ([[keyedSlice]]). Per call, write bytes are proportional to the
+    * delta's bucket footprint, not the table. The delta-sized
+    * `gone ∪ arrived` key set derives the touched buckets; guarding
+    * against the table pruned to those buckets is exact because every
+    * arrived key hashes into a touched bucket by construction, and
+    * `encode` must keep each row's key. There an empty delta touches no
+    * bucket: nothing is written and the result is `None`. Any other
+    * table gets the whole-table slice and is rewritten whole (same
+    * rows, table-sized write) — also for an empty delta.
+    *
+    * Returns the rows the write removed (the stored rows of the `gone`
+    * keys) and appended, as lazy frames: a caller that folds them into
+    * a census (in the same txn) caches what it reads twice — the
+    * appended rows inside `encode`, before the write computes them —
+    * and a caller that ignores them runs no extra job.
     *
     * File-count note: when the write executes inside a streaming
     * foreachBatch-derived plan, the optimizer has been observed to
     * elide the pre-write exchange and keep only the required bucket
     * sort, so a TOUCHED bucket's rows may land in one file per union
-    * branch of `build`'s output (2 here: carried ∪ appended) instead
+    * branch of the written image (2 here: carried ∪ appended) instead
     * of exactly one. Bounded (branch count, not data), rewritten
     * wholesale on the bucket's next touch, and handled by every
     * reader ([[Warehouse.readBucketedDir]] groups a bucket's files
@@ -1022,12 +1018,16 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     * buckets. Spec-pinned in StreamingChurnWriteSpec.
     */
   def pruneAppendKeyed(table: String, key: String, gone: DataFrame,
-                       arrived: DataFrame,
-                       build: DataFrame => DataFrame): Unit = {
+                       arrived: DataFrame)
+                      (encode: DataFrame => DataFrame): Option[(DataFrame, DataFrame)] = {
     val keys = gone.select(col(key)).unionByName(arrived.select(col(key)))
     val slice = keyedSlice(table, Seq(key))(Warehouse.bucketsOf(keys, Seq(key), _))
-    overwriteSlice(table, slice,
-      build(slice.of(read(table)).join(gone, Seq(key), "left_anti")))
+    if (slice.isEmpty) return None
+    val cur = slice.of(read(table))
+    val pruned = cur.join(gone, Seq(key), "left_anti")
+    val appended = encode(arrived.join(pruned.select(key), Seq(key), "left_anti"))
+    overwriteSlice(table, slice, pruned.unionByName(appended))
+    Some((cur.join(gone, Seq(key), "left_semi"), appended))
   }
 
   /** Targeted DELETE (GDPR erasure, bad-batch retraction): remove the
@@ -1081,9 +1081,10 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
 
   /** LOGICAL delete — the O(deleted-rows) counterpart of
     * [[deleteWhere]]: rows matching `predicate` (TRUE only — NULL
-    * keeps, SQL DELETE semantics) are tombstoned by (full file path,
-    * row position) into a delete-sized DV dir; NO data file is read
-    * back or rewritten beyond the one scan that finds the matches.
+    * keeps, SQL DELETE semantics) are tombstoned by (file key
+    * [[Warehouse.dvFileKey]], row position) into a delete-sized DV dir;
+    * NO data file is read back or rewritten beyond the one scan that
+    * finds the matches.
     * Every read entry point ([[Warehouse.read]], [[Txn.read]], time
     * travel, skip-scan, raw) applies the tombstones as a broadcast
     * anti-join; compaction and the next overwrite MATERIALIZE them.
@@ -1107,7 +1108,7 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     val dir = wh.newDataDir(Warehouse.dvKey(table))
     tomb.write.parquet(dir)
     val n = wh.spark.read.schema(Warehouse.dvSchema).parquet(dir).count()
-    if (n == 0L) wh.deleteRecursively(Paths.get(dir))   // match-less: no-op
+    if (n == 0L) Warehouse.deleteRecursively(Paths.get(dir))   // match-less: no-op
     else setPending(Warehouse.dvKey(table), dvd :+ dir)
     n
   }
@@ -1288,6 +1289,22 @@ object Warehouse {
     commitLocks.computeIfAbsent(
       Paths.get(root).toAbsolutePath.normalize.toString, _ => new Object)
 
+  /** Snapshot a directory listing, CLOSING the underlying stream —
+    * `Files.list` holds an open fd until closed, and the recursive
+    * walks (vacuum over thousands of retired dirs) would otherwise
+    * leak one fd per directory visited until GC.
+    */
+  private[etl] def listDir(p: Path): Seq[Path] = {
+    val st = Files.list(p)
+    try st.iterator().asScala.toSeq finally st.close()
+  }
+
+  private[etl] def deleteRecursively(p: Path): Unit = {
+    if (Files.isDirectory(p))
+      listDir(p).foreach(deleteRecursively)
+    Files.deleteIfExists(p)
+  }
+
   /** Default physical partitioning: fact tables by event date. Dims and
     * staging stay unpartitioned (full-snapshot semantics).
     */
@@ -1331,10 +1348,8 @@ object Warehouse {
     * the catalog key `_dv_<table>` — the same snapshot/commit/vacuum
     * machinery covers them (a DV becomes visible atomically with its
     * txn's commit; vacuum reclaims retired DV dirs; time travel sees
-    * the DV set as of the version). Tombstone identity is the FULL
-    * file path plus row position — basenames repeat across dirs
-    * (hard-linked bucket carry-over, shallow clones), so a basename
-    * key could suppress rows in a different dir's same-named file.
+    * the DV set as of the version). Tombstone identity is the file's
+    * [[dvFileKey]] plus row position.
     */
   private[etl] val DvPrefix = "_dv_"
   private[etl] def dvKey(table: String): String = DvPrefix + table
@@ -1343,6 +1358,16 @@ object Warehouse {
   private[etl] val dvSchema: StructType = StructType(Seq(
     StructField(DvFile, StringType, nullable = false),
     StructField(DvPos, LongType, nullable = false)))
+
+  /** A data file's tombstone key: its path below the warehouse's
+    * `data/` dir (`<table>/<dir uuid>/<path in dir>`), so tombstones
+    * still name their files on a copied or moved root. The uuid dir
+    * keeps it unique — a basename would repeat across dirs (hard-linked
+    * bucket carry-over, shallow clones share whole dirs) and suppress
+    * rows in a DIFFERENT dir's same-named file. Idempotent, so an
+    * absolute URI and its key map to the same key.
+    */
+  private[etl] def dvFileKey(path: Column): Column = substring_index(path, "/data/", -1)
 
   /** Striped locks for [[Warehouse.readBucketedDir]]'s one-time
     * registration: first reads of different dirs rarely wait on each

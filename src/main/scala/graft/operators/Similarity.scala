@@ -412,13 +412,22 @@ object Similarity {
     */
   def ivfpqIndexAppend(index: DataFrame, embeddings: DataFrame,
                        batch: DataFrame, coarsePred: Column, pqPred: Column,
-                       m: Int): DataFrame = {
+                       m: Int): DataFrame =
+    index.unionByName(ivfpqEncode(embeddings,
+      batch.join(index.select("vec_id"), Seq("vec_id"), "left_anti"),
+      coarsePred, pqPred, m))
+
+  /** Index rows of `batch` encoded against the codebooks the seed
+    * vectors `coarsePred`/`pqPred` select in `embeddings` — the
+    * per-vector half of [[ivfpqIndexAppend]], without its idempotence
+    * guard (a caller that guards itself, like the CDC index consumer).
+    */
+  private[graft] def ivfpqEncode(embeddings: DataFrame, batch: DataFrame,
+                                 coarsePred: Column, pqPred: Column,
+                                 m: Int): DataFrame = {
     val corpus = pqQuantChecked(embeddings, m)
     val coarse = coarseBook(corpus, coarsePred)
-    val cw = pqCodewords(corpus, coarse, pqPred)
-    val fresh = pqQuantChecked(batch, m)
-      .join(index.select("vec_id"), Seq("vec_id"), "left_anti")
-    index.unionByName(pqEncode(fresh, coarse, cw, m))
+    pqEncode(pqQuantChecked(batch, m), coarse, pqCodewords(corpus, coarse, pqPred), m)
   }
 
   /** Per-list occupancy of a stored IVF(-PQ) index — (co_id, cnt).

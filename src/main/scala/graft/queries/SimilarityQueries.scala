@@ -1,9 +1,12 @@
 package graft.queries
 
 import graft.Tables
+import graft.etl.Warehouse
 import graft.operators.{Dedup, Similarity}
+import graft.streaming.StreamingOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 /** Similarity-search operators over the `embeddings` table
   * (array<float> × 64). All arithmetic integer-quantized (see
@@ -86,6 +89,41 @@ object SimilarityQueries {
       |      AS embedding
       |  FROM ecent e JOIN eflat c ON c.vec_id = e.cid AND c.i = e.i
       |  GROUP BY e.vec_id)""".stripMargin
+
+  // coarse and PQ codebook seeds of the streamed ANN-index queries
+  private val annCoPred = col("vec_id") % 125 === 11
+  private val annPqPred = col("vec_id") % 40 === 3 && col("vec_id") < 2560
+
+  /** The change log `q_stream_ann` and `q_stream_ann_census` drain:
+    * embeddings arrive across 3 commits — v1 holds every codebook seed
+    * (the fixed-seed contract), v2 deletes a non-seed slice while
+    * adding the second wave, v3 is the full corpus (re-inserting the
+    * deleted slice); an empty v0 makes the v1 arrivals themselves a
+    * logged transition (the log records TRANSITIONS between commits),
+    * so the index warehouse seeds empty. It holds `annidx`, bucketed by
+    * the index key (r14: churn-sized micro-batch writes), plus, for a
+    * `census`, the list-occupancy table. Returns the embeddings, the
+    * seed vectors, the log dir, the index warehouse and a checkpoint
+    * dir.
+    */
+  private def embChangeLog(s: SparkSession, dir: String, tag: String, census: Boolean)
+      : (DataFrame, DataFrame, String, Warehouse, String) = {
+    val emb = Tables(s, dir, "embeddings").select("vec_id", "embedding")
+    val seedPred = annCoPred || annPqPred
+    val v1 = emb.filter(col("vec_id") % 3 === 0 || seedPred)
+    val v2 = emb.filter((col("vec_id") % 3 <= 1 &&
+      !(col("vec_id") % 9 === 0 && !seedPred)) || seedPred)
+    val idxSchema = StructType(Seq(
+      StructField("vec_id", LongType), StructField("co_id", LongType),
+      StructField("codes", ArrayType(LongType))))
+    val lcSchema = StructType(Seq(
+      StructField("co_id", LongType), StructField("cnt", LongType)))
+    val (logDir, idxWh, ckpt) = ChangeLogFixture(s, tag, "emb", "vec_id",
+      Seq(emb.limit(0), v1, v2, emb),
+      ("annidx" -> idxSchema) +: (if (census) Seq("listcounts" -> lcSchema) else Nil),
+      Map("annidx" -> ("vec_id", 8)))
+    (emb, emb.filter(seedPred), logDir, idxWh, ckpt)
+  }
 
   /** Quantized oracle scaffold: `qv` keeps each vector as a BIGINT list
     * (dot products via `list_dot_product` — the per-dimension-join
@@ -310,47 +348,9 @@ object SimilarityQueries {
     // the index COLD from the final image, so the hash certifies
     // streamed-maintenance ≡ cold-rebuild end to end.
     "q_stream_ann" -> ((s, dir) => {
-      import graft.etl.{ChangeFeed, Warehouse}
-      import graft.streaming.StreamingOps
-      import org.apache.spark.sql.types._
-      val emb = Tables(s, dir, "embeddings").select("vec_id", "embedding")
-      val coPred = col("vec_id") % 125 === 11
-      val pqPred = col("vec_id") % 40 === 3 && col("vec_id") < 2560
-      val seedPred = coPred || pqPred
-      // v1 holds every codebook seed (the fixed-seed contract); v2
-      // deletes a non-seed slice while adding the second wave; v3 is
-      // the full corpus (re-inserting the deleted slice)
-      val v1 = emb.filter(col("vec_id") % 3 === 0 || seedPred)
-      val v2 = emb.filter((col("vec_id") % 3 <= 1 &&
-        !(col("vec_id") % 9 === 0 && !seedPred)) || seedPred)
-      val src = new Warehouse(s,
-        java.nio.file.Files.createTempDirectory("graft-sann-src").toString,
-        Map("emb" -> emb.schema), partitionSpec = Map.empty,
-        bucketSpec = Map("emb" -> ("vec_id", 8)))
-      // the log records TRANSITIONS between commits (consumers seed from
-      // the first image) — an empty v0 makes the v1 arrivals themselves
-      // a logged transition, so the index warehouse can seed empty
-      Seq(emb.limit(0), v1, v2, emb).foreach { img =>
-        val t = src.begin(); t.overwrite("emb", img); t.commit()
-      }
-      val logDir =
-        java.nio.file.Files.createTempDirectory("graft-sann-log").toString
-      ChangeFeed.materializeLog(src, "emb", Seq("vec_id"), logDir)
-      val idxSchema = StructType(Seq(
-        StructField("vec_id", LongType), StructField("co_id", LongType),
-        StructField("codes", ArrayType(LongType))))
-      val idxWh = new Warehouse(s,
-        java.nio.file.Files.createTempDirectory("graft-sann-idx").toString,
-        Map("annidx" -> idxSchema), partitionSpec = Map.empty,
-        // bucketed by the index key (r14): churn-sized micro-batch writes
-        bucketSpec = Map("annidx" -> ("vec_id", 8)))
-      locally {
-        val t = idxWh.begin()
-        t.overwrite("annidx", idxWh.emptyDf("annidx")); t.commit()
-      }
+      val (emb, seeds, logDir, idxWh, ckpt) = embChangeLog(s, dir, "sann", census = false)
       StreamingOps.changeFeedAnnIndex(s, idxWh, "annidx", emb.schema,
-        emb.filter(seedPred), coPred, pqPred, m = 8, logDir,
-        java.nio.file.Files.createTempDirectory("graft-sann-ckpt").toString)
+        seeds, annCoPred, annPqPred, m = 8, logDir, ckpt)
       idxWh.read("annidx")
         .select(col("vec_id"), col("co_id"),
           array_join(col("codes"), ",").as("codes"))
@@ -368,45 +368,9 @@ object SimilarityQueries {
     // hash certifies maintained ≡ cold through inserts, the
     // delete-then-reinsert wave, and updates.
     "q_stream_ann_census" -> ((s, dir) => {
-      import graft.etl.{ChangeFeed, Warehouse}
-      import graft.streaming.StreamingOps
-      import org.apache.spark.sql.types._
-      val emb = Tables(s, dir, "embeddings").select("vec_id", "embedding")
-      val coPred = col("vec_id") % 125 === 11
-      val pqPred = col("vec_id") % 40 === 3 && col("vec_id") < 2560
-      val seedPred = coPred || pqPred
-      val v1 = emb.filter(col("vec_id") % 3 === 0 || seedPred)
-      val v2 = emb.filter((col("vec_id") % 3 <= 1 &&
-        !(col("vec_id") % 9 === 0 && !seedPred)) || seedPred)
-      val src = new Warehouse(s,
-        java.nio.file.Files.createTempDirectory("graft-sac-src").toString,
-        Map("emb" -> emb.schema), partitionSpec = Map.empty,
-        bucketSpec = Map("emb" -> ("vec_id", 8)))
-      Seq(emb.limit(0), v1, v2, emb).foreach { img =>
-        val t = src.begin(); t.overwrite("emb", img); t.commit()
-      }
-      val logDir =
-        java.nio.file.Files.createTempDirectory("graft-sac-log").toString
-      ChangeFeed.materializeLog(src, "emb", Seq("vec_id"), logDir)
-      val idxSchema = StructType(Seq(
-        StructField("vec_id", LongType), StructField("co_id", LongType),
-        StructField("codes", ArrayType(LongType))))
-      val lcSchema = StructType(Seq(
-        StructField("co_id", LongType), StructField("cnt", LongType)))
-      val idxWh = new Warehouse(s,
-        java.nio.file.Files.createTempDirectory("graft-sac-idx").toString,
-        Map("annidx" -> idxSchema, "listcounts" -> lcSchema),
-        partitionSpec = Map.empty,
-        bucketSpec = Map("annidx" -> ("vec_id", 8)))
-      locally {
-        val t = idxWh.begin()
-        Seq("annidx", "listcounts").foreach(tb =>
-          t.overwrite(tb, idxWh.emptyDf(tb)))
-        t.commit()
-      }
+      val (emb, seeds, logDir, idxWh, ckpt) = embChangeLog(s, dir, "sac", census = true)
       StreamingOps.changeFeedAnnIndexCensus(s, idxWh, "annidx", "listcounts",
-        emb.schema, emb.filter(seedPred), coPred, pqPred, m = 8, logDir,
-        java.nio.file.Files.createTempDirectory("graft-sac-ckpt").toString)
+        emb.schema, seeds, annCoPred, annPqPred, m = 8, logDir, ckpt)
       idxWh.read("listcounts").orderBy("co_id")
     }),
 

@@ -1,9 +1,12 @@
 package graft.queries
 
 import graft.Tables
+import graft.etl.Warehouse
 import graft.operators.{Dedup, Multimodal, TextAnalysis}
+import graft.streaming.StreamingOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Training-data text operators over the `documents` table: dedup family,
   * text analysis, multimodal metadata. Each query runs the corresponding
@@ -90,6 +93,73 @@ object TextQueries {
       .unionAll(
         d.filter(col("doc_id") % 23 === 0)
           .select((col("doc_id") + 2 * off).as("doc_id"), col("text").as("text")))
+  }
+
+  /** Per-bucket band counts (bucketed by `bkey`) and the bucket-size
+    * histogram — the tables a maintained band census keeps.
+    */
+  private val bandCensusTables = Seq(
+    "bandcounts" -> StructType(Seq(
+      StructField("bkey", StringType), StructField("cnt", LongType))),
+    "bandhist" -> StructType(Seq(
+      StructField("bn", LongType), StructField("k", LongType))))
+
+  /** The change log `q_stream_dedup` and `q_stream_census` drain:
+    * documents arrive across 3 commits (insert wave, delete wave, a
+    * text UPDATE on the %5==2 slice); the store warehouse holds the
+    * signature store `sigstore` — bucketed by the store key (r14): per
+    * micro-batch the consumer rewrites only the buckets the churn
+    * touches — plus, for a `census`, the band census tables. Returns
+    * the document schema, the log dir, the store warehouse and a
+    * checkpoint dir.
+    */
+  private def docsChangeLog(s: SparkSession, dir: String, tag: String,
+                            census: Boolean): (StructType, String, Warehouse, String) = {
+    val d = Tables(s, dir, "documents").select("doc_id", "text")
+    val finalImg = d.withColumn("text",
+      when(col("doc_id") % 5 === 2, concat(col("text"), lit(" changed v3")))
+        .otherwise(col("text")))
+    val v1 = d.filter(col("doc_id") % 3 === 0)
+    val v2 = d.filter(col("doc_id") % 3 <= 1 && !(col("doc_id") % 9 === 0))
+    val storeSchema = StructType(StructField("doc_id", LongType) +:
+      (0 until 8).map(j => StructField(s"m$j", LongType)))
+    val (logDir, storeWh, ckpt) = ChangeLogFixture(s, tag, "docs", "doc_id",
+      Seq(d.limit(0), v1, v2, finalImg),
+      ("sigstore" -> storeSchema) +: (if (census) bandCensusTables else Nil),
+      Map("sigstore" -> ("doc_id", 8), "bandcounts" -> ("bkey", 8)))
+    (d.schema, logDir, storeWh, ckpt)
+  }
+
+  /** The change log `q_stream_mm` and `q_stream_mm_census` drain: the
+    * image docs' media evolve across 3 commits (insert wave, delete
+    * wave, a payload UPDATE on the %5==2 slice re-sourced from
+    * doc_id + 3 — ≡ 0 mod 3, so the fmt is stable and never lands on
+    * wav); the store warehouse holds the aHash store `hashstore`
+    * (bucketed by the store key) plus, for a `census`, the band census
+    * tables. Returns the media schema, the log dir, the store warehouse
+    * and a checkpoint dir.
+    */
+  private def mediaChangeLog(s: SparkSession, dir: String, tag: String,
+                             census: Boolean): (StructType, String, Warehouse, String) = {
+    val ids = Tables(s, dir, "documents").select("doc_id")
+      .filter(col("doc_id") % 3 =!= 1) // image docs only (no wav)
+    val media = Multimodal.attachMediaPayload(ids)
+    val updated = Multimodal.attachMediaPayload(
+        ids.filter(col("doc_id") % 5 === 2)
+          .select((col("doc_id") + 3).as("doc_id")))
+      .select((col("doc_id") - 3).as("doc_id"), col("fmt"), col("payload"))
+    val finalImg = media.filter(col("doc_id") % 5 =!= 2).unionByName(updated)
+    val v1 = media.filter(col("doc_id") % 3 === 0)
+    val v2 = media.filter(!(col("doc_id") % 9 === 0))
+    val storeSchema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("fmt", StringType),
+      StructField("width", LongType), StructField("height", LongType)) ++
+      (0 until 4).map(j => StructField(s"b$j", LongType)))
+    val (logDir, storeWh, ckpt) = ChangeLogFixture(s, tag, "media", "doc_id",
+      Seq(media.limit(0), v1, v2, finalImg),
+      ("hashstore" -> storeSchema) +: (if (census) bandCensusTables else Nil),
+      Map("hashstore" -> ("doc_id", 8), "bandcounts" -> ("bkey", 8)))
+    (media.schema, logDir, storeWh, ckpt)
   }
 
   private val augSql =
@@ -509,41 +579,9 @@ object TextQueries {
     // MinHash store COLD from the final image, so the hash certifies
     // streamed-maintenance ≡ cold-rebuild (and that updates re-sign).
     "q_stream_dedup" -> ((s, dir) => {
-      import graft.etl.{ChangeFeed, Warehouse}
-      import graft.streaming.StreamingOps
-      import org.apache.spark.sql.types._
-      val d = Tables(s, dir, "documents").select("doc_id", "text")
-      val finalImg = d.withColumn("text",
-        when(col("doc_id") % 5 === 2, concat(col("text"), lit(" changed v3")))
-          .otherwise(col("text")))
-      val v1 = d.filter(col("doc_id") % 3 === 0)
-      val v2 = d.filter(col("doc_id") % 3 <= 1 && !(col("doc_id") % 9 === 0))
-      val src = new Warehouse(s,
-        java.nio.file.Files.createTempDirectory("graft-sdd-src").toString,
-        Map("docs" -> d.schema), partitionSpec = Map.empty,
-        bucketSpec = Map("docs" -> ("doc_id", 8)))
-      Seq(d.limit(0), v1, v2, finalImg).foreach { img =>
-        val t = src.begin(); t.overwrite("docs", img); t.commit()
-      }
-      val logDir =
-        java.nio.file.Files.createTempDirectory("graft-sdd-log").toString
-      ChangeFeed.materializeLog(src, "docs", Seq("doc_id"), logDir)
-      val storeSchema = StructType(StructField("doc_id", LongType) +:
-        (0 until 8).map(j => StructField(s"m$j", LongType)))
-      val storeWh = new Warehouse(s,
-        java.nio.file.Files.createTempDirectory("graft-sdd-idx").toString,
-        Map("sigstore" -> storeSchema), partitionSpec = Map.empty,
-        // bucketed by the store key (r14): per micro-batch the consumer
-        // rewrites only the buckets the churn touches, hard-linking the
-        // rest — write bytes ~ churn, not store
-        bucketSpec = Map("sigstore" -> ("doc_id", 8)))
-      locally {
-        val t = storeWh.begin()
-        t.overwrite("sigstore", storeWh.emptyDf("sigstore")); t.commit()
-      }
+      val (docSchema, logDir, storeWh, ckpt) = docsChangeLog(s, dir, "sdd", census = false)
       StreamingOps.changeFeedSignatureStore(s, storeWh, "sigstore",
-        d.schema, n = 3, logDir,
-        java.nio.file.Files.createTempDirectory("graft-sdd-ckpt").toString)
+        docSchema, n = 3, logDir, ckpt)
       storeWh.read("sigstore").orderBy("doc_id")
     }),
 
@@ -557,47 +595,9 @@ object TextQueries {
     // so the hash certifies maintained-census ≡ cold-census through
     // inserts, deletes, and updates.
     "q_stream_census" -> ((s, dir) => {
-      import graft.etl.{ChangeFeed, Warehouse}
-      import graft.streaming.StreamingOps
-      import org.apache.spark.sql.types._
-      val d = Tables(s, dir, "documents").select("doc_id", "text")
-      val finalImg = d.withColumn("text",
-        when(col("doc_id") % 5 === 2, concat(col("text"), lit(" changed v3")))
-          .otherwise(col("text")))
-      val v1 = d.filter(col("doc_id") % 3 === 0)
-      val v2 = d.filter(col("doc_id") % 3 <= 1 && !(col("doc_id") % 9 === 0))
-      val src = new Warehouse(s,
-        java.nio.file.Files.createTempDirectory("graft-scn-src").toString,
-        Map("docs" -> d.schema), partitionSpec = Map.empty,
-        bucketSpec = Map("docs" -> ("doc_id", 8)))
-      Seq(d.limit(0), v1, v2, finalImg).foreach { img =>
-        val t = src.begin(); t.overwrite("docs", img); t.commit()
-      }
-      val logDir =
-        java.nio.file.Files.createTempDirectory("graft-scn-log").toString
-      ChangeFeed.materializeLog(src, "docs", Seq("doc_id"), logDir)
-      val storeSchema = StructType(StructField("doc_id", LongType) +:
-        (0 until 8).map(j => StructField(s"m$j", LongType)))
-      val countsSchema = StructType(Seq(
-        StructField("bkey", StringType), StructField("cnt", LongType)))
-      val histSchema = StructType(Seq(
-        StructField("bn", LongType), StructField("k", LongType)))
-      val storeWh = new Warehouse(s,
-        java.nio.file.Files.createTempDirectory("graft-scn-idx").toString,
-        Map("sigstore" -> storeSchema, "bandcounts" -> countsSchema,
-          "bandhist" -> histSchema),
-        partitionSpec = Map.empty,
-        bucketSpec = Map("sigstore" -> ("doc_id", 8),
-          "bandcounts" -> ("bkey", 8)))
-      locally {
-        val t = storeWh.begin()
-        Seq("sigstore", "bandcounts", "bandhist").foreach(tb =>
-          t.overwrite(tb, storeWh.emptyDf(tb)))
-        t.commit()
-      }
+      val (docSchema, logDir, storeWh, ckpt) = docsChangeLog(s, dir, "scn", census = true)
       StreamingOps.changeFeedSignatureStoreCensus(s, storeWh, "sigstore",
-        "bandcounts", "bandhist", d.schema, n = 3, logDir,
-        java.nio.file.Files.createTempDirectory("graft-scn-ckpt").toString)
+        "bandcounts", "bandhist", docSchema, n = 3, logDir, ckpt)
       storeWh.read("bandhist").orderBy("bn")
     }),
 
@@ -665,47 +665,9 @@ object TextQueries {
     // closed-form pixel formulas, so the hash certifies
     // streamed-maintenance ≡ cold-rebuild (and that updates re-hash).
     "q_stream_mm" -> ((s, dir) => {
-      import graft.etl.{ChangeFeed, Warehouse}
-      import graft.streaming.StreamingOps
-      import org.apache.spark.sql.types._
-      val ids = Tables(s, dir, "documents").select("doc_id")
-        .filter(col("doc_id") % 3 =!= 1) // image docs only (no wav)
-      val media = Multimodal.attachMediaPayload(ids)
-      // final image: the %5==2 slice re-sourced from doc_id + 3 (+3 is
-      // ≡ 0 mod 3, so the fmt is stable and never lands on wav)
-      val updated = Multimodal.attachMediaPayload(
-          ids.filter(col("doc_id") % 5 === 2)
-            .select((col("doc_id") + 3).as("doc_id")))
-        .select((col("doc_id") - 3).as("doc_id"), col("fmt"), col("payload"))
-      val finalImg = media.filter(col("doc_id") % 5 =!= 2).unionByName(updated)
-      val v1 = media.filter(col("doc_id") % 3 === 0)
-      val v2 = media.filter(!(col("doc_id") % 9 === 0))
-      val src = new Warehouse(s,
-        java.nio.file.Files.createTempDirectory("graft-smm-src").toString,
-        Map("media" -> media.schema), partitionSpec = Map.empty,
-        bucketSpec = Map("media" -> ("doc_id", 8)))
-      Seq(media.limit(0), v1, v2, finalImg).foreach { img =>
-        val t = src.begin(); t.overwrite("media", img); t.commit()
-      }
-      val logDir =
-        java.nio.file.Files.createTempDirectory("graft-smm-log").toString
-      ChangeFeed.materializeLog(src, "media", Seq("doc_id"), logDir)
-      val storeSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("fmt", StringType),
-        StructField("width", LongType), StructField("height", LongType)) ++
-        (0 until 4).map(j => StructField(s"b$j", LongType)))
-      val storeWh = new Warehouse(s,
-        java.nio.file.Files.createTempDirectory("graft-smm-idx").toString,
-        Map("hashstore" -> storeSchema), partitionSpec = Map.empty,
-        // bucketed by the store key (r14): churn-sized micro-batch writes
-        bucketSpec = Map("hashstore" -> ("doc_id", 8)))
-      locally {
-        val t = storeWh.begin()
-        t.overwrite("hashstore", storeWh.emptyDf("hashstore")); t.commit()
-      }
+      val (mediaSchema, logDir, storeWh, ckpt) = mediaChangeLog(s, dir, "smm", census = false)
       StreamingOps.changeFeedImageHashStore(s, storeWh, "hashstore",
-        media.schema, logDir,
-        java.nio.file.Files.createTempDirectory("graft-smm-ckpt").toString)
+        mediaSchema, logDir, ckpt)
       storeWh.read("hashstore").orderBy("doc_id")
     }),
 
@@ -721,53 +683,9 @@ object TextQueries {
     // maintained-census ≡ cold-census through inserts, deletes, and
     // payload updates.
     "q_stream_mm_census" -> ((s, dir) => {
-      import graft.etl.{ChangeFeed, Warehouse}
-      import graft.streaming.StreamingOps
-      import org.apache.spark.sql.types._
-      val ids = Tables(s, dir, "documents").select("doc_id")
-        .filter(col("doc_id") % 3 =!= 1) // image docs only (no wav)
-      val media = Multimodal.attachMediaPayload(ids)
-      val updated = Multimodal.attachMediaPayload(
-          ids.filter(col("doc_id") % 5 === 2)
-            .select((col("doc_id") + 3).as("doc_id")))
-        .select((col("doc_id") - 3).as("doc_id"), col("fmt"), col("payload"))
-      val finalImg = media.filter(col("doc_id") % 5 =!= 2).unionByName(updated)
-      val v1 = media.filter(col("doc_id") % 3 === 0)
-      val v2 = media.filter(!(col("doc_id") % 9 === 0))
-      val src = new Warehouse(s,
-        java.nio.file.Files.createTempDirectory("graft-smc-src").toString,
-        Map("media" -> media.schema), partitionSpec = Map.empty,
-        bucketSpec = Map("media" -> ("doc_id", 8)))
-      Seq(media.limit(0), v1, v2, finalImg).foreach { img =>
-        val t = src.begin(); t.overwrite("media", img); t.commit()
-      }
-      val logDir =
-        java.nio.file.Files.createTempDirectory("graft-smc-log").toString
-      ChangeFeed.materializeLog(src, "media", Seq("doc_id"), logDir)
-      val storeSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("fmt", StringType),
-        StructField("width", LongType), StructField("height", LongType)) ++
-        (0 until 4).map(j => StructField(s"b$j", LongType)))
-      val countsSchema = StructType(Seq(
-        StructField("bkey", StringType), StructField("cnt", LongType)))
-      val histSchema = StructType(Seq(
-        StructField("bn", LongType), StructField("k", LongType)))
-      val storeWh = new Warehouse(s,
-        java.nio.file.Files.createTempDirectory("graft-smc-idx").toString,
-        Map("hashstore" -> storeSchema, "bandcounts" -> countsSchema,
-          "bandhist" -> histSchema),
-        partitionSpec = Map.empty,
-        bucketSpec = Map("hashstore" -> ("doc_id", 8),
-          "bandcounts" -> ("bkey", 8)))
-      locally {
-        val t = storeWh.begin()
-        Seq("hashstore", "bandcounts", "bandhist").foreach(tb =>
-          t.overwrite(tb, storeWh.emptyDf(tb)))
-        t.commit()
-      }
+      val (mediaSchema, logDir, storeWh, ckpt) = mediaChangeLog(s, dir, "smc", census = true)
       StreamingOps.changeFeedImageHashStoreCensus(s, storeWh, "hashstore",
-        "bandcounts", "bandhist", media.schema, logDir,
-        java.nio.file.Files.createTempDirectory("graft-smc-ckpt").toString)
+        "bandcounts", "bandhist", mediaSchema, logDir, ckpt)
       storeWh.read("bandhist").orderBy("bn")
     }),
 

@@ -1144,51 +1144,78 @@ object StreamingOps {
     vacuumed.toSeq
   }
 
+  /** The one body of the keyed-store CDC consumers below. Per
+    * micro-batch the logged transitions fold to per-`key` net changes
+    * ([[graft.etl.ChangeFeed.netChanges]]): net-deleted and net-updated
+    * keys are `gone` (an edited row must re-encode — a stale row would
+    * keep answering with its old encoding), net inserts and
+    * after-images, shaped by `arrived`, are the arrivals.
+    * [[graft.etl.Txn.pruneAppendKeyed]] drops the gone keys' rows and
+    * appends `encode`'s rows for the arrivals not already stored;
+    * `census`, when given, folds EXACTLY the rows that write removed
+    * and appended into its own tables in the same transaction. The txn
+    * commits, or is discarded when the batch touched no bucket.
+    *
+    * Exactly-once EFFECT by CONVERGENCE, like [[changeFeedReplica]]: a
+    * redelivered delete drops an absent key (no-op), a redelivered
+    * insert is anti-joined away by the append's idempotence guard, a
+    * redelivered update drops-then-re-encodes the identical row — so
+    * at-least-once redelivery and even a checkpoint reset re-converge,
+    * and a census's removed/appended deltas of such a batch cancel to
+    * zero (spec-pinned).
+    */
+  private def drainKeyedStore(spark: SparkSession, wh: graft.etl.Warehouse,
+                              table: String, key: String, sourceSchema: StructType,
+                              logDir: String, checkpointDir: String)
+                             (arrived: DataFrame => DataFrame,
+                              encode: DataFrame => DataFrame,
+                              census: Option[(graft.etl.Txn, DataFrame, DataFrame) => Unit] = None)
+      : Unit = {
+    import graft.etl.ChangeFeed
+    drainLog(spark, logDir, ChangeFeed.logSchema(sourceSchema, Seq(key)), checkpointDir) { batch =>
+      if (!batch.isEmpty) {
+        val net = ChangeFeed.netChanges(batch, Seq(key)).persist()
+        // a census reads the removed and appended rows more than once;
+        // the appended rows are cached before the store write computes them
+        val cached = scala.collection.mutable.ArrayBuffer[DataFrame]()
+        def keep(df: DataFrame): DataFrame =
+          if (census.isEmpty) df else { cached += df.persist(); df }
+        try {
+          val gone = net.filter(col("change_type").isin("delete", "update_post")).select(key)
+          val txn = wh.begin()
+          txn.pruneAppendKeyed(table, key, gone,
+              arrived(net.filter(col("change_type").isin("insert", "update_post"))))(
+              rows => keep(encode(rows))) match {
+            case Some((removed, appended)) =>
+              census.foreach(_(txn, keep(removed), appended))
+              txn.commit()
+            case None => txn.discard()
+          }
+        } finally { cached.foreach(_.unpersist()); net.unpersist() }
+      }
+    }
+  }
+
   /** PRODUCTION CDC consumer #4: maintain a stored MinHash
     * [[graft.operators.Dedup.signatureStore]] from a document table's
     * change log — the ingestion path for INCREMENTAL near-dup
     * detection ([[graft.operators.Dedup.incrementalNearDupsStored]]
     * probes this store per batch): document arrivals sign once at
-    * ingest and land at churn cost, never re-signing the corpus. Per
-    * micro-batch the logged transitions fold to net per-key deltas;
-    * net-deleted and net-updated doc_ids drop their store rows (an
-    * edited document must re-sign — stale signatures would band it
-    * into its OLD near-dup buckets), then inserts/after-images sign
-    * and append, anti-joined against the pruned store so redelivery
-    * cannot duplicate a row. A document that shrinks below the n-gram
-    * floor simply contributes no new row (same as the cold builder).
+    * ingest and land at churn cost, never re-signing the corpus
+    * ([[drainKeyedStore]] applies each micro-batch). A document that
+    * shrinks below the n-gram floor simply contributes no new row (same
+    * as the cold builder).
     *
-    * Exactly-once EFFECT by CONVERGENCE like [[changeFeedAnnIndex]];
-    * the streamed store is row-equal to a cold
+    * The streamed store is row-equal to a cold
     * [[graft.operators.Dedup.signatureStore]] of the final image
-    * (spec-pinned, and the `q_stream_dedup` driver gate hashes it).
+    * (spec-pinned in StreamingChurnWriteSpec and MaintainedCensusSpec).
     */
   def changeFeedSignatureStore(spark: SparkSession, wh: graft.etl.Warehouse,
                                storeTable: String, docSchema: StructType,
                                n: Int, logDir: String,
-                               checkpointDir: String): Unit = {
-    import graft.etl.ChangeFeed
-    import graft.operators.Dedup
-    val logSch = ChangeFeed.logSchema(docSchema, Seq("doc_id"))
-    drainLog(spark, logDir, logSch, checkpointDir) { batch =>
-      if (!batch.isEmpty) {
-        val net = ChangeFeed.netChanges(batch, Seq("doc_id")).persist()
-        try {
-          val gone = net
-            .filter(col("change_type").isin("delete", "update_post"))
-            .select("doc_id")
-          val arrived = net
-            .filter(col("change_type").isin("insert", "update_post"))
-            .select("doc_id", "text")
-          val txn = wh.begin()
-          txn.pruneAppendKeyed(storeTable, "doc_id", gone, arrived.select("doc_id"),
-            pruned => pruned.unionByName(Dedup.signatureStore(arrived, n)
-              .join(pruned.select("doc_id"), Seq("doc_id"), "left_anti")))
-          txn.commit()
-        } finally net.unpersist()
-      }
-    }
-  }
+                               checkpointDir: String): Unit =
+    drainKeyedStore(spark, wh, storeTable, "doc_id", docSchema, logDir, checkpointDir)(
+      _.select("doc_id", "text"), graft.operators.Dedup.signatureStore(_, n))
 
   /** [[changeFeedSignatureStore]] WITH the band census maintained
     * store-side (r13 verdict item 2): alongside the signature store,
@@ -1211,6 +1238,7 @@ object StreamingOps {
     * (old size leaves, new size enters) per touched bucket —
     * spec-pinned equal to recomputes through inserts, updates,
     * deletes, and redelivery (where add/remove deltas cancel exactly).
+    * The store itself is the plain consumer's, row for row.
     */
   def changeFeedSignatureStoreCensus(spark: SparkSession,
                                      wh: graft.etl.Warehouse,
@@ -1218,58 +1246,46 @@ object StreamingOps {
                                      histTable: String,
                                      docSchema: StructType, n: Int,
                                      logDir: String, checkpointDir: String,
-                                     bandSize: Int = 2): Unit = {
-    import graft.etl.ChangeFeed
-    import graft.operators.Dedup
-    val logSch = ChangeFeed.logSchema(docSchema, Seq("doc_id"))
-    drainLog(spark, logDir, logSch, checkpointDir) { batch =>
-      if (!batch.isEmpty) {
-        val net = ChangeFeed.netChanges(batch, Seq("doc_id")).persist()
-        try {
-          val gone = net
-            .filter(col("change_type").isin("delete", "update_post"))
-            .select("doc_id")
-          val arrived = net
-            .filter(col("change_type").isin("insert", "update_post"))
-            .select("doc_id", "text")
-          val txn = wh.begin()
-          val slice = txn.keyedSlice(storeTable, Seq("doc_id"))(graft.etl.Warehouse.bucketsOf(
-            gone.unionByName(arrived.select("doc_id")), Seq("doc_id"), _))
-          if (!slice.isEmpty) {
-            val cur = slice.of(txn.read(storeTable))
-            // removed/appended are the EXACT row deltas of this batch's
-            // store write — the census moves by their bands and nothing
-            // else (a redelivered no-op batch cancels to zero deltas)
-            val removed = cur.join(gone, Seq("doc_id"), "left_semi").persist()
-            val pruned = cur.join(gone, Seq("doc_id"), "left_anti")
-            val appended = Dedup.signatureStore(arrived, n)
-              .join(pruned.select("doc_id"), Seq("doc_id"), "left_anti").persist()
-            try {
-              txn.overwriteSlice(storeTable, slice, pruned.unionByName(appended))
-              maintainBandCensus(txn, countsTable, histTable,
-                Dedup.storeBands(removed, bandSize).select("bkey"),
-                Dedup.storeBands(appended, bandSize).select("bkey"))
-              txn.commit()
-            } finally { removed.unpersist(); appended.unpersist() }
-          } else txn.discard()
-        } finally net.unpersist()
-      }
-    }
-  }
+                                     bandSize: Int = 2): Unit =
+    drainKeyedStore(spark, wh, storeTable, "doc_id", docSchema, logDir, checkpointDir)(
+      _.select("doc_id", "text"), graft.operators.Dedup.signatureStore(_, n),
+      Some(bandCensus(countsTable, histTable,
+        graft.operators.Dedup.storeBands(_, bandSize)) _))
 
-  /** Fold a batch's band deltas into the maintained census tables —
-    * per-bucket counts rewritten bucket-pruned (the counts table is
-    * bucketed by `bkey`), the size histogram (tiny) by a full-outer
-    * merge. All inputs are batch-sized; the counts table contributes
-    * only the touched buckets' files.
+  /** A batch's net per-`key` count change: −1 per removed row, +1 per
+    * appended row, keys whose changes cancel dropped — the one signed
+    * delta every maintained census folds (`key`, `d`).
     */
-  private def maintainBandCensus(txn: graft.etl.Txn, countsTable: String,
-                                 histTable: String, removedBands: DataFrame,
-                                 addedBands: DataFrame): Unit = {
-    val delta = removedBands.withColumn("d", lit(-1L))
-      .unionByName(addedBands.withColumn("d", lit(1L)))
-      .groupBy("bkey").agg(sum(col("d")).as("d"))
+  private def signedDelta(key: String, removed: DataFrame,
+                          appended: DataFrame): DataFrame =
+    removed.select(col(key), lit(-1L).as("d"))
+      .unionByName(appended.select(col(key), lit(1L).as("d")))
+      .groupBy(key).agg(sum(col("d")).as("d"))
       .filter(col("d") =!= 0L)
+
+  /** Merge a [[signedDelta]] into a small count table (`key`, `cnt`) by
+    * a full-outer join, dropping keys whose count reaches 0, and
+    * rewrite it whole — the table is code-sized, so that IS the
+    * churn-sized move (bucketing it would only add fixed costs).
+    */
+  private def foldCounts(txn: graft.etl.Txn, table: String, key: String,
+                         cnt: String, delta: DataFrame): Unit =
+    txn.overwrite(table, txn.read(table).join(delta, Seq(key), "full")
+      .select(col(key),
+        (coalesce(col(cnt), lit(0L)) + coalesce(col("d"), lit(0L))).as(cnt))
+      .filter(col(cnt) > 0))
+
+  /** The band census: fold the band keys (`bands`) of a batch's
+    * removed and appended store rows into the per-bucket counts —
+    * rewritten bucket-pruned (the counts table is bucketed by `bkey`)
+    * — and the size histogram. All inputs are batch-sized; the counts
+    * table contributes only the touched buckets' files.
+    */
+  private def bandCensus(countsTable: String, histTable: String,
+                         bands: DataFrame => DataFrame)
+                        (txn: graft.etl.Txn, removed: DataFrame,
+                         appended: DataFrame): Unit = {
+    val delta = signedDelta("bkey", bands(removed), bands(appended))
     val slice = txn.keyedSlice(countsTable, Seq("bkey"))(
       graft.etl.Warehouse.bucketsOf(delta, Seq("bkey"), _))
     if (slice.isEmpty) return // no net band movement
@@ -1283,16 +1299,9 @@ object StreamingOps {
         .select(col("bkey"), col("newc").as("cnt"))
       val pruned = cur.join(joined.select("bkey"), Seq("bkey"), "left_anti")
       txn.overwriteSlice(countsTable, slice, pruned.unionByName(newCounts))
-      val histDelta = joined
-        .select(col("oldc").as("bn"), lit(-1L).as("dk")).filter(col("bn") > 0)
-        .unionByName(joined
-          .select(col("newc").as("bn"), lit(1L).as("dk")).filter(col("bn") > 0))
-        .groupBy("bn").agg(sum(col("dk")).as("dk")).filter(col("dk") =!= 0L)
-      val newHist = txn.read(histTable).join(histDelta, Seq("bn"), "full")
-        .select(col("bn"),
-          (coalesce(col("k"), lit(0L)) + coalesce(col("dk"), lit(0L))).as("k"))
-        .filter(col("k") > 0)
-      txn.overwrite(histTable, newHist)
+      foldCounts(txn, histTable, "bn", "k", signedDelta("bn",
+        joined.select(col("oldc").as("bn")).filter(col("bn") > 0),
+        joined.select(col("newc").as("bn")).filter(col("bn") > 0)))
     } finally joined.unpersist()
   }
 
@@ -1300,50 +1309,30 @@ object StreamingOps {
     * [[graft.operators.Multimodal.imageAHash]] table from a media
     * table's change log — the MULTIMODAL twin of
     * [[changeFeedSignatureStore]]: at 100 TB, new images must hash at
-    * INGEST (per-batch churn cost), never via corpus re-scans, and
-    * until r13 images had no incremental path at all. Per micro-batch
-    * the logged transitions fold to net per-key deltas; net-deleted
-    * and net-updated doc_ids drop their hash rows (an edited image
-    * must re-hash — a stale aHash would band it into its OLD near-dup
-    * buckets), then inserts/after-images decode + hash and append,
-    * anti-joined against the pruned store so redelivery cannot
-    * duplicate a row. Non-image payloads (wav) contribute no row —
-    * the same exclusion the batch mm_imagehash gate applies. The
-    * stored table feeds [[graft.operators.Multimodal.imageHashPairs]]
-    * exactly like the signature store feeds incremental text dedup.
+    * INGEST (per-batch churn cost), never via corpus re-scans
+    * ([[drainKeyedStore]] applies each micro-batch; an edited image
+    * re-hashes — a stale aHash would band it into its OLD near-dup
+    * buckets). Non-image payloads (wav) contribute no row — the same
+    * exclusion the batch mm_imagehash gate applies. The stored table
+    * feeds [[graft.operators.Multimodal.imageHashPairs]] exactly like
+    * the signature store feeds incremental text dedup.
     *
-    * Exactly-once EFFECT by CONVERGENCE like the other consumers; the
-    * streamed store is row-equal to a cold [[Multimodal.imageAHash]]
+    * The streamed store is row-equal to a cold [[Multimodal.imageAHash]]
     * of the final image (spec-pinned, and the `q_stream_mm` driver
     * gate hashes it).
     */
   def changeFeedImageHashStore(spark: SparkSession, wh: graft.etl.Warehouse,
                                storeTable: String, mediaSchema: StructType,
                                logDir: String,
-                               checkpointDir: String): Unit = {
-    import graft.etl.ChangeFeed
-    import graft.operators.Multimodal
-    val logSch = ChangeFeed.logSchema(mediaSchema, Seq("doc_id"))
-    drainLog(spark, logDir, logSch, checkpointDir) { batch =>
-      if (!batch.isEmpty) {
-        val net = ChangeFeed.netChanges(batch, Seq("doc_id")).persist()
-        try {
-          val gone = net
-            .filter(col("change_type").isin("delete", "update_post"))
-            .select("doc_id")
-          val arrived = net
-            .filter(col("change_type").isin("insert", "update_post"))
-            .select("doc_id", "fmt", "payload")
-            .filter(col("fmt") =!= "wav")
-          val txn = wh.begin()
-          txn.pruneAppendKeyed(storeTable, "doc_id", gone, arrived.select("doc_id"),
-            pruned => pruned.unionByName(Multimodal.imageAHash(arrived)
-              .join(pruned.select("doc_id"), Seq("doc_id"), "left_anti")))
-          txn.commit()
-        } finally net.unpersist()
-      }
-    }
-  }
+                               checkpointDir: String): Unit =
+    drainKeyedStore(spark, wh, storeTable, "doc_id", mediaSchema, logDir, checkpointDir)(
+      imageArrivals, graft.operators.Multimodal.imageAHash)
+
+  /** The image consumers' arrivals: media rows minus non-image (wav)
+    * payloads, which contribute no row.
+    */
+  private def imageArrivals(rows: DataFrame): DataFrame =
+    rows.select("doc_id", "fmt", "payload").filter(col("fmt") =!= "wav")
 
   /** [[changeFeedImageHashStore]] WITH the band census maintained
     * store-side — the MULTIMODAL twin of
@@ -1362,63 +1351,18 @@ object StreamingOps {
                                      storeTable: String, countsTable: String,
                                      histTable: String,
                                      mediaSchema: StructType, logDir: String,
-                                     checkpointDir: String): Unit = {
-    import graft.etl.ChangeFeed
-    import graft.operators.Multimodal
-    val logSch = ChangeFeed.logSchema(mediaSchema, Seq("doc_id"))
-    drainLog(spark, logDir, logSch, checkpointDir) { batch =>
-      if (!batch.isEmpty) {
-        val net = ChangeFeed.netChanges(batch, Seq("doc_id")).persist()
-        try {
-          val gone = net
-            .filter(col("change_type").isin("delete", "update_post"))
-            .select("doc_id")
-          val arrived = net
-            .filter(col("change_type").isin("insert", "update_post"))
-            .select("doc_id", "fmt", "payload")
-            .filter(col("fmt") =!= "wav")
-          val txn = wh.begin()
-          val slice = txn.keyedSlice(storeTable, Seq("doc_id"))(graft.etl.Warehouse.bucketsOf(
-            gone.unionByName(arrived.select("doc_id")), Seq("doc_id"), _))
-          if (!slice.isEmpty) {
-            val cur = slice.of(txn.read(storeTable))
-            val removed = cur.join(gone, Seq("doc_id"), "left_semi").persist()
-            val pruned = cur.join(gone, Seq("doc_id"), "left_anti")
-            val appended = Multimodal.imageAHash(arrived)
-              .join(pruned.select("doc_id"), Seq("doc_id"), "left_anti").persist()
-            try {
-              txn.overwriteSlice(storeTable, slice, pruned.unionByName(appended))
-              maintainBandCensus(txn, countsTable, histTable,
-                Multimodal.hashBands(removed).select("bkey"),
-                Multimodal.hashBands(appended).select("bkey"))
-              txn.commit()
-            } finally { removed.unpersist(); appended.unpersist() }
-          } else txn.discard()
-        } finally net.unpersist()
-      }
-    }
-  }
+                                     checkpointDir: String): Unit =
+    drainKeyedStore(spark, wh, storeTable, "doc_id", mediaSchema, logDir, checkpointDir)(
+      imageArrivals, graft.operators.Multimodal.imageAHash,
+      Some(bandCensus(countsTable, histTable, graft.operators.Multimodal.hashBands) _))
 
   /** PRODUCTION CDC consumer #3: maintain a stored
     * [[graft.operators.Similarity.ivfpqIndex]] from an embedding
     * table's change log — the ingestion path for a vector-search
     * service: nightly/streaming embedding arrivals encode against the
     * FIXED codebooks and land in the index at churn cost, never
-    * re-encoding the stored corpus. Per micro-batch the logged
-    * transitions fold to the per-key net delta
-    * ([[graft.etl.ChangeFeed.netChanges]]); net-deleted and net-updated
-    * vec_ids drop their index rows (an updated embedding must
-    * re-encode — a stale row would keep answering queries with the old
-    * codes), then net inserts/after-images append-encode
-    * ([[graft.operators.Similarity.ivfpqIndexAppend]]) — one warehouse
-    * transaction per batch.
-    *
-    * Exactly-once EFFECT by CONVERGENCE, like [[changeFeedReplica]]:
-    * a redelivered delete drops an absent key (no-op), a redelivered
-    * insert is anti-joined away by the append's idempotence guard, a
-    * redelivered update drops-then-re-encodes to the identical row —
-    * so at-least-once redelivery and even a checkpoint reset
-    * re-converge (spec-pinned).
+    * re-encoding the stored corpus ([[drainKeyedStore]] applies each
+    * micro-batch — one warehouse transaction per batch).
     *
     * `seedEmbeddings` must contain every vector `coarsePred`/`pqPred`
     * select over the corpus, FIXED for the index's lifetime (the
@@ -1432,29 +1376,10 @@ object StreamingOps {
                          indexTable: String, embSchema: StructType,
                          seedEmbeddings: DataFrame, coarsePred: Column,
                          pqPred: Column, m: Int, logDir: String,
-                         checkpointDir: String): Unit = {
-    import graft.etl.ChangeFeed
-    import graft.operators.Similarity
-    val logSch = ChangeFeed.logSchema(embSchema, Seq("vec_id"))
-    drainLog(spark, logDir, logSch, checkpointDir) { batch =>
-      if (!batch.isEmpty) {
-        val net = ChangeFeed.netChanges(batch, Seq("vec_id")).persist()
-        try {
-          val gone = net
-            .filter(col("change_type").isin("delete", "update_post"))
-            .select("vec_id")
-          val added = net
-            .filter(col("change_type").isin("insert", "update_post"))
-            .select("vec_id", "embedding")
-          val txn = wh.begin()
-          txn.pruneAppendKeyed(indexTable, "vec_id", gone, added.select("vec_id"),
-            pruned => Similarity.ivfpqIndexAppend(
-              pruned, seedEmbeddings, added, coarsePred, pqPred, m))
-          txn.commit()
-        } finally net.unpersist()
-      }
-    }
-  }
+                         checkpointDir: String): Unit =
+    drainKeyedStore(spark, wh, indexTable, "vec_id", embSchema, logDir, checkpointDir)(
+      _.select("vec_id", "embedding"),
+      graft.operators.Similarity.ivfpqEncode(seedEmbeddings, _, coarsePred, pqPred, m))
 
   /** [[changeFeedAnnIndex]] WITH the per-list occupancy census
     * maintained store-side — the ANN member of the maintained-census
@@ -1467,72 +1392,23 @@ object StreamingOps {
     * corpus) reads an nlist-sized table instead of aggregating the
     * corpus-sized index. Unlike the band censuses the counts table is
     * CODE-sized (one row per non-empty list), so it is merged and
-    * rewritten whole — no bucketing needed. Same exactness contract:
-    * maintained counts == a cold [[Similarity.indexListCounts]] of the
-    * stored index at every commit; redelivery cancels to zero deltas
-    * (spec-pinned).
+    * rewritten whole ([[foldCounts]]) — no bucketing needed. Same
+    * exactness contract: maintained counts == a cold
+    * [[Similarity.indexListCounts]] of the stored index at every
+    * commit; redelivery cancels to zero deltas (spec-pinned).
     */
   def changeFeedAnnIndexCensus(spark: SparkSession, wh: graft.etl.Warehouse,
                                indexTable: String, listCountsTable: String,
                                embSchema: StructType,
                                seedEmbeddings: DataFrame, coarsePred: Column,
                                pqPred: Column, m: Int, logDir: String,
-                               checkpointDir: String): Unit = {
-    import graft.etl.ChangeFeed
-    import graft.operators.Similarity
-    val logSch = ChangeFeed.logSchema(embSchema, Seq("vec_id"))
-    drainLog(spark, logDir, logSch, checkpointDir) { batch =>
-      if (!batch.isEmpty) {
-        val net = ChangeFeed.netChanges(batch, Seq("vec_id")).persist()
-        try {
-          val gone = net
-            .filter(col("change_type").isin("delete", "update_post"))
-            .select("vec_id")
-          val added = net
-            .filter(col("change_type").isin("insert", "update_post"))
-            .select("vec_id", "embedding")
-          val txn = wh.begin()
-          val slice = txn.keyedSlice(indexTable, Seq("vec_id"))(graft.etl.Warehouse.bucketsOf(
-            gone.unionByName(added.select("vec_id")), Seq("vec_id"), _))
-          if (!slice.isEmpty) {
-            val cur = slice.of(txn.read(indexTable))
-            val removed = cur.join(gone, Seq("vec_id"), "left_semi").persist()
-            val pruned = cur.join(gone, Seq("vec_id"), "left_anti")
-            val newSlice = Similarity.ivfpqIndexAppend(
-              pruned, seedEmbeddings, added, coarsePred, pqPred, m).persist()
-            val appended = newSlice
-              .join(pruned.select("vec_id"), Seq("vec_id"), "left_anti")
-            try {
-              txn.overwriteSlice(indexTable, slice, newSlice)
-              maintainListCounts(txn, listCountsTable,
-                removed.select("co_id"), appended.select("co_id"))
-              txn.commit()
-            } finally { removed.unpersist(); newSlice.unpersist() }
-          } else txn.discard()
-        } finally net.unpersist()
-      }
-    }
-  }
-
-  /** Fold a batch's list-membership deltas into the maintained
-    * occupancy table. All inputs are batch-sized; the table itself is
-    * nlist-sized (one row per non-empty list), so a full-outer merge
-    * and whole-table rewrite IS the churn-sized move here — bucketing
-    * a code-sized table would only add fixed costs.
-    */
-  private def maintainListCounts(txn: graft.etl.Txn, table: String,
-                                 removedLists: DataFrame,
-                                 addedLists: DataFrame): Unit = {
-    val delta = removedLists.withColumn("d", lit(-1L))
-      .unionByName(addedLists.withColumn("d", lit(1L)))
-      .groupBy("co_id").agg(sum(col("d")).as("d"))
-      .filter(col("d") =!= 0L)
-    val merged = txn.read(table).join(delta, Seq("co_id"), "full")
-      .select(col("co_id"),
-        (coalesce(col("cnt"), lit(0L)) + coalesce(col("d"), lit(0L))).as("cnt"))
-      .filter(col("cnt") > 0)
-    txn.overwrite(table, merged)
-  }
+                               checkpointDir: String): Unit =
+    drainKeyedStore(spark, wh, indexTable, "vec_id", embSchema, logDir, checkpointDir)(
+      _.select("vec_id", "embedding"),
+      graft.operators.Similarity.ivfpqEncode(seedEmbeddings, _, coarsePred, pqPred, m),
+      Some((txn, removed, appended) =>
+        foldCounts(txn, listCountsTable, "co_id", "cnt",
+          signedDelta("co_id", removed, appended))))
 
   /** PRODUCTION CDC consumer #2: fold the change stream into an SCD2
     * HISTORY — the replica keeps only the latest image; this keeps

@@ -252,4 +252,69 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(wh.read("t").select("id").collect().map(_.getLong(0)).toSet ==
       Set(5L, 7L, 9L, 11L, 13L, 15L))
   }
+
+  private def twoRowWh(root: Path): Warehouse = {
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("id", "long").add("v", "string")
+    new Warehouse(spark, root.toString, schemas = Map("t" -> schema),
+      partitionSpec = Map.empty, bucketSpec = Map.empty)
+  }
+
+  test("vector deletes stay deleted on a copied root once the original is gone") {
+    import spark.implicits._
+    val src = Files.createTempDirectory("wh-dv-copy-src")
+    val wh = twoRowWh(src)
+    val t0 = wh.begin(); t0.overwrite("t", Seq((1L, "a"), (2L, "b")).toDF("id", "v")); t0.commit()
+    val dims = new Warehouse(spark, src.toString) // bucketed dim path, same root
+    val t1 = dims.begin(); t1.overwrite("dim_clients", clients(1 to 8)); t1.commit()
+    val t2 = wh.begin()
+    assert(t2.deleteVectored("t", col("id") === 1L) == 1L)
+    t2.commit()
+    val t2d = dims.begin()
+    assert(t2d.deleteVectored("dim_clients", col("client_id") === "C005") == 1L)
+    t2d.commit()
+
+    val dst = Files.createTempDirectory("wh-dv-copy-dst").resolve("copy")
+    def walk(p: Path): Seq[Path] = {
+      val st = Files.walk(p)
+      try st.iterator().asScala.toSeq finally st.close()
+    }
+    walk(src).foreach(p => Files.copy(p, dst.resolve(src.relativize(p).toString)))
+    walk(src).reverse.foreach(Files.delete)
+
+    val copy = twoRowWh(dst)
+    assert(copy.read("t").select("id").collect().map(_.getLong(0)).toSeq == Seq(2L),
+      "the copy must keep the vector delete")
+    assert(ids(new Warehouse(spark, dst.toString).read("dim_clients")) ==
+      (1 to 8).filter(_ != 5).map(i => f"C$i%03d").toSet)
+    // a further delete on the copy composes with the copied tombstones
+    val t3 = copy.begin()
+    assert(t3.deleteVectored("t", col("id") >= 1L) == 1L)
+    t3.commit()
+    assert(copy.read("t").isEmpty)
+  }
+
+  test("a DV dir naming its files by absolute URI still deletes its rows") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("wh-dv-abs")
+    val wh = twoRowWh(root)
+    val t0 = wh.begin(); t0.overwrite("t", Seq((1L, "a"), (2L, "b")).toDF("id", "v")); t0.commit()
+    // the tombstone form written before keys were relative to the root
+    val tomb = spark.read.parquet(wh.catalog()("t").head).filter(col("id") === 1L)
+      .select(col("_metadata.file_path").as(Warehouse.DvFile),
+        col("_metadata.row_index").as(Warehouse.DvPos))
+    assert(tomb.collect().forall(_.getString(0).startsWith("file:")))
+    val dvDir = wh.newDataDir(Warehouse.dvKey("t"))
+    tomb.write.parquet(dvDir)
+    wh.commitCatalog(wh.catalog() + (Warehouse.dvKey("t") -> Seq(dvDir)))
+
+    assert(wh.read("t").select("id").collect().map(_.getLong(0)).toSeq == Seq(2L))
+    assert(wh.readRaw("t").select("id").collect().map(_.getLong(0)).toSeq == Seq(2L))
+    val t1 = wh.begin()
+    assert(t1.read("t").count() == 1L)
+    assert(t1.deleteVectored("t", col("id") === 1L) == 0L, "already deleted")
+    assert(t1.deleteVectored("t", col("id") === 2L) == 1L)
+    t1.commit()
+    assert(wh.read("t").isEmpty)
+  }
 }

@@ -24,7 +24,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    that lets [[Dedup.incrementalNearDupsStoredWithCap]] skip the
   *    full-store aggregation with IDENTICAL output;
   *  - full redelivery (fresh checkpoint, whole log) leaves the census
-  *    tables unchanged — add/remove band deltas cancel exactly.
+  *    tables unchanged — add/remove band deltas cancel exactly;
+  *  - the signature store itself equals a cold
+  *    [[Dedup.signatureStore]] of the final image, as the plain
+  *    consumer's does.
   */
 class MaintainedCensusSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -101,6 +104,15 @@ class MaintainedCensusSpec extends AnyFunSuite {
       drain(ckpt)
       assertCensusExact(tag)
     }
+    // the store the census rides on is the plain consumer's: a cold
+    // signature store of the final image, row for row
+    def assertStoreIsCold(tag: String): Unit = {
+      val streamed = wh.read("sigstore").collect().map(_.toString).sorted.toSeq
+      val cold = Dedup.signatureStore(img(v3Ids, finalBump), n = 3)
+        .collect().map(_.toString).sorted.toSeq
+      assert(streamed.nonEmpty && streamed == cold, s"$tag: store != cold rebuild")
+    }
+    assertStoreIsCold("final image")
 
     // derived cap == full recompute for a NEXT incoming batch, and the
     // cap-supplied incremental run matches the recomputing one exactly
@@ -138,6 +150,7 @@ class MaintainedCensusSpec extends AnyFunSuite {
       wh.read("bandhist").collect().map(_.toString).sorted.toSeq)
     drain(Files.createTempDirectory("mc-ck2").toString)
     assertCensusExact("redelivery")
+    assertStoreIsCold("redelivery")
     val after = (wh.read("bandcounts").collect().map(_.toString).sorted.toSeq,
       wh.read("bandhist").collect().map(_.toString).sorted.toSeq)
     assert(after == before, "redelivery moved the census")

@@ -26,7 +26,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    default (the bit-equality that lets image near-dup ingestion
   *    skip the full-store aggregation);
   *  - full redelivery (fresh checkpoint, whole log) leaves the census
-  *    tables unchanged — add/remove band deltas cancel exactly.
+  *    tables unchanged — add/remove band deltas cancel exactly;
+  *  - the aHash store itself equals a cold [[Multimodal.imageAHash]] of
+  *    the final image, as the plain consumer's does.
   */
 class MaintainedImageCensusSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -59,6 +61,16 @@ class MaintainedImageCensusSpec extends AnyFunSuite {
   private def coldCounts(store: DataFrame): Map[String, Long] =
     Multimodal.hashBands(store).groupBy("bkey").agg(count(lit(1)).as("cnt"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** The store the census rides on is the plain consumer's: a cold
+    * [[Multimodal.imageAHash]] of the final image's non-wav media.
+    */
+  private def assertStoreIsCold(wh: Warehouse, finalImg: DataFrame, tag: String): Unit = {
+    val streamed = wh.read("hashstore").collect().map(_.toString).sorted.toSeq
+    val cold = Multimodal.imageAHash(finalImg.filter(col("fmt") =!= "wav"))
+      .collect().map(_.toString).sorted.toSeq
+    assert(streamed.nonEmpty && streamed == cold, s"$tag: store != cold rebuild")
+  }
 
   test("maintained image-band counts+histogram track the store exactly; " +
     "derived cap matches the recompute and the cap-supplied pairs match; " +
@@ -119,6 +131,7 @@ class MaintainedImageCensusSpec extends AnyFunSuite {
     // image, plus per-wave via a fresh source replay below
     drain(ckpt)
     assertCensusExact("full drain")
+    assertStoreIsCold(wh, media(v3Ids, bump, plantDup = true), "full drain")
     val store = wh.read("hashstore")
     assert(store.filter(col("fmt") === "wav").isEmpty, "wav payload hashed")
     assert(store.filter(col("doc_id") === 100L).count() == 1L,
@@ -153,6 +166,7 @@ class MaintainedImageCensusSpec extends AnyFunSuite {
       wh.read("bandhist").collect().map(_.toString).sorted.toSeq)
     drain(Files.createTempDirectory("mic-ck2").toString)
     assertCensusExact("redelivery")
+    assertStoreIsCold(wh, media(v3Ids, bump, plantDup = true), "redelivery")
     val after = (wh.read("bandcounts").collect().map(_.toString).sorted.toSeq,
       wh.read("bandhist").collect().map(_.toString).sorted.toSeq)
     assert(after == before, "redelivery moved the census")
@@ -208,5 +222,6 @@ class MaintainedImageCensusSpec extends AnyFunSuite {
           "bandcounts", "bandhist", mediaSchema, logDir, ckpt)
         assertCensusExact(tag)
       }
+    assertStoreIsCold(wh, media((0L to 26L).filterNot(_ == 9L), Set(12L)), "update wave")
   }
 }

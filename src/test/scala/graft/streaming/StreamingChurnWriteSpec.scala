@@ -154,6 +154,50 @@ class StreamingChurnWriteSpec extends AnyFunSuite {
     assertChurnSized(dirOf(vs(2)), dirOf(vs(3)), touched3, "batch v2->v3")
   }
 
+  test("a bucketed store's batch whose net delta is empty touches no bucket: " +
+    "the consumer discards its txn and commits no version") {
+    val docSchema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    def img(ids: Seq[Long]): DataFrame = spark.createDataFrame(
+      spark.sparkContext.parallelize(ids.map(i => Row(i, s"w$i w${i + 1} w${i + 2} w${i + 3}")), 2),
+      docSchema)
+    val src = new Warehouse(spark,
+      Files.createTempDirectory("churn-empty-src").toString,
+      Map("docs" -> docSchema), partitionSpec = Map.empty,
+      bucketSpec = Map("docs" -> ("doc_id", 4)))
+    locally { val t = src.begin(); t.overwrite("docs", img(Nil)); t.commit() }
+    val storeSchema = StructType(StructField("doc_id", LongType) +:
+      (0 until 8).map(j => StructField(s"m$j", LongType)))
+    val storeWh = new Warehouse(spark,
+      Files.createTempDirectory("churn-empty-idx").toString,
+      Map("sigstore" -> storeSchema), partitionSpec = Map.empty,
+      bucketSpec = Map("sigstore" -> ("doc_id", 4)))
+    locally {
+      val t = storeWh.begin()
+      t.overwrite("sigstore", storeWh.emptyDf("sigstore")); t.commit()
+    }
+    val logDir = Files.createTempDirectory("churn-empty-log").toString
+    val ckpt = Files.createTempDirectory("churn-empty-ck").toString
+    def drain(): Unit = {
+      ChangeFeed.materializeLog(src, "docs", Seq("doc_id"), logDir)
+      StreamingOps.changeFeedSignatureStore(spark, storeWh, "sigstore",
+        docSchema, n = 3, logDir, ckpt)
+    }
+    locally { val t = src.begin(); t.overwrite("docs", img(0L to 5L)); t.commit() }
+    drain()
+    val versions = storeWh.versions()
+    val stored = storeWh.read("sigstore").collect().map(_.toString).sorted.toSeq
+    assert(stored.size == 6)
+    // doc 6 arrives and leaves inside the next drain's one micro-batch:
+    // its net change is nothing, so no bucket is touched
+    Seq(img(0L to 6L), img(0L to 5L)).foreach { d =>
+      val t = src.begin(); t.overwrite("docs", d); t.commit()
+    }
+    drain()
+    assert(storeWh.versions() == versions, "an empty slice must commit no version")
+    assert(storeWh.read("sigstore").collect().map(_.toString).sorted.toSeq == stored)
+  }
+
   test("pruneAppendKeyed: delete-only delta rewrites only the deleted keys' " +
     "buckets; unbucketed table falls back to a full overwrite") {
     val schema = StructType(Seq(
@@ -171,8 +215,8 @@ class StreamingChurnWriteSpec extends AnyFunSuite {
     val gone = Seq(7L).toDF("id")
     locally {
       val t = wh.begin()
-      t.pruneAppendKeyed("t", "id", gone, gone.limit(0), identity)
-      t.pruneAppendKeyed("u", "id", gone, gone.limit(0), identity)
+      t.pruneAppendKeyed("t", "id", gone, base.limit(0))(identity)
+      t.pruneAppendKeyed("u", "id", gone, base.limit(0))(identity)
       t.commit()
     }
     assert(wh.read("t").count() == 31L &&
@@ -184,7 +228,7 @@ class StreamingChurnWriteSpec extends AnyFunSuite {
       wh.read("t").exceptAll(wh.read("u")).isEmpty)
   }
 
-  test("the streamed SCD1 upsert's write path (Scd1.upsertIncrementalWarehouse) " +
+  test("the streamed SCD1 upsert's write path (Scd1.mergeAuditWarehouse) " +
     "on a bucketed dim: changed buckets rewrite, the rest hard-link, and a " +
     "no-change replay batch writes nothing") {
     val dimSchema = StructType(Seq(
