@@ -17,8 +17,9 @@ import graft.sources.{BankSource, DropFolder, FileSources}
   *  1. staging: the six `stg_*` tables, from the inputs alone;
   *  2. the four dim merges, the meta watermarks and the two fact
   *     appends: each reads only staging and the table it writes;
-  *  3. the reports: ONE `rep_fraud` append of the three reports, which
-  *     read the merged dims and the appended facts.
+  *  3. the reports: ONE `rep_fraud` append of the three reports
+  *     ([[Reports.fraudReports]]), which read the merged dims and the
+  *     appended facts.
   * No write is visible outside the txn before the single commit, so
   * running a level's statements concurrently cannot be observed: the
   * committed image is the one the reference's order produces.
@@ -169,11 +170,8 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
     val clients = txn.read("dim_clients")
     val terminals = txn.read("dim_terminals")
     val blacklist = txn.read("fact_blacklist")
-    txn.append("rep_fraud", Seq(
-      Reports.fraudExpiredPassport(fact, cards, accounts, clients, blacklist, mode),
-      Reports.fraudInactiveAccount(fact, cards, accounts, clients),
-      Reports.fraudCityHopping(fact, cards, terminals, accounts, clients))
-      .reduce(_ unionByName _))
+    txn.append("rep_fraud",
+      Reports.fraudReports(fact, cards, accounts, clients, terminals, blacklist, mode))
 
     // ---- K11: one atomic commit, then (and only then) archive inputs
     txn.commit()

@@ -15,7 +15,10 @@ import org.apache.spark.sql.functions._
   *  - Reports №1/№2 join cards on `trim()`ed card numbers (outer spaces
   *    only), №3 on `replace(card_num,' ','')` (ALL spaces) — an
   *    inconsistency the reference carries (main.py:407 vs 458) and we
-  *    preserve.
+  *    preserve. Because №1 and №2 run the same chain, [[fraudReports]]
+  *    (the nightly run's builder) runs it once and tags each joined row
+  *    with the reports it belongs to; the per-report functions stay,
+  *    built from the same chain and predicates.
   *  - `report_dt = to_date(to_char(ts,'YYYY-MM-DD'),…)` is a
   *    day-truncation roundtrip → midnight timestamp (main.py:404).
   *  - Report №1's predicate is `WHERE 1=1 or …` — a tautology
@@ -37,12 +40,12 @@ object Reports {
   private def fio: Column =
     concat(col("last_name"), lit(" "), col("first_name"), lit(" "), col("patronymic"))
 
-  private def reportCols(eventType: String): Seq[Column] = Seq(
+  private def reportCols(eventType: Column): Seq[Column] = Seq(
     col("trans_date").as("event_dt"),
     col("passport_num").as("passport"),
     fio.as("fio"),
     col("phone"),
-    lit(eventType).as("event_type"),
+    eventType.as("event_type"),
     to_date(col("trans_date")).cast("timestamp").as("report_dt"))
 
   /** fact →(trim keys)→ cards → accounts → clients, the №1/№2 join chain
@@ -58,28 +61,38 @@ object Reports {
       .join(broadcast(clients.alias("dcl")),
         col("da.client") === col("dcl.client_id"), "left")
 
+  /** The №1 input and predicate over the №1/№2 chain `joined`:
+    * `None` in Faithful mode, where the predicate is `WHERE 1=1 or …`, a
+    * tautology (P6). In Corrected mode, the intent: expired, or passport
+    * present in the blacklist fact. PG `IN (subquery)` never matches
+    * NULL passports, and a broadcast left join on the distinct non-null
+    * blacklist passports flags exactly those rows without duplicating
+    * any.
+    */
+  private def expiredPassport(joined: DataFrame, blacklist: DataFrame,
+                              mode: Mode): (DataFrame, Option[Column]) = mode match {
+    case Faithful => (joined, None)
+    case Corrected =>
+      val black = blacklist.select(col("passport_num").as("__bl_passport"))
+        .filter(col("__bl_passport").isNotNull).distinct()
+      (joined.join(broadcast(black), col("dcl.passport_num") === col("__bl_passport"), "left"),
+        Some((col("dcl.passport_valid_to") < col("ft.trans_date")
+          && col("dcl.passport_valid_to").isNotNull)
+          || col("__bl_passport").isNotNull))
+  }
+
+  /** The №2 predicate: an inactive contract. */
+  private def inactiveAccount: Column = col("da.valid_to") < col("ft.trans_date")
+
   /** №1 — operation with an expired or blacklisted passport
     * (main.py:397-415).
     */
   def fraudExpiredPassport(fact: DataFrame, cards: DataFrame, accounts: DataFrame,
                            clients: DataFrame, blacklist: DataFrame,
                            mode: Mode): DataFrame = {
-    val joined = chain(fact, cards, accounts, clients, trim(_))
-    val filtered = mode match {
-      case Faithful => joined // WHERE 1=1 or … — tautological (P6)
-      case Corrected =>
-        // intent: expired, or passport present in the blacklist fact.
-        // PG `IN (subquery)` never matches NULL passports — a broadcast
-        // semi-join on the distinct blacklist passports is exactly that.
-        val black = blacklist.select(col("passport_num").as("__bl_passport"))
-          .filter(col("__bl_passport").isNotNull).distinct()
-        joined
-          .join(broadcast(black), col("dcl.passport_num") === col("__bl_passport"), "left")
-          .filter((col("dcl.passport_valid_to") < col("ft.trans_date")
-            && col("dcl.passport_valid_to").isNotNull)
-            || col("__bl_passport").isNotNull)
-    }
-    filtered.select(reportCols("1"): _*)
+    val (joined, expired) =
+      expiredPassport(chain(fact, cards, accounts, clients, trim(_)), blacklist, mode)
+    expired.fold(joined)(c => joined.filter(c)).select(reportCols(lit("1")): _*)
   }
 
   /** №2 — operation on an inactive contract: `da.valid_to < trans_date`
@@ -88,8 +101,28 @@ object Reports {
   def fraudInactiveAccount(fact: DataFrame, cards: DataFrame, accounts: DataFrame,
                            clients: DataFrame): DataFrame =
     chain(fact, cards, accounts, clients, trim(_))
-      .filter(col("da.valid_to") < col("ft.trans_date"))
-      .select(reportCols("2"): _*)
+      .filter(inactiveAccount)
+      .select(reportCols(lit("2")): _*)
+
+  /** The three reports as one frame, what the nightly run appends to
+    * `rep_fraud` (main.py:397-467). №1 and №2 come from ONE pass of
+    * their shared chain: each joined row emits event type "1" where the
+    * №1 predicate holds and "2" where the №2 predicate holds (a NULL
+    * predicate emits nothing, as a filter drops it), through `explode`
+    * of the tags that are set. №3 is [[fraudCityHopping]]. Equals
+    * `fraudExpiredPassport ∪ fraudInactiveAccount ∪ fraudCityHopping`
+    * as a multiset.
+    */
+  def fraudReports(fact: DataFrame, cards: DataFrame, accounts: DataFrame,
+                   clients: DataFrame, terminals: DataFrame, blacklist: DataFrame,
+                   mode: Mode): DataFrame = {
+    val (joined, expired) =
+      expiredPassport(chain(fact, cards, accounts, clients, trim(_)), blacklist, mode)
+    val tags = array(when(expired.getOrElse(lit(true)), lit("1")),
+      when(inactiveAccount, lit("2")))
+    joined.select(reportCols(explode(filter(tags, _.isNotNull))): _*)
+      .unionByName(fraudCityHopping(fact, cards, terminals, accounts, clients))
+  }
 
   /** №3 — operations in different cities within one hour
     * (main.py:437-467): a lag window over (card, time), then a semi-join
@@ -122,6 +155,6 @@ object Reports {
       c => regexp_replace(c, " ", ""))
       .join(broadcast(flagged.withColumnRenamed("trans_id", "__flag_id")),
         col("ft.trans_id") === col("__flag_id"), "left_semi")
-      .select(reportCols("3"): _*)
+      .select(reportCols(lit("3")): _*)
   }
 }

@@ -4,6 +4,9 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{broadcast, col, hash, lit, pmod, substring_index, to_date}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import scala.collection.mutable
@@ -58,7 +61,12 @@ import scala.jdk.CollectionConverters._
   * each append dir (IO pruning) and key-hash buckets within each
   * partition (join co-location) — `Pipeline.freshFactRows` chains the
   * dedup anti-join per dir so no fact row or id ever crosses an
-  * Exchange. Note the layouts are not retro-fitted: a dir written
+  * Exchange. Every other read of a multi-dir table is ONE plain scan:
+  * a partitioned table's append dirs are listed through one
+  * [[Warehouse.DirsFileIndex]], so the reports read the whole fact
+  * history as one relation (scan tasks packed across all dirs, date
+  * pruning static and dynamic), not a union of one scan per dir.
+  * Note the layouts are not retro-fitted: a dir written
   * before its table had a `bucketSpec` entry must be rewritten
   * (`compact()`) before bucketed reads of it are sound.
   */
@@ -121,8 +129,7 @@ class Warehouse(val spark: SparkSession, val root: String,
 
   private[etl] def readDirs(table: String, dirs: Seq[String],
                             dvDirs: Seq[String] = Nil): DataFrame = {
-    val schema = schemas(table)
-    val fields = schema.fieldNames.toIndexedSeq
+    val fields = schemas(table).fieldNames.toIndexedSeq
     if (dirs.isEmpty) return emptyDf(table)
     if (dvDirs.isEmpty) {
       if (bucketSpec.contains(table) && dirs.length == 1)
@@ -131,15 +138,10 @@ class Warehouse(val spark: SparkSession, val root: String,
         // registration so the scan carries HashPartitioning(key, n) and
         // key-joins/aggregations need no dim-side Exchange
         readBucketedDir(table, dirs.head).select(fields.map(col): _*)
-      else if (!partitionSpec.contains(table))
-        spark.read.schema(schema).parquet(dirs: _*)
       else
-        // partitioned roots must be discovered one by one — a multi-path
-        // scan would try to unify partition structure across roots and
-        // fail with CONFLICTING_DIRECTORY_STRUCTURES
-        dirs.map(d => spark.read.schema(schema).parquet(d)
-            .select(fields.map(col): _*))
-          .reduce(_ unionByName _)
+        // every other shape is ONE plain scan over all dirs
+        // ([[scanDirs]]); a partitioned table's partition column is dropped
+        scanDirs(table, dirs).select(fields.map(col): _*)
     } else {
       // DELETION VECTORS outstanding: read with the row-provenance
       // columns, anti-join the (file path, row position) tombstone
@@ -160,17 +162,39 @@ class Warehouse(val spark: SparkSession, val root: String,
     * names.
     */
   private[etl] def readWithProvenance(table: String, dirs: Seq[String]): DataFrame = {
-    val schema = schemas(table)
-    val fields = schema.fieldNames.toIndexedSeq
-    if (bucketSpec.contains(table) && dirs.length == 1)
-      readBucketedDir(table, dirs.head).select(fields.map(col) ++ provCols: _*)
-    else if (!partitionSpec.contains(table))
-      spark.read.schema(schema).parquet(dirs: _*).select(fields.map(col) ++ provCols: _*)
-    else
-      dirs.map(d => spark.read.schema(schema).parquet(d)
-          .select(fields.map(col) ++ provCols: _*))
-        .reduce(_ unionByName _)
+    val fields = schemas(table).fieldNames.toIndexedSeq
+    val base =
+      if (bucketSpec.contains(table) && dirs.length == 1) readBucketedDir(table, dirs.head)
+      else scanDirs(table, dirs)
+    base.select(fields.map(col) ++ provCols: _*)
   }
+
+  /** ONE plain (unbucketed) parquet scan over `dirs`, the declared
+    * columns first. A partitioned table reads through a
+    * [[Warehouse.DirsFileIndex]], so its partition column rides along
+    * after the declared ones and static and dynamic partition filters
+    * prune every dir's `<col>=` subdirs; its type is the one
+    * [[partitionField]] derives.
+    */
+  private def scanDirs(table: String, dirs: Seq[String]): DataFrame = {
+    val schema = schemas(table)
+    partitionField(table) match {
+      case None => spark.read.schema(schema).parquet(dirs: _*)
+      case Some(p) =>
+        val idx = new Warehouse.DirsFileIndex(spark, schema, StructType(Seq(p)), dirs)
+        spark.baseRelationToDataFrame(HadoopFsRelation(idx, idx.partitionSchema, schema,
+          None, new ParquetFileFormat, Map.empty[String, String])(spark))
+    }
+  }
+
+  /** The partition column of a partitioned table, typed by what its
+    * partition expression yields over the declared schema: the type
+    * [[writeDataDir]] writes, whatever inference would read back.
+    */
+  private def partitionField(table: String): Option[StructField] =
+    partitionSpec.get(table).map { case (p, derive) =>
+      emptyDf(table).withColumn(p, derive).schema(p)
+    }
 
   /** Anti-join `base` (which must carry [[Warehouse.DvFile]]/
     * [[Warehouse.DvPos]]) against the tombstones in `dvDirs`.
@@ -208,17 +232,16 @@ class Warehouse(val spark: SparkSession, val root: String,
 
   /** Read keeping the physical partition column (when the table has one)
     * so date filters prune at the directory level —
-    * `PartitionFilters: [trans_dt = ...]` in explain.
+    * `PartitionFilters: [trans_dt = ...]` in explain, one scan over all
+    * dirs ([[scanDirs]]).
     */
   def readRaw(table: String, dirsIn: Seq[String] = Nil): DataFrame = {
     val cat = catalog()
     val dirs = if (dirsIn.nonEmpty) dirsIn else cat.getOrElse(table, Nil)
     val dv = cat.getOrElse(Warehouse.dvKey(table), Nil)
     if (dirs.isEmpty) emptyDf(table)
-    else if (dv.isEmpty) dirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
-    else applyDvTo(
-      dirs.map(d => spark.read.parquet(d).select(col("*") +: provCols: _*))
-        .reduce(_ unionByName _), dv)
+    else if (dv.isEmpty) scanDirs(table, dirs)
+    else applyDvTo(scanDirs(table, dirs).select(col("*") +: provCols: _*), dv)
   }
 
   def begin(): Txn = new Txn(this)
@@ -321,8 +344,9 @@ class Warehouse(val spark: SparkSession, val root: String,
 
   /** Incremental compaction: merge the OLDEST data dirs of `table` into
     * one, leaving the most recent `keep` dirs untouched. Bounds the
-    * read-side plan growth from daily appends (the unionByName chain in
-    * [[readDirs]] is linear in dir count) without a full-table rewrite
+    * read-side cost of daily appends (every dir is one more root to
+    * list and at least one more file per scan in [[readDirs]], one more
+    * anti-join in the per-dir fact dedup) without a full-table rewrite
     * each time — recent hot dirs never move; the cold prefix is
     * re-merged only when the dir count crosses the threshold again
     * (tiered-merge write amplification, the usual LSM trade).
@@ -448,17 +472,18 @@ class Warehouse(val spark: SparkSession, val root: String,
   private[etl] def writeDataDir(table: String, df: DataFrame,
                                 carry: Option[(String, Set[Int])] = None): String = {
     val dir = newDataDir(table)
+    val touched = carry.map(_._2.size)
     (partitionSpec.get(table), bucketSpec.get(table)) match {
       case (Some((name, derive)), Some(_)) =>
         // the production fact layout: date partitions prune IO, key-hash
         // buckets kill the join shuffle — each `dt=` dir holds one file
         // per (bucket × date) and the scan still carries
         // HashPartitioning(key, n) (bucket id is per-row, not per-dir)
-        writeBucketedDir(table, df.withColumn(name, derive), dir, Some(name))
+        writeBucketedDir(table, df.withColumn(name, derive), dir, Some(name), touched)
       case (Some((name, derive)), None) =>
         df.withColumn(name, derive).write.partitionBy(name).parquet(dir)
       case (None, Some(_)) =>
-        writeBucketedDir(table, df, dir, None)
+        writeBucketedDir(table, df, dir, None, touched)
       case _ =>
         df.write.parquet(dir)
     }
@@ -505,7 +530,11 @@ class Warehouse(val spark: SparkSession, val root: String,
     * after the declared columns, like [[readRaw]]. A bucketed table
     * reads fine but as a PLAIN scan — merges should keep using
     * [[read]] for its HashPartitioning. Returns one index per data dir
-    * (sum their counters for table-level pruning numbers).
+    * (sum their counters for table-level pruning numbers), which is why
+    * a partitioned table is still one skip-scan per dir, unioned: each
+    * [[graft.sources.DataSkipping.StatsFileIndex]] discovers one root's
+    * partitions, where [[readDirs]] reads all roots through one
+    * [[Warehouse.DirsFileIndex]].
     */
   def readSkipping(table: String): (DataFrame, Seq[graft.sources.DataSkipping.StatsFileIndex]) = {
     val cat = catalog()
@@ -525,8 +554,7 @@ class Warehouse(val spark: SparkSession, val root: String,
       val (df, idx) = one(dirs)
       (applyDvTo(df, dv), Seq(idx))
     } else {
-      // partitioned roots must be discovered one by one (the
-      // CONFLICTING_DIRECTORY_STRUCTURES contract, as in readDirs)
+      // one index, and so one partition discovery, per root
       val parts = dirs.map(d => one(Seq(d)))
       (applyDvTo(parts.map(_._1).reduce(_ unionByName _), dv), parts.map(_._2))
     }
@@ -540,12 +568,21 @@ class Warehouse(val spark: SparkSession, val root: String,
     * task holds exactly one bucket's rows → exactly one file per
     * non-empty bucket (which also keeps Spark trusting the SORTED BY
     * metadata on read). Dropping the external table keeps the files.
+    *
+    * A partial rewrite passes `touched` = the number of buckets its rows
+    * fall in: the n hash partitions, all but `touched` of them empty,
+    * coalesce to that many write tasks. Each task still holds whole
+    * buckets and the writer sorts by bucket id, so there is still one
+    * file per written bucket, and 1 touched bucket of 16 runs 1 write
+    * task, not 16.
     */
   private def writeBucketedDir(table: String, df: DataFrame, dir: String,
-                               partitionCol: Option[String]): Unit = {
+                               partitionCol: Option[String],
+                               touched: Option[Int]): Unit = {
     val (key, n) = bucketSpec(table)
     val tmp = "graft_tmp_" + UUID.randomUUID().toString.replace("-", "")
-    val w = df.repartition(n, col(key)).write
+    val byBucket = df.repartition(n, col(key))
+    val w = touched.filter(_ < n).fold(byBucket)(byBucket.coalesce).write
     partitionCol.fold(w)(w.partitionBy(_))
       .bucketBy(n, key).sortBy(key)
       .option("path", dir).format("parquet").saveAsTable(tmp)
@@ -569,10 +606,10 @@ class Warehouse(val spark: SparkSession, val root: String,
         // partitioned+bucketed dirs (facts) declare the partition column
         // too — its type is derived from the partition expression so the
         // registration never drifts from what writeDataDir produced
-        val (cols, partClause) = partitionSpec.get(table) match {
-          case Some((p, derive)) =>
-            val pType = emptyDf(table).withColumn(p, derive).schema(p).dataType.sql
-            (s"${schemas(table).toDDL}, `$p` $pType", s"PARTITIONED BY (`$p`)")
+        val (cols, partClause) = partitionField(table) match {
+          case Some(p) =>
+            (s"${schemas(table).toDDL}, `${p.name}` ${p.dataType.sql}",
+              s"PARTITIONED BY (`${p.name}`)")
           case None => (schemas(table).toDDL, "")
         }
         spark.sql(
@@ -1368,6 +1405,61 @@ object Warehouse {
     * absolute URI and its key map to the same key.
     */
   private[etl] def dvFileKey(path: Column): Column = substring_index(path, "/data/", -1)
+
+  /** ONE file index over several data dirs of a partitioned table, so
+    * a multi-dir read is one relation: one scan node, scan tasks packed
+    * across all dirs' files, and static and dynamic partition pruning
+    * over every dir. A multi-root `spark.read.parquet` cannot read such
+    * dirs: it unifies the partition structure across roots and fails
+    * with CONFLICTING_DIRECTORY_STRUCTURES for any two partitioned
+    * roots. So each root keeps its own [[InMemoryFileIndex]] discovery
+    * and the listings are concatenated; an empty append dir, which has
+    * no `<col>=` subdirs, lists nothing. Every root's discovery is handed the declared
+    * `partitionSchema`, so the roots can never disagree on the partition
+    * column's type, whatever inference would say. Listings share the
+    * session's file-status cache, as `spark.read` does; data dirs are
+    * immutable.
+    */
+  private[etl] final class DirsFileIndex(spark: SparkSession, dataSchema: StructType,
+                                         override val partitionSchema: StructType,
+                                         dirs: Seq[String]) extends FileIndex {
+    private val roots: Seq[InMemoryFileIndex] = {
+      val conf = spark.sessionState.newHadoopConf()
+      val cache = FileStatusCache.getOrCreate(spark)
+      dirs.map { d =>
+        val p = new org.apache.hadoop.fs.Path(d)
+        new InMemoryFileIndex(spark, Seq(p.getFileSystem(conf).makeQualified(p)),
+          Map.empty[String, String], Some(StructType(dataSchema ++ partitionSchema)), cache)
+      }
+    }
+
+    override def rootPaths: Seq[org.apache.hadoop.fs.Path] = roots.flatMap(_.rootPaths)
+    override def inputFiles: Array[String] = roots.flatMap(_.inputFiles).toArray
+    override def refresh(): Unit = roots.foreach(_.refresh())
+    override def sizeInBytes: Long = roots.map(_.sizeInBytes).sum
+
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      roots.flatMap { r =>
+        val listed = r.listFiles(partitionFilters, dataFilters)
+        if (r.partitionSchema.nonEmpty) listed
+        else {
+          // no partition subdirs: an empty append dir, which lists as
+          // one value-less directory
+          require(listed.forall(_.files.isEmpty),
+            s"${r.rootPaths.mkString} holds data files outside any partition dir")
+          Nil
+        }
+      }
+
+    // identity = the dirs scanned, as for InMemoryFileIndex: two reads
+    // of the same immutable dirs are the same relation
+    override def equals(other: Any): Boolean = other match {
+      case o: DirsFileIndex => rootPaths == o.rootPaths && partitionSchema == o.partitionSchema
+      case _ => false
+    }
+    override def hashCode(): Int = rootPaths.hashCode()
+  }
 
   /** Striped locks for [[Warehouse.readBucketedDir]]'s one-time
     * registration: first reads of different dirs rarely wait on each

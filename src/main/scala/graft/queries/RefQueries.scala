@@ -32,16 +32,11 @@ object RefQueries {
 
   val queries: Map[String, Q] = Map(
     "q_rep_fraud" -> ((s, _) => {
-      val fact = t(s, "fact_transactions")
-      val cards = t(s, "dim_cards")
-      val accounts = t(s, "dim_accounts")
-      val clients = t(s, "dim_clients")
-      val terminals = t(s, "dim_terminals")
-      val blacklist = t(s, "fact_blacklist")
-      Reports.fraudExpiredPassport(fact, cards, accounts, clients, blacklist,
-          Reports.Faithful)
-        .unionAll(Reports.fraudInactiveAccount(fact, cards, accounts, clients))
-        .unionAll(Reports.fraudCityHopping(fact, cards, terminals, accounts, clients))
+      // the nightly run's own report builder, so the oracle gates the
+      // plan `Pipeline.run` appends
+      Reports.fraudReports(t(s, "fact_transactions"), t(s, "dim_cards"),
+          t(s, "dim_accounts"), t(s, "dim_clients"), t(s, "dim_terminals"),
+          t(s, "fact_blacklist"), Reports.Faithful)
         .orderBy("event_type", "event_dt", "passport")
     }),
 

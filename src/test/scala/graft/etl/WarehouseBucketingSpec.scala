@@ -320,6 +320,78 @@ class WarehouseBucketingSpec extends AnyFunSuite {
     assertWholeDir(rewritten.head)
   }
 
+  test("a 3-bucket rewrite writes 3 bucket files in at most 3 tasks; 13 buckets hard-link") {
+    import spark.implicits._
+    val wh = new Warehouse(spark, Files.createTempDirectory("wh-bkt-tasks").toString)
+    val n = wh.bucketSpec("dim_clients")._2
+    val t0 = wh.begin()
+    t0.overwrite("dim_clients", snapshotWithProcessed(clientsDf((1 to 200).map(clientRow(_)))))
+    t0.commit()
+    val oldDir = wh.catalog()("dim_clients").head
+    val oldFiles = parquetFiles(oldDir)
+    assert(oldFiles.size == n, s"200 keys should fill all $n buckets")
+
+    // three changed keys in three different buckets
+    val bucketOfId = (1 to 200).map(i => f"C$i%03d").toDF("client_id")
+      .select(col("client_id"), Warehouse.bucketOf(Seq(col("client_id")), n))
+      .collect().map(r => r.getString(0) -> r.getInt(1))
+    val changed = bucketOfId.groupBy(_._2).values.map(_.head).take(3).toMap
+    assert(changed.size == 3)
+    val snap = clientsDf((1 to 200).map(i =>
+      clientRow(i, if (changed.contains(f"C$i%03d")) "+7 999" else "+7 000")))
+
+    val writeStages = stagesOf {
+      val txn = wh.begin()
+      Scd1.mergeAuditWarehouse(txn, "dim_clients", snapshotWithProcessed(snap),
+        Seq("client_id"), Schemas.dimCompareCols("dim_clients"), mar2, deletesVisible = true)
+      txn.commit()
+    }.filter(_._2 > 0L)
+    assert(writeStages.nonEmpty && writeStages.forall(_._1 <= 3),
+      s"the rewrite's write stage should run at most 3 tasks: $writeStages (tasks, records)")
+
+    val newDir = wh.catalog()("dim_clients").head
+    val newFiles = parquetFiles(newDir)
+    val (linked, written) = newFiles.partition { case (name, p) =>
+      oldFiles.get(name).exists(Files.isSameFile(p, _))
+    }
+    assert(written.size == 3 && linked.size == 13,
+      s"expected 3 written bucket files and 13 hard links, got ${written.keys} / ${linked.size}")
+    val bucketRe = """.*_(\d+)(?:\..*)?$""".r
+    assert(written.keys.map { case bucketRe(b) => b.toInt }.toSet == changed.values.toSet)
+    assert(wh.read("dim_clients").filter(col("phone") === "+7 999")
+      .select("client_id").as[String].collect().toSet == changed.keySet)
+  }
+
+  /** (tasks, records written) of every stage `body` completes, read
+    * through a SparkListener. A marker job after `body` flushes the
+    * listener queue: its end arrives after every earlier event.
+    */
+  private def stagesOf(body: => Unit): Seq[(Int, Long)] = {
+    import org.apache.spark.scheduler._
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val marker = "graft-stages-marker-" + java.util.UUID.randomUUID()
+    val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          markerJobs.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(e.jobId)) flushed.countDown()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.add((e.stageInfo.numTasks, e.stageInfo.taskMetrics.outputMetrics.recordsWritten))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(marker, "flush the listener queue")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never flushed")
+    } finally sc.removeSparkListener(listener)
+    stages.asScala.toSeq
+  }
+
   private def parquetFilesDeep(dir: String): Seq[Path] = {
     val st = Files.walk(Paths.get(dir))
     try st.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq

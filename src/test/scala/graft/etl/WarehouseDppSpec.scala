@@ -56,4 +56,38 @@ class WarehouseDppSpec extends AnyFunSuite {
       s"fact scan should carry a runtime partition filter:\n${plan.take(2000)}")
     assert(joined.count() == 40, "only the campaign day's facts should survive")
   }
+
+  test("the runtime partition filter reaches an uncompacted multi-dir fact scan") {
+    import spark.implicits._
+    val wh = new Warehouse(spark, Files.createTempDirectory("wh-dpp-dirs").toString)
+    def batch(ids: Range, day: Int) =
+      ids.map(i => (s"T$i", Timestamp.valueOf(f"2021-03-0$day 10:00:00"),
+          BigDecimal(i), s"K$i", "PAY", "OK", s"A$i"))
+        .toDF("trans_id", "trans_date", "amt", "card_num", "oper_type",
+          "oper_result", "terminal")
+    // three nightly appends, three dirs, read as they are: one scan
+    // over all of them carries the partition column
+    Seq((1 to 40, 1), (41 to 80, 2), (81 to 99, 3)).foreach { case (ids, day) =>
+      val t = wh.begin()
+      t.append("fact_transactions", batch(ids, day))
+      t.commit()
+    }
+    assert(wh.catalog()("fact_transactions").length == 3)
+
+    val calDir = Files.createTempDirectory("wh-dpp-dirs-cal").toString + "/calendar"
+    Seq(
+      (java.sql.Date.valueOf("2021-03-01"), "none"),
+      (java.sql.Date.valueOf("2021-03-02"), "campaign"),
+      (java.sql.Date.valueOf("2021-03-03"), "none"))
+      .toDF("dt", "tag").write.parquet(calDir)
+    val calendar = spark.read.parquet(calDir)
+
+    val fact = wh.readRaw("fact_transactions")
+    val joined = fact.join(calendar.filter(col("tag") === "campaign"),
+      fact("trans_dt") === calendar("dt"))
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(plan.contains("dynamicpruning"),
+      s"the multi-dir fact scan should carry a runtime partition filter:\n${plan.take(2000)}")
+    assert(joined.count() == 40, "only the campaign day's facts should survive")
+  }
 }
