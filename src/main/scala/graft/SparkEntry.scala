@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * hash-compares against at sf0.01.
   */
 object SparkEntry {
-  private val groups: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
+  private[graft] val groups: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
     Seq(
       (CoreQueries.queries, CoreQueries.oracles),
       (TextQueries.queries, TextQueries.oracles),
@@ -28,10 +28,20 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    groups.map(_._1).reduce(_ ++ _)
+    merged(groups.map(_._1))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    groups.map(_._2).reduce(_ ++ _)
+    merged(groups.map(_._2))
+
+  /** The groups' union; a name two groups define fails, naming it,
+    * instead of the later group silently shadowing the earlier one.
+    */
+  private def merged[V](maps: Seq[Map[String, V]]): Map[String, V] =
+    maps.reduce { (a, b) =>
+      val dup = a.keySet.intersect(b.keySet)
+      require(dup.isEmpty, s"defined by two query groups: ${dup.toSeq.sorted.mkString(", ")}")
+      a ++ b
+    }
 }

@@ -23,6 +23,8 @@ import graft.operators.MaterializedAgg.Measure
   * `_mv_coverage` file inside the view's data dir (underscore-prefixed
   * ⇒ invisible to parquet scans), written before the commit that
   * publishes the dir, so view rows and their provenance are atomic.
+  * It names the dirs as the catalog does (relative to the warehouse
+  * root), so a copied or moved root keeps its coverage.
   *
   * At 100 TB this is the difference between a nightly view rebuild
   * costing a full fact scan and costing one pass over the day's
@@ -42,22 +44,22 @@ object DeltaMv {
 
   private def coverageFile(dir: String): Path = Paths.get(dir, "_mv_coverage")
 
-  private[etl] def writeCoverage(dir: String, baseDirs: Seq[String]): Unit =
+  private def writeCoverage(wh: Warehouse, dir: String, baseDirs: Seq[String]): Unit =
     Files.write(coverageFile(dir),
-      baseDirs.sorted.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      baseDirs.map(wh.relativeDir).sorted.mkString("\n").getBytes(StandardCharsets.UTF_8))
 
-  private def coverageIn(mvDirs: Seq[String]): Set[String] =
+  private def coverageIn(wh: Warehouse, mvDirs: Seq[String]): Set[String] =
     mvDirs.flatMap { d =>
       val f = coverageFile(d)
       if (Files.exists(f))
         new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
-          .split("\n").filter(_.nonEmpty).toSeq
+          .split("\n").filter(_.nonEmpty).toSeq.map(wh.resolveDir)
       else Nil
     }.toSet
 
   /** Base dirs the committed view image incorporates. */
   def coverage(wh: Warehouse, mvTable: String): Set[String] =
-    coverageIn(wh.catalog().getOrElse(mvTable, Nil))
+    coverageIn(wh, wh.catalog().getOrElse(mvTable, Nil))
 
   /** Fold every base dir the view doesn't yet cover into it, inside
     * `txn` — cost tracks the DELTA. No-op when already current; full
@@ -66,7 +68,7 @@ object DeltaMv {
   def refresh(wh: Warehouse, txn: Txn, baseTable: String, mvTable: String,
               keys: Seq[String], measures: Seq[Measure]): Unit = {
     val baseDirs = txn.currentDirs(baseTable)
-    val covered = coverageIn(txn.currentDirs(mvTable))
+    val covered = coverageIn(wh, txn.currentDirs(mvTable))
     if (covered.isEmpty || (covered -- baseDirs.toSet).nonEmpty)
       txn.overwrite(mvTable,
         MaterializedAgg.aggregate(txn.read(baseTable), keys, measures))
@@ -88,7 +90,7 @@ object DeltaMv {
       txn.overwriteSlice(mvTable, slice, MaterializedAgg.refresh(
         slice.of(txn.read(mvTable)), deltaRows, keys, measures))
     }
-    writeCoverage(txn.currentDirs(mvTable).head, baseDirs)
+    writeCoverage(wh, txn.currentDirs(mvTable).head, baseDirs)
   }
 
   /** The exactly-current logical image of the base aggregate: stored

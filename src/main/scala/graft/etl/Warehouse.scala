@@ -69,6 +69,26 @@ import scala.jdk.CollectionConverters._
   * Note the layouts are not retro-fitted: a dir written
   * before its table had a `bucketSpec` entry must be rewritten
   * (`compact()`) before bucketed reads of it are sound.
+  *
+  * Catalog writes have two owners. [[swapCatalog]] is the only
+  * compare-and-swap retry loop: it maps the committed catalog to the
+  * next one and swaps it in iff the file still holds what it read,
+  * re-deriving on a lost race up to [[Warehouse.SwapAttempts]] times;
+  * [[Txn.commit]], [[cloneTable]], [[restore]] and the rewrite round
+  * call it. [[rewriteRound]] is the only compaction: it picks dirs from
+  * a catalog snapshot, rewrites them into one new dir and swaps that in
+  * for them. Compaction is one maintenance writer racing normal ones,
+  * so the round is STALE — abandoned (the orphan dir is vacuumed later)
+  * and re-run from a fresh snapshot, up to [[Warehouse.RewriteRounds]]
+  * times — when the table's deletion-vector entry moved (new tombstones
+  * name files of the merged dirs, which committing would resurrect) or
+  * any merged dir left the catalog (an overwrite retired it, which
+  * committing would fold back in). Dirs appended meanwhile stay
+  * referenced. Compare and swap run under one per-root JVM monitor, so
+  * in-process writers never both win; across processes there is no
+  * file CAS, so two compactions of one table still assume one
+  * maintenance writer per warehouse, like every file-based table format
+  * without a lock service.
   */
 class Warehouse(val spark: SparkSession, val root: String,
                 val schemas: Map[String, StructType] = Schemas.tables,
@@ -91,30 +111,32 @@ class Warehouse(val spark: SparkSession, val root: String,
   /** Committed catalog: table → data dirs, in append order. */
   def catalog(): Map[String, Seq[String]] = parseCatalogRaw(readCatalogRaw())
 
-  /** Raw catalog file content ("" = absent) — the CAS token every
-    * read-modify-retry loop compares through [[commitCatalogIf]]; one
-    * definition of the absent-file convention instead of four.
+  /** Raw catalog file content ("" = absent) — the token
+    * [[commitCatalogIf]] compares.
     */
   private[etl] def readCatalogRaw(): String =
     if (Files.exists(catalogPath)) Files.readString(catalogPath) else ""
 
-  /** Parse catalog file content, resolving its root-relative dirs
-    * against `root` (an absolute entry resolves to itself).
-    */
+  /** Parse catalog file content, resolving its root-relative dirs. */
   private[etl] def parseCatalogRaw(raw: String): Map[String, Seq[String]] =
     if (raw.isEmpty) Map.empty
-    else CatalogJson.parse(raw).map { case (t, ds) => t -> ds.map(rootPath.resolve(_).toString) }
+    else CatalogJson.parse(raw).map { case (t, ds) => t -> ds.map(resolveDir) }
 
-  /** Catalog file content for `entries`, dirs under `root` written
-    * relative to it.
-    */
   private def renderCatalog(entries: Map[String, Seq[String]]): String =
-    CatalogJson.render(entries.map { case (t, ds) =>
-      t -> ds.map { d =>
-        val p = Paths.get(d)
-        if (p.startsWith(rootPath)) rootPath.relativize(p).toString else d
-      }
-    })
+    CatalogJson.render(entries.map { case (t, ds) => t -> ds.map(relativeDir) })
+
+  /** A dir as stored metadata names it: relative to `root` when under
+    * it, so a copied or moved root stays whole.
+    */
+  private[etl] def relativeDir(dir: String): String = {
+    val p = Paths.get(dir)
+    if (p.startsWith(rootPath)) rootPath.relativize(p).toString else dir
+  }
+
+  /** A stored dir resolved against `root`; an absolute one resolves to
+    * itself.
+    */
+  private[etl] def resolveDir(stored: String): String = rootPath.resolve(stored).toString
 
   /** Read the committed image of a table (partition columns dropped —
     * the declared schema is the contract; also robust to all-empty data
@@ -285,60 +307,20 @@ class Warehouse(val spark: SparkSession, val root: String,
     * index ([[readSkipping]]; the sidecar is written as part of the
     * compaction). The Delta/Iceberg table-maintenance job: one
     * range-partitioned sort at write time, amortized over every
-    * subsequent scan. Same CAS commit discipline as [[compactOldest]]:
-    * dirs another writer appends during the (long) rewrite stay
-    * referenced; on persistent contention the rewrite is abandoned,
-    * never half-applied (the orphan dir is vacuumed later).
+    * subsequent scan. One [[rewriteRound]] over all the table's dirs.
     */
   def compactZOrdered(table: String, aCol: String, bCol: String,
                       files: Int, bits: Int = 16): Unit = {
     require(!bucketSpec.contains(table) && !partitionSpec.contains(table),
       s"z-order compaction applies to flat layouts; $table has a bucket/partition spec")
-    var rounds = 0
-    var committed = false
-    // outer loop: a concurrent deleteVectored during the rewrite means
-    // tombstones exist that name files this commit would retire — they
-    // cannot be folded in post-hoc, so the stale dir is abandoned (a
-    // safe no-op; vacuum reclaims it) and the REWRITE re-runs against
-    // the current DV set. Vectored deletes are normal writers (GDPR
-    // erasure), not the single 'maintenance' writer — losing them
-    // would silently resurrect deleted rows.
-    while (!committed && rounds < 3) {
-      val cat0 = catalog()
-      val old = cat0.getOrElse(table, Nil)
-      if (old.isEmpty) return
-      val dvOld = cat0.getOrElse(Warehouse.dvKey(table), Nil)
+    rewriteRound(table)(identity) { (old, dv) =>
       val dir = newDataDir(table)
       val schema = schemas(table)
       graft.operators.Layout.writeZOrdered(
-        readDirs(table, old, dvOld)
-          .select(schema.fieldNames.toIndexedSeq.map(col): _*),
+        readDirs(table, old, dv).select(schema.fieldNames.toIndexedSeq.map(col): _*),
         dir, aCol, bCol, files, bits)
       graft.sources.DataSkipping.writeSidecar(spark, dir)
-      compactionBarrier()
-      var attempts = 0
-      var stale = false
-      while (!committed && !stale && attempts < 5) {
-        val expected = readCatalogRaw()
-        val cat = parseCatalogRaw(expected)
-        val curDirs = cat.getOrElse(table, Nil)
-        // stale if the DV entry moved OR any merged dir left the
-        // catalog: an overwrite/deleteWhere rewrite committed during
-        // the merge REPLACES dirs, and filterNot would silently fold
-        // the pre-overwrite rows back in (resurrection + double count)
-        if (cat.getOrElse(Warehouse.dvKey(table), Nil) != dvOld ||
-            !old.forall(curDirs.contains)) stale = true
-        else {
-          val kept = curDirs.filterNot(old.toSet)
-          // the rewrite covered ALL dirs as of cat0 with dvOld applied,
-          // so the DV entry (unchanged since cat0 — checked above) is
-          // consumed by this commit
-          committed = commitCatalogIf(expected,
-            cat + (table -> (dir +: kept)) + (Warehouse.dvKey(table) -> Nil))
-          attempts += 1
-        }
-      }
-      rounds += 1
+      dir
     }
   }
 
@@ -351,65 +333,48 @@ class Warehouse(val spark: SparkSession, val root: String,
     * re-merged only when the dir count crosses the threshold again
     * (tiered-merge write amplification, the usual LSM trade).
     * [[Txn.commit]] invokes this automatically for any written table
-    * past `autoCompactThreshold` dirs.
-    *
-    * Concurrency: the catalog swap is a compare-and-swap on the catalog
-    * file's content — the read-modify-write is retried when a commit
-    * lands between the post-merge re-read and the swap, and the
-    * compaction ABORTS (a safe no-op: the merged dir is simply never
-    * referenced and the next `vacuum()` reclaims it) if the catalog
-    * keeps moving. The CAS closes the lost-update window down to the
-    * compare-vs-move race inside [[commitCatalogIf]]; full mutual
-    * exclusion (e.g. two compactions of the SAME table each committing a
-    * merged copy of the same rows) still assumes one maintenance writer
-    * per warehouse, same as every file-based table format without a
-    * lock service.
+    * past `autoCompactThreshold` dirs. One [[rewriteRound]]; the merge
+    * read applies outstanding deletion vectors, and tombstones naming
+    * merged files are dead afterwards (dropped at the next full
+    * overwrite or DV compaction, or here when `keep = 0`).
     */
-  def compactOldest(table: String, keep: Int = 16): Unit = {
-    var rounds = 0
-    var committed = false
-    // outer loop mirrors [[compactZOrdered]]: a vectored delete that
-    // lands DURING the merge write may tombstone rows of the very dirs
-    // being merged — the merge read applied only the DV set it started
-    // from, so committing would resurrect those rows. Detected via the
-    // DV entry in the CAS; the stale merged dir is abandoned (vacuumed
-    // later) and the merge re-runs against the current DV set.
-    while (!committed && rounds < 3) {
-      val cat0 = catalog()
-      val dirs = cat0.getOrElse(table, Nil)
-      if (dirs.length <= keep + 1) return
-      val dv0 = cat0.getOrElse(Warehouse.dvKey(table), Nil)
-      val (old, _) = dirs.splitAt(dirs.length - keep)
-      // outstanding DVs apply to the merge read, so tombstoned rows of
-      // the OLD dirs are materialized away; tombstones naming kept
-      // dirs' files stay live in the (unchanged) DV entry, and the
-      // now-dead tombstones naming merged files match nothing — they
-      // are dropped at the next full overwrite or DV compaction
-      val merged = writeDataDir(table, readDirs(table, old, dv0))
+  def compactOldest(table: String, keep: Int = 16): Unit =
+    rewriteRound(table)(dirs => if (dirs.length <= keep + 1) Nil else dirs.dropRight(keep)) {
+      (old, dv) => writeDataDir(table, readDirs(table, old, dv))
+    }
+
+  /** The one compaction round. `pick` chooses, from a catalog
+    * snapshot's dirs of `key`, the dirs to merge (none = nothing to
+    * do); `rewrite(dirs, dvDirs)` writes them, with the snapshot's
+    * deletion vectors applied, into one new dir it returns. The swap
+    * puts that dir in place of the merged ones, or abandons the round
+    * as stale (see the class doc) and re-runs it. When the rewrite
+    * consumed every dir the table had and a non-empty DV entry, the
+    * swap clears that entry: every tombstone was applied.
+    */
+  private def rewriteRound(key: String)(pick: Seq[String] => Seq[String])(
+      rewrite: (Seq[String], Seq[String]) => String): Unit = {
+    val dvKey = Warehouse.dvKey(key)
+    var round = 0
+    while (round < Warehouse.RewriteRounds) {
+      val snap = catalog()
+      val dirs = snap.getOrElse(key, Nil)
+      val old = pick(dirs)
+      if (old.isEmpty) return
+      val dv = snap.getOrElse(dvKey, Nil)
+      val merged = rewrite(old, dv)
       compactionBarrier()
-      // re-read the catalog AFTER the (long) merge write and replace only
-      // the `old` prefix — any dir another writer appended meanwhile
-      // stays referenced instead of being silently dropped
-      var attempts = 0
-      var stale = false
-      while (!committed && !stale && attempts < 5) {
-        val expected = readCatalogRaw()
-        val cat = parseCatalogRaw(expected)
-        val curDirs = cat.getOrElse(table, Nil)
-        // same staleness rule as [[compactZOrdered]]: a concurrent
-        // overwrite RETIRES dirs — if any merged-away dir is gone from
-        // the catalog, committing `merged` would resurrect its
-        // (replaced) rows alongside the overwrite's image
-        if (cat.getOrElse(Warehouse.dvKey(table), Nil) != dv0 ||
-            !old.forall(curDirs.contains)) stale = true
+      val clearDv = dv.nonEmpty && dirs.forall(old.contains)
+      val swapped = swapCatalog { cat =>
+        val cur = cat.getOrElse(key, Nil)
+        if (cat.getOrElse(dvKey, Nil) != dv || !old.forall(cur.contains)) None
         else {
-          val kept = curDirs.filterNot(old.toSet)
-          committed = commitCatalogIf(expected, cat + (table -> (merged +: kept)))
-          attempts += 1
+          val next = cat + (key -> (merged +: cur.filterNot(old.toSet)))
+          Some(if (clearDv) next + (dvKey -> Nil) else next)
         }
       }
-      rounds += 1
-      // on persistent contention the merge is abandoned, never half-applied
+      if (swapped.isDefined) return
+      round += 1
     }
   }
 
@@ -728,7 +693,11 @@ class Warehouse(val spark: SparkSession, val root: String,
     * retention contract; this is why vacuum keeps dirs referenced by
     * RETAINED versions, not just the current catalog).
     */
-  def restore(version: Long): Unit = commitCatalog(catalogAsOf(version))
+  def restore(version: Long): Unit = {
+    val target = catalogAsOf(version)
+    swapCatalog(_ => Some(target)).getOrElse(throw new java.util.ConcurrentModificationException(
+      s"restore($version): catalog kept moving; retry"))
+  }
 
   /** ZERO-COPY CLONE: `dst` becomes a table whose catalog entry points
     * at `src`'s CURRENT data dirs — no bytes move (Delta's SHALLOW
@@ -749,21 +718,10 @@ class Warehouse(val spark: SparkSession, val root: String,
       s"clone destination '$dst' must be registered in schemas")
     require(schemas(dst) == schemas(src),
       s"clone destination '$dst' must share '$src' schema")
-    // CAS-retry like every other mutator: a blind read-modify-write
-    // would silently clobber a commit that lands between catalog() and
-    // the swap, resetting that writer's tables to pre-commit dirs
-    var attempts = 0
-    var done = false
-    while (!done && attempts < 8) {
-      val expected = readCatalogRaw()
-      val cat = parseCatalogRaw(expected)
-      done = commitCatalogIf(expected,
-        cat + (dst -> cat.getOrElse(src, Nil)) +
-          (Warehouse.dvKey(dst) -> cat.getOrElse(Warehouse.dvKey(src), Nil)))
-      attempts += 1
-    }
-    if (!done) throw new java.util.ConcurrentModificationException(
-      s"cloneTable($src, $dst): catalog kept moving; retry")
+    swapCatalog(cat => Some(cat + (dst -> cat.getOrElse(src, Nil)) +
+        (Warehouse.dvKey(dst) -> cat.getOrElse(Warehouse.dvKey(src), Nil))))
+      .getOrElse(throw new java.util.ConcurrentModificationException(
+        s"cloneTable($src, $dst): catalog kept moving; retry"))
   }
 
   /** SNAPSHOT DIFF — CDC extraction between two committed versions:
@@ -786,33 +744,25 @@ class Warehouse(val spark: SparkSession, val root: String,
     ChangeFeed.diffStruct(readAsOf(table, fromVersion),
       readAsOf(table, toVersion), keys)
 
-  /** Merge a DV key's many delete-sized dirs into one (same CAS retry
-    * discipline as [[compactOldest]]). Dead tombstones — paths naming
-    * files no catalog references anymore — survive the merge as
+  /** Merge a DV key's many delete-sized dirs into one
+    * ([[rewriteRound]]; a DV key has no DV entry of its own, so only a
+    * merged dir leaving the catalog — an overwrite of the table clearing
+    * its tombstones — makes the round stale). Dead tombstones — paths
+    * naming files no catalog references anymore — survive the merge as
     * harmless non-matching rows; full overwrites clear them wholesale.
     * Invoked by [[Txn.commit]] when a table's DV dir count crosses the
     * auto-compact threshold.
     */
-  private[etl] def compactDvKey(key: String): Unit = {
-    val dirs = catalog().getOrElse(key, Nil)
-    if (dirs.length > 1) {
+  private[etl] def compactDvKey(key: String): Unit =
+    rewriteRound(key)(dirs => if (dirs.length > 1) dirs else Nil) { (dirs, _) =>
       val merged = newDataDir(key)
       readDvDirs(dirs).distinct().write.parquet(merged)
-      var attempts = 0
-      var done = false
-      while (!done && attempts < 5) {
-        val expected = readCatalogRaw()
-        val cat = parseCatalogRaw(expected)
-        val kept = cat.getOrElse(key, Nil).filterNot(dirs.toSet)
-        done = commitCatalogIf(expected, cat + (key -> (merged +: kept)))
-        attempts += 1
-      }
+      merged
     }
-  }
 
   /** Test seam: invoked between a compaction's (long) rewrite and its
-    * CAS loop — the exact window where a concurrent writer's commit
-    * races the maintenance job. Production no-op.
+    * swap — the exact window where a concurrent writer's commit races
+    * the maintenance job. Production no-op.
     */
   protected def compactionBarrier(): Unit = ()
 
@@ -825,18 +775,10 @@ class Warehouse(val spark: SparkSession, val root: String,
 
   /** Conditional catalog swap: only commit if the file still holds
     * `expected` (empty string = file absent). Returns false — without
-    * writing — on mismatch, so callers can re-derive their update from
-    * the fresh content and retry.
-    *
-    * ATOMICITY: compare and swap run under the per-root JVM monitor
-    * ([[Warehouse.commitLockFor]] — shared by every instance over the
-    * same root), so IN-PROCESS concurrent writers — the Spark-driver
-    * reality, and what MaintenanceChaosSpec races — can never both
-    * pass the compare and silently clobber the first committer (a
-    * lost delete-vector entry, pre-fix, was exactly that: caught as a
-    * once-in-many-runs chaos flake under full-suite GC pressure).
-    * ACROSS processes no OS-level file CAS exists; that residual
-    * window is the documented single-maintenance-writer contract.
+    * writing — on mismatch. Compare and swap run under the per-root JVM
+    * monitor ([[Warehouse.commitLockFor]], shared by every instance over
+    * the same root), so in-process concurrent writers can never both
+    * pass the compare (MaintenanceChaosSpec races them).
     */
   private[etl] def commitCatalogIf(expected: String,
                                    entries: Map[String, Seq[String]]): Boolean =
@@ -845,6 +787,27 @@ class Warehouse(val spark: SparkSession, val root: String,
       if (current != expected) false
       else { casBarrier(); commitCatalog(entries); true }
     }
+
+  /** The one compare-and-swap retry loop (see the class doc): read the
+    * committed catalog, map it through `update`, swap the result in iff
+    * the file is unchanged, else re-read and re-derive, at most
+    * [[Warehouse.SwapAttempts]] times. `update` returns None to abandon
+    * and may throw to fail the writer. Returns the catalog swapped in;
+    * None when abandoned or out of attempts.
+    */
+  private[etl] def swapCatalog(update: Map[String, Seq[String]] => Option[Map[String, Seq[String]]])
+      : Option[Map[String, Seq[String]]] = {
+    var attempt = 0
+    while (attempt < Warehouse.SwapAttempts) {
+      val expected = readCatalogRaw()
+      update(parseCatalogRaw(expected)) match {
+        case None => return None
+        case Some(next) => if (commitCatalogIf(expected, next)) return Some(next)
+      }
+      attempt += 1
+    }
+    None
+  }
 }
 
 /** One run's transaction: reads see committed state plus this txn's own
@@ -1241,8 +1204,8 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     * auto-compact threshold gets its oldest dirs merged (amortized
     * maintenance — runs of ordinary length never pay it).
     *
-    * CONCURRENT WRITERS: the swap is a CAS-retry MERGE over the
-    * current committed catalog — `cat ++ pending`, not
+    * CONCURRENT WRITERS: the [[Warehouse.swapCatalog]] update is a
+    * MERGE over the current committed catalog — `cat ++ pending`, not
     * `snapshot ++ pending` — so two transactions committing DISJOINT
     * table sets both survive in any interleaving (the later commit
     * carries the earlier one's entries forward instead of resetting
@@ -1267,11 +1230,7 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
         Seq(k, k.stripPrefix(Warehouse.DvPrefix))
       else Seq(k, Warehouse.dvKey(k))
     }.toSet
-    var attempts = 0
-    var done = false
-    while (!done && attempts < 8) {
-      val expected = wh.readCatalogRaw()
-      val cat = wh.parseCatalogRaw(expected)
+    val after = wh.swapCatalog { cat =>
       val conflicts = guarded.filter(k =>
         cat.getOrElse(k, Nil) != snapshot.getOrElse(k, Nil))
       if (conflicts.nonEmpty)
@@ -1279,17 +1238,14 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
           s"commit conflict: ${conflicts.toSeq.sorted.mkString(", ")} " +
             "moved since this transaction began (first committer wins; " +
             "retry the transaction from a fresh begin())")
-      done = wh.commitCatalogIf(expected, cat ++ written)
-      attempts += 1
-    }
-    if (!done)
-      throw new java.util.ConcurrentModificationException(
-        "commit contention: catalog kept moving under unrelated commits; retry")
+      Some(cat ++ written)
+    }.getOrElse(throw new java.util.ConcurrentModificationException(
+      "commit contention: catalog kept moving under unrelated commits; retry"))
     committed = true
     // the commit above is durable at this point: a compaction failure is a
     // maintenance problem (stale dir layout), never a commit failure
     written.foreach { case (t, _) =>
-      if (wh.catalog().getOrElse(t, Nil).length > wh.autoCompactThreshold)
+      if (after.getOrElse(t, Nil).length > wh.autoCompactThreshold)
         try {
           if (t.startsWith(Warehouse.DvPrefix)) wh.compactDvKey(t)
           else wh.compactOldest(t, keep = math.max(1, wh.autoCompactThreshold / 4))
@@ -1313,6 +1269,16 @@ object Warehouse {
     * this may be an in-flight writer's not-yet-committed output.
     */
   val DefaultVacuumGraceMs: Long = 15L * 60 * 1000
+
+  /** Compare-and-swap attempts of [[Warehouse.swapCatalog]] before it
+    * gives up on a catalog that keeps moving.
+    */
+  private[etl] val SwapAttempts = 8
+
+  /** Rewrite rounds of [[Warehouse.rewriteRound]] before a compaction
+    * that keeps going stale is abandoned.
+    */
+  private[etl] val RewriteRounds = 3
 
   /** Per-root commit monitors: every Warehouse instance over the same
     * (normalized) root shares one, so in-process concurrent writers'

@@ -104,17 +104,16 @@ object TextQueries {
     "bandhist" -> StructType(Seq(
       StructField("bn", LongType), StructField("k", LongType))))
 
-  /** The change log `q_stream_dedup` and `q_stream_census` drain:
-    * documents arrive across 3 commits (insert wave, delete wave, a
-    * text UPDATE on the %5==2 slice); the store warehouse holds the
-    * signature store `sigstore` — bucketed by the store key (r14): per
-    * micro-batch the consumer rewrites only the buckets the churn
-    * touches — plus, for a `census`, the band census tables. Returns
-    * the document schema, the log dir, the store warehouse and a
-    * checkpoint dir.
+  /** The change log `q_stream_census` drains: documents arrive across
+    * 3 commits (insert wave, delete wave, a text UPDATE on the %5==2
+    * slice); the store warehouse holds the signature store `sigstore`
+    * — bucketed by the store key (r14): per micro-batch the consumer
+    * rewrites only the buckets the churn touches — plus the band census
+    * tables. Returns the document schema, the log dir, the store
+    * warehouse and a checkpoint dir.
     */
-  private def docsChangeLog(s: SparkSession, dir: String, tag: String,
-                            census: Boolean): (StructType, String, Warehouse, String) = {
+  private def docsChangeLog(s: SparkSession, dir: String,
+                            tag: String): (StructType, String, Warehouse, String) = {
     val d = Tables(s, dir, "documents").select("doc_id", "text")
     val finalImg = d.withColumn("text",
       when(col("doc_id") % 5 === 2, concat(col("text"), lit(" changed v3")))
@@ -125,7 +124,7 @@ object TextQueries {
       (0 until 8).map(j => StructField(s"m$j", LongType)))
     val (logDir, storeWh, ckpt) = ChangeLogFixture(s, tag, "docs", "doc_id",
       Seq(d.limit(0), v1, v2, finalImg),
-      ("sigstore" -> storeSchema) +: (if (census) bandCensusTables else Nil),
+      ("sigstore" -> storeSchema) +: bandCensusTables,
       Map("sigstore" -> ("doc_id", 8), "bandcounts" -> ("bkey", 8)))
     (d.schema, logDir, storeWh, ckpt)
   }
@@ -571,22 +570,9 @@ object TextQueries {
         .orderBy("doc_a", "doc_b")
     }),
 
-    // STREAMED signature-store maintenance, e2e: documents arrive
-    // across 3 warehouse commits (insert wave, delete wave, a text
-    // UPDATE on the %5==2 slice), the change log drives
-    // StreamingOps.changeFeedSignatureStore — deletes/updates drop
-    // store rows, arrivals sign and append. The oracle recomputes the
-    // MinHash store COLD from the final image, so the hash certifies
-    // streamed-maintenance ≡ cold-rebuild (and that updates re-sign).
-    "q_stream_dedup" -> ((s, dir) => {
-      val (docSchema, logDir, storeWh, ckpt) = docsChangeLog(s, dir, "sdd", census = false)
-      StreamingOps.changeFeedSignatureStore(s, storeWh, "sigstore",
-        docSchema, n = 3, logDir, ckpt)
-      storeWh.read("sigstore").orderBy("doc_id")
-    }),
-
-    // MAINTAINED band census, e2e (r14): the same 3-commit document
-    // evolution drives StreamingOps.changeFeedSignatureStoreCensus,
+    // MAINTAINED band census, e2e (r14): a 3-commit document
+    // evolution (insert wave, delete wave, a text UPDATE on the %5==2
+    // slice) drives StreamingOps.changeFeedSignatureStoreCensus,
     // which keeps the per-bucket band counts (bucketed by bkey) and the
     // bucket-size histogram in the SAME txn as the signature store —
     // the cap derivation for incremental near-dup then never aggregates
@@ -595,7 +581,7 @@ object TextQueries {
     // so the hash certifies maintained-census ≡ cold-census through
     // inserts, deletes, and updates.
     "q_stream_census" -> ((s, dir) => {
-      val (docSchema, logDir, storeWh, ckpt) = docsChangeLog(s, dir, "scn", census = true)
+      val (docSchema, logDir, storeWh, ckpt) = docsChangeLog(s, dir, "scn")
       StreamingOps.changeFeedSignatureStoreCensus(s, storeWh, "sigstore",
         "bandcounts", "bandhist", docSchema, n = 3, logDir, ckpt)
       storeWh.read("bandhist").orderBy("bn")
@@ -803,8 +789,8 @@ object TextQueries {
     * (toks → rolling-hash word grams → per-permutation mins), ending
     * in `sig(doc_id, m0..m7)` — exactly the
     * [[graft.operators.Dedup.signatureStore]] artifact, shared by the
-    * banded-candidate chain below and q_stream_dedup's cold-rebuild
-    * oracle so the stored-store gate and the pair gates cannot drift.
+    * banded-candidate chain below and q_stream_census's cold census
+    * oracle so the stored-census gate and the pair gates cannot drift.
     */
   private def wordGramSigCte(n: Int = 3): String = {
     val p = "1000000007"
@@ -1833,18 +1819,6 @@ object TextQueries {
         |WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR) || ':temp'), 1, 8))::BIGINT % 10000
         |      < r.rate_bp
         |ORDER BY d.doc_id""".stripMargin,
-
-    // cold rebuild of the MinHash signature store over the FINAL
-    // document image (the %5==2 slice carries its v3-updated text) —
-    // the streamed maintenance must land exactly here
-    "q_stream_dedup" ->
-      s"""WITH docs AS (
-         |  SELECT doc_id,
-         |    text || CASE WHEN doc_id % 5 = 2 THEN ' changed v3' ELSE '' END AS text
-         |  FROM documents),
-         |${wordGramSigCte(3)}
-         |SELECT doc_id, m0, m1, m2, m3, m4, m5, m6, m7
-         |FROM sig ORDER BY doc_id""".stripMargin,
 
     // cold band-census histogram over the final image's signature
     // store: 4 bands per doc (bkey = band_id | m2b : m2b+1), bucket

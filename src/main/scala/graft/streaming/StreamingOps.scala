@@ -370,31 +370,8 @@ object StreamingOps {
     * spec-asserted.
     */
   def streamingNearDupFilter(docs: DataFrame, maxHamming: Int = 3,
-                             maxBucket: Int = 256): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val sp = docs.sparkSession
-    import sp.implicits._
-    val sig = docs
-      .filter(size(filter(split(lower(col("text")), "\\s+"), w => w =!= "")) > 0)
-      .select(col("doc_id"),
-        graft.functions.QSimHash.sigCol(lower(col("text"))).as("simhash"))
-      .withColumn("hi", expr("CAST(conv(substring(simhash, 1, 32), 2, 10) AS BIGINT)"))
-      .withColumn("lo", expr("CAST(conv(substring(simhash, 33, 32), 2, 10) AS BIGINT)"))
-    // bands keyed by VALUE alone (no position), mirroring the batch
-    // path: cross-position collisions only add candidates, and a
-    // ≤3-Hamming pair that collides anywhere must be found to match
-    // the batch pair set exactly
-    sig.select(col("doc_id"), col("hi"), col("lo"),
-        explode(array((0 until 4).map(k =>
-          substring(col("simhash"), 1 + 16 * k, 16)): _*)).as("band"))
-      .as[(Long, Long, Long, String)]
-      .groupByKey(_._4)
-      .flatMapGroupsWithState[Seq[(Long, Long, Long)], (Long, Long, Int)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        StreamingOps.nearDupBucketFn(maxHamming, maxBucket))
-      .toDF("doc_a", "doc_b", "hamming")
-      .dropDuplicates("doc_a", "doc_b")
-  }
+                             maxBucket: Int = 256): DataFrame =
+    nearDupFilter(docs, None, maxHamming, maxBucket)
 
   /** [[streamingNearDupFilter]] with EVENT-TIME STATE EVICTION — the
     * unbounded-stream form. Input must carry an event-time `ts` column;
@@ -410,31 +387,51 @@ object StreamingOps {
   def streamingNearDupFilterTtl(docs: DataFrame, ttlMs: Long,
                                 lateness: String = "1 second",
                                 maxHamming: Int = 3,
-                                maxBucket: Int = 256): DataFrame = {
+                                maxBucket: Int = 256): DataFrame =
+    nearDupFilter(docs, Some((ttlMs, lateness)), maxHamming, maxBucket)
+
+  /** Both near-dup filters: SimHash each doc, split it into `hi`/`lo`
+    * and 4 band values, and fold each band bucket's members in state.
+    * `ttl = Some((ttlMs, lateness))` reads the docs' `ts`, watermarks it
+    * and times buckets out; without it `ts` is null and state never
+    * times out.
+    */
+  private def nearDupFilter(docs: DataFrame, ttl: Option[(Long, String)],
+                            maxHamming: Int, maxBucket: Int): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val sp = docs.sparkSession
     import sp.implicits._
+    val ts = if (ttl.isDefined) col("ts") else lit(null).cast("timestamp")
     val sig = docs
       .filter(size(filter(split(lower(col("text")), "\\s+"), w => w =!= "")) > 0)
-      .select(col("doc_id"), col("ts"),
+      .select(col("doc_id"), ts.as("ts"),
         graft.functions.QSimHash.sigCol(lower(col("text"))).as("simhash"))
       .withColumn("hi", expr("CAST(conv(substring(simhash, 1, 32), 2, 10) AS BIGINT)"))
       .withColumn("lo", expr("CAST(conv(substring(simhash, 33, 32), 2, 10) AS BIGINT)"))
-    sig.select(col("doc_id"), col("hi"), col("lo"), col("ts"),
-        explode(array((0 until 4).map(k =>
-          substring(col("simhash"), 1 + 16 * k, 16)): _*)).as("band"))
-      .withWatermark("ts", lateness)
+    // bands keyed by VALUE alone (no position), mirroring the batch
+    // path: cross-position collisions only add candidates, and a
+    // ≤3-Hamming pair that collides anywhere must be found to match
+    // the batch pair set exactly
+    val bands = sig.select(col("doc_id"), col("hi"), col("lo"), col("ts"),
+      explode(array((0 until 4).map(k =>
+        substring(col("simhash"), 1 + 16 * k, 16)): _*)).as("band"))
+    ttl.fold(bands) { case (_, lateness) => bands.withWatermark("ts", lateness) }
       .as[(Long, Long, Long, java.sql.Timestamp, String)]
       .groupByKey(_._5)
       .flatMapGroupsWithState[Seq[(Long, Long, Long)], (Long, Long, Int)](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        StreamingOps.nearDupBucketTtlFn(maxHamming, maxBucket, ttlMs))
+        OutputMode.Append(),
+        if (ttl.isDefined) GroupStateTimeout.EventTimeTimeout() else GroupStateTimeout.NoTimeout())(
+        StreamingOps.nearDupBucketFn(maxHamming, maxBucket, ttl.map(_._1)))
       .toDF("doc_a", "doc_b", "hamming")
       .dropDuplicates("doc_a", "doc_b")
   }
 
-  private[streaming] def nearDupBucketTtlFn(maxHamming: Int, maxBucket: Int,
-                                            ttlMs: Long):
+  /** Per-bucket state fold of [[nearDupFilter]] — static so the closure
+    * serializes without capturing the enclosing session. With `ttlMs`,
+    * a timed-out bucket drops its state and a live one is retained
+    * `ttlMs` past its newest event.
+    */
+  private[streaming] def nearDupBucketFn(maxHamming: Int, maxBucket: Int, ttlMs: Option[Long]):
       (String, Iterator[(Long, Long, Long, java.sql.Timestamp, String)],
        org.apache.spark.sql.streaming.GroupState[Seq[(Long, Long, Long)]])
         => Iterator[(Long, Long, Int)] = {
@@ -453,6 +450,9 @@ object StreamingOps {
                 out += ((math.min(sid, id), math.max(sid, id), d))
             }
           }
+          // membership check: a doc whose signature repeats a band value
+          // hits this group twice — storing it twice would waste bucket
+          // capacity and double-emit its matches
           if (seen.size < maxBucket && !seen.exists(_._1 == id))
             seen = seen :+ ((id, hi, lo))
         }
@@ -461,40 +461,12 @@ object StreamingOps {
         // clamped past the watermark: a bucket fed only LATE rows (the
         // engine delivers them to the state fn regardless) would
         // otherwise compute a timeout the API rejects and kill the query
-        val maxTs = rows.map(_._4.getTime).max
-        val floor = state.getCurrentWatermarkMs() + 1
-        state.setTimeoutTimestamp(math.max(maxTs + ttlMs, floor))
+        ttlMs.foreach { t =>
+          val maxTs = rows.map(_._4.getTime).max
+          state.setTimeoutTimestamp(math.max(maxTs + t, state.getCurrentWatermarkMs() + 1))
+        }
         out.iterator
       }
-  }
-
-  /** Per-bucket state fold for [[streamingNearDupFilter]] — static so
-    * the closure serializes without capturing the enclosing session.
-    */
-  private[streaming] def nearDupBucketFn(maxHamming: Int, maxBucket: Int):
-      (String, Iterator[(Long, Long, Long, String)],
-       org.apache.spark.sql.streaming.GroupState[Seq[(Long, Long, Long)]])
-        => Iterator[(Long, Long, Int)] = {
-    (_, it, state) =>
-      var seen = state.getOption.getOrElse(Seq.empty)
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-      it.toSeq.sortBy(_._1).foreach { case (id, hi, lo, _) =>
-        seen.foreach { case (sid, shi, slo) =>
-          if (sid != id) {
-            val d = java.lang.Long.bitCount(hi ^ shi) +
-              java.lang.Long.bitCount(lo ^ slo)
-            if (d <= maxHamming)
-              out += ((math.min(sid, id), math.max(sid, id), d))
-          }
-        }
-        // membership check: a doc whose signature repeats a band value
-        // hits this group twice — storing it twice would waste bucket
-        // capacity and double-emit its matches
-        if (seen.size < maxBucket && !seen.exists(_._1 == id))
-          seen = seen :+ ((id, hi, lo))
-      }
-      state.update(seen)
-      out.iterator
   }
 
   /** STREAMING funnel progression — the continuous twin of

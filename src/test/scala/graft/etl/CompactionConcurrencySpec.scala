@@ -126,6 +126,50 @@ class CompactionConcurrencySpec extends AnyFunSuite {
     assert(wh.catalog()("t").length == 4, "1 merged + 2 kept + 1 appended")
   }
 
+  test("a DV compaction whose DV dirs a concurrent overwrite retired publishes nothing") {
+    import spark.implicits._
+    val wh = new BarrierWarehouse(
+      Files.createTempDirectory("wh-cc-dv").toString, Map("t" -> schemaT))({ w =>
+      val t = w.begin()
+      t.overwrite("t", Seq((100L, "fresh")).toDF("id", "v"))
+      t.commit()
+    })
+    val t0 = wh.begin()
+    t0.overwrite("t", (1L to 6L).map(i => (i, s"a$i")).toDF("id", "v"))
+    t0.commit()
+    Seq(2L, 4L).foreach { i =>
+      val t = wh.begin()
+      assert(t.deleteVectored("t", col("id") === i) == 1L)
+      t.commit()
+    }
+    assert(wh.catalog()(Warehouse.dvKey("t")).length == 2)
+    wh.compactDvKey(Warehouse.dvKey("t"))
+    assert(wh.fired == 1, "the concurrent overwrite must have fired inside the race window")
+    assert(wh.catalog().getOrElse(Warehouse.dvKey("t"), Nil).isEmpty,
+      "the overwrite cleared the tombstones; the merged DV dir must not re-publish them")
+    assert(wh.read("t").as[(Long, String)].collect().toSet == Set((100L, "fresh")))
+  }
+
+  test("compactOldest(keep = 0) consumes the DV entry like compactZOrdered") {
+    import spark.implicits._
+    val wh = new BarrierWarehouse(
+      Files.createTempDirectory("wh-cc-keep0").toString, Map("t" -> schemaT))(_ => ())
+    (1L to 4L).foreach { i =>
+      val t = wh.begin()
+      t.append("t", Seq((i, s"a$i")).toDF("id", "v"))
+      t.commit()
+    }
+    val t1 = wh.begin()
+    assert(t1.deleteVectored("t", col("id") === 3L) == 1L)
+    t1.commit()
+    wh.compactOldest("t", keep = 0)
+    assert(wh.fired == 1)
+    assert(wh.catalog()("t").length == 1, "every dir merges into one")
+    assert(wh.catalog().getOrElse(Warehouse.dvKey("t"), Nil).isEmpty,
+      "the rewrite applied every tombstone — DV entry consumed")
+    assert(wh.read("t").select("id").as[Long].collect().toSet == Set(1L, 2L, 4L))
+  }
+
   test("without contention both compactions commit first pass (no behavior change)") {
     import spark.implicits._
     val wh = new BarrierWarehouse(

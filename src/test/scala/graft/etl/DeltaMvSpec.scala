@@ -154,6 +154,44 @@ class DeltaMvSpec extends AnyFunSuite {
     assert(DeltaMv.coverage(wh, "mv") == wh.catalog()("t").toSet)
   }
 
+  test("a copied root keeps its coverage: refresh folds only the delta") {
+    import java.nio.file.{Path, Paths}
+    import scala.jdk.CollectionConverters._
+    def walk(p: Path): Seq[Path] = {
+      val st = Files.walk(p)
+      try st.iterator().asScala.toSeq finally st.close()
+    }
+    def fileKeys(dir: String): Set[AnyRef] =
+      walk(Paths.get(dir)).filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(p => Files.readAttributes(p,
+          classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()).toSet
+    def bucketedWh(root: String) = new Warehouse(spark, root,
+      Map("t" -> schema, "mv" -> mvSchema), partitionSpec = Map.empty,
+      bucketSpec = Map("mv" -> ("g", 4)))
+
+    val src = Files.createTempDirectory("deltamv-copy-src")
+    val wh = bucketedWh(src.toString)
+    append(wh, (0 until 8).map(i => (s"g$i", i.toLong)))
+    doRefresh(wh)
+    val dst = Files.createTempDirectory("deltamv-copy-dst").resolve("copy")
+    walk(src).foreach(p => Files.copy(p, dst.resolve(src.relativize(p).toString)))
+    walk(src).reverse.foreach(Files.delete)
+
+    val copy = bucketedWh(dst.toString)
+    assert(DeltaMv.coverage(copy, "mv").subsetOf(copy.catalog()("t").toSet),
+      s"coverage must name the copy's base dirs: ${DeltaMv.coverage(copy, "mv")}")
+    append(copy, Seq(("g0", 100L)))
+    val viewBefore = fileKeys(copy.catalog()("mv").head)
+    doRefresh(copy)
+    assert(viewRows(copy) == (0 until 8).map(i =>
+      s"g$i" -> (if (i == 0) (2L, 100L) else (1L, i.toLong))).toMap)
+    // a delta fold rewrites only g0's bucket and hard-links the rest; a
+    // full recompute would rewrite every bucket
+    assert(fileKeys(copy.catalog()("mv").head).intersect(viewBefore).nonEmpty,
+      "untouched view buckets must carry over from the covered view")
+    assert(DeltaMv.coverage(copy, "mv") == copy.catalog()("t").toSet)
+  }
+
   test("bucketed view: a delta refresh rewrites only the buckets its keys " +
     "hash to; untouched buckets hard-link byte-identically") {
     import java.nio.file.{Files => JFiles, Path, Paths}
