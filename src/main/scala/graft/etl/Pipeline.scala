@@ -142,19 +142,16 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
     // defenses compose:
     //  - Bloom prune BELOW the join (graft.operators.BloomJoin): one
     //    filter built from the day's staging keys (ONE small-side
-    //    action, reused across every fact dir), so fact ids that cannot
-    //    match die in the scan stage. Identical results — no false
-    //    negatives (replay-verified).
+    //    action), so fact ids that cannot match die in the scan stage.
+    //    Identical results — no false negatives (replay-verified).
     //  - bucketed layout (Warehouse.defaultBuckets): fact dirs are
-    //    bucketed by the dedup key, and `stg ANTI (d₁ ∪ d₂ ∪ …)` is
-    //    rewritten as the cascade `((stg ANTI d₁) ANTI d₂) …` — each
-    //    dir is its own bucketed scan carrying HashPartitioning(key, n),
-    //    so the plan has ZERO fact-side ShuffleExchange (spec-gated);
-    //    the delta exchanges once into the bucket layout and its
-    //    partitioning is preserved through the whole cascade. This is
-    //    what keeps the big-delta regime safe: when the Bloom auto-sizer
-    //    declines (too many staging keys to filter profitably), an
-    //    unbucketed plan would shuffle the FULL 100 TB fact id set.
+    //    bucketed by the dedup key, and all of them are read as ONE
+    //    bucketed scan carrying HashPartitioning(key, n), so the plan
+    //    has ZERO fact-side ShuffleExchange (spec-gated); only the delta
+    //    exchanges, once, into the bucket layout. This is what keeps the
+    //    big-delta regime safe: when the Bloom auto-sizer declines (too
+    //    many staging keys to filter profitably), an unbucketed plan
+    //    would shuffle the FULL 100 TB fact id set.
     def appendFact(fact: String, stg: String, id: String): (String, () => Unit) =
       fact -> (() => txn.append(fact, freshFactRows(txn, fact, stg, id)))
     Pipeline.concurrently(merges ++ Seq(
@@ -164,14 +161,7 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
 
     // ---- level 3, reports (K10): the three reports appended as ONE
     // write, no dedup (reruns duplicate rows, as in the reference)
-    val fact = txn.read("fact_transactions")
-    val cards = txn.read("dim_cards")
-    val accounts = txn.read("dim_accounts")
-    val clients = txn.read("dim_clients")
-    val terminals = txn.read("dim_terminals")
-    val blacklist = txn.read("fact_blacklist")
-    txn.append("rep_fraud",
-      Reports.fraudReports(fact, cards, accounts, clients, terminals, blacklist, mode))
+    txn.append("rep_fraud", reportRows(txn))
 
     // ---- K11: one atomic commit, then (and only then) archive inputs
     txn.commit()
@@ -186,6 +176,18 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
   private[etl] def freshFactRows(txn: Txn, fact: String, stg: String,
                                  id: String): DataFrame =
     Pipeline.freshAgainstTable(txn, fact, txn.read(stg), id)
+
+  /** The level-3 rows: the three fraud reports ([[Reports.fraudReports]])
+    * over the dims and facts this txn sees, each read as a plain,
+    * file-packed scan: no report joins on a bucket key, and report №3's
+    * window above broadcast joins would otherwise keep bucketed scans of
+    * the fact and of two dims, at one task per bucket. Exposed at class
+    * level so the plan-shape spec can gate the runtime plan directly.
+    */
+  private[etl] def reportRows(txn: Txn): DataFrame =
+    Reports.fraudReports(txn.readPlain("fact_transactions"), txn.readPlain("dim_cards"),
+      txn.readPlain("dim_accounts"), txn.readPlain("dim_clients"),
+      txn.readPlain("dim_terminals"), txn.readPlain("fact_blacklist"), mode)
 }
 
 object Pipeline {
@@ -211,23 +213,15 @@ object Pipeline {
 
   /** The rows of `batch` whose `id` is NOT already in `fact` — the K8
     * dedup plan, reusable against any incoming frame (nightly staging
-    * or a streaming micro-batch): a batch-sized Bloom filter prunes
-    * each fact dir's id scan BELOW the anti-join, and the anti-joins
-    * chain PER DIR so a bucketed fact contributes zero fact-side
-    * Exchange.
+    * or a streaming micro-batch): ONE anti-join against ONE scan of all
+    * of `fact`'s dirs, whose id column a batch-sized Bloom filter
+    * prunes BELOW the join. A fact bucketed by `id` reads as one
+    * bucketed scan, so it contributes zero fact-side Exchange.
     */
   private[graft] def freshAgainstTable(txn: Txn, fact: String,
                                        batch: DataFrame, id: String): DataFrame = {
     val bloom = graft.operators.BloomJoin.keyFilter(batch, id)
-    def pruned(part: DataFrame): DataFrame = {
-      val keys = part.select(col(id)).filter(col(id).isNotNull)
-      bloom.fold(keys)(b => keys.filter(b.mightContain(col(id))))
-    }
-    val factParts =
-      if (txn.wh.bucketSpec.contains(fact)) txn.readBucketedParts(fact)
-      else Seq(txn.read(fact))
-    factParts.foldLeft(batch) { (acc, part) =>
-      acc.join(pruned(part), Seq(id), "left_anti")
-    }
+    val ids = txn.read(fact).select(col(id)).filter(col(id).isNotNull)
+    batch.join(bloom.fold(ids)(b => ids.filter(b.mightContain(col(id)))), Seq(id), "left_anti")
   }
 }

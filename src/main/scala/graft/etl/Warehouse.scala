@@ -3,11 +3,13 @@ package graft.etl
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{DataSource, FileIndex, FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{broadcast, col, hash, lit, pmod, substring_index, to_date}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -44,10 +46,12 @@ import scala.jdk.CollectionConverters._
   *
   * Dims additionally use a BUCKETED layout (`bucketSpec`: table → SCD1
   * key + bucket count): data dirs are written with Spark's bucketed
-  * writer (one file per key-hash bucket) and read back through an
-  * external bucketed table registration, so the nightly SCD1 merge
-  * (a) plans with NO dim-side Exchange — the scan's HashPartitioning
-  * satisfies the join's distribution from the files themselves — and
+  * writer (one file per key-hash bucket) and read back through a
+  * relation carrying the same bucket spec ([[scanDirs]]: the files plus
+  * this warehouse's own specs, no session-catalog table), so the
+  * nightly SCD1 merge (a) plans with NO dim-side Exchange — the scan's
+  * HashPartitioning satisfies the join's distribution from the files
+  * themselves — and
   * (b) rewrites ONLY the buckets containing changed keys, hard-linking
   * the untouched buckets' files byte-identically into the new immutable
   * dir. Every keyed writer (SCD1/SCD2 merges, MERGE INTO, view refresh,
@@ -59,13 +63,13 @@ import scala.jdk.CollectionConverters._
   *
   * The big fact table combines BOTH layouts: date partitions inside
   * each append dir (IO pruning) and key-hash buckets within each
-  * partition (join co-location) — `Pipeline.freshFactRows` chains the
-  * dedup anti-join per dir so no fact row or id ever crosses an
-  * Exchange. Every other read of a multi-dir table is ONE plain scan:
-  * a partitioned table's append dirs are listed through one
-  * [[Warehouse.DirsFileIndex]], so the reports read the whole fact
-  * history as one relation (scan tasks packed across all dirs, date
-  * pruning static and dynamic), not a union of one scan per dir.
+  * partition (join co-location). Every read of a table, however many
+  * dirs it has, is ONE relation over one [[Warehouse.DirsFileIndex]]:
+  * the nightly dedup (`Pipeline.freshAgainstTable`) anti-joins ONE
+  * bucketed scan of all fact dirs, so no fact row or id crosses an
+  * Exchange, while the reports read the whole fact history as one
+  * plain scan (scan tasks packed across all dirs, date pruning static
+  * and dynamic), not a union of one scan per dir.
   * Note the layouts are not retro-fitted: a dir written
   * before its table had a `bucketSpec` entry must be rewritten
   * (`compact()`) before bucketed reads of it are sound.
@@ -149,32 +153,20 @@ class Warehouse(val spark: SparkSession, val root: String,
       cat.getOrElse(Warehouse.dvKey(table), Nil))
   }
 
-  private[etl] def readDirs(table: String, dirs: Seq[String],
-                            dvDirs: Seq[String] = Nil): DataFrame = {
+  private[etl] def readDirs(table: String, dirs: Seq[String], dvDirs: Seq[String] = Nil,
+                            bucketed: Boolean = true): DataFrame = {
     val fields = schemas(table).fieldNames.toIndexedSeq
-    if (dirs.isEmpty) return emptyDf(table)
-    if (dvDirs.isEmpty) {
-      if (bucketSpec.contains(table) && dirs.length == 1)
-        // single-dir bucketed table (the dim steady state — overwrites
-        // always leave exactly one dir): read through the bucketed
-        // registration so the scan carries HashPartitioning(key, n) and
-        // key-joins/aggregations need no dim-side Exchange
-        readBucketedDir(table, dirs.head).select(fields.map(col): _*)
-      else
-        // every other shape is ONE plain scan over all dirs
-        // ([[scanDirs]]); a partitioned table's partition column is dropped
-        scanDirs(table, dirs).select(fields.map(col): _*)
-    } else {
-      // DELETION VECTORS outstanding: read with the row-provenance
-      // columns, anti-join the (file path, row position) tombstone
-      // set, then project back to the declared schema. The DV side is
-      // delete-sized, so it BROADCASTS — and a broadcast left-anti
-      // preserves the streamed side's outputPartitioning, which keeps
-      // the bucketed dim scan's HashPartitioning (the zero-Exchange
-      // merge property survives logical deletes).
-      applyDv(readWithProvenance(table, dirs), dvDirs)
-        .select(fields.map(col): _*)
-    }
+    if (dirs.isEmpty) emptyDf(table)
+    // DELETION VECTORS outstanding: read with the row-provenance
+    // columns, anti-join the (file path, row position) tombstone set,
+    // then project back to the declared schema. The DV side is
+    // delete-sized, so it BROADCASTS — and a broadcast left-anti
+    // preserves the streamed side's outputPartitioning, which keeps the
+    // bucketed scan's HashPartitioning (the zero-Exchange merge
+    // property survives logical deletes).
+    else if (dvDirs.nonEmpty)
+      applyDv(readWithProvenance(table, dirs, bucketed), dvDirs).select(fields.map(col): _*)
+    else scanDirs(table, dirs, bucketed).select(fields.map(col): _*)
   }
 
   /** Read `table`'s dirs with the row-provenance columns
@@ -183,30 +175,35 @@ class Warehouse(val spark: SparkSession, val root: String,
     * the declared columns — the identity a deletion-vector tombstone
     * names.
     */
-  private[etl] def readWithProvenance(table: String, dirs: Seq[String]): DataFrame = {
-    val fields = schemas(table).fieldNames.toIndexedSeq
-    val base =
-      if (bucketSpec.contains(table) && dirs.length == 1) readBucketedDir(table, dirs.head)
-      else scanDirs(table, dirs)
-    base.select(fields.map(col) ++ provCols: _*)
-  }
+  private[etl] def readWithProvenance(table: String, dirs: Seq[String],
+                                      bucketed: Boolean = true): DataFrame =
+    scanDirs(table, dirs, bucketed)
+      .select(schemas(table).fieldNames.toIndexedSeq.map(col) ++ provCols: _*)
 
-  /** ONE plain (unbucketed) parquet scan over `dirs`, the declared
-    * columns first. A partitioned table reads through a
-    * [[Warehouse.DirsFileIndex]], so its partition column rides along
-    * after the declared ones and static and dynamic partition filters
-    * prune every dir's `<col>=` subdirs; its type is the one
-    * [[partitionField]] derives.
+  /** ONE parquet scan over any number of `dirs`, the declared columns
+    * first: a [[Warehouse.DirsFileIndex]] under a relation built from
+    * the warehouse's own specs, with no session-catalog table. A
+    * partitioned table's partition column rides along after the
+    * declared ones, typed by [[partitionField]], and static and dynamic
+    * partition filters prune every dir's `<col>=` subdirs. A bucketed
+    * table's relation carries its bucket spec, so a join or aggregation
+    * on the key reads it as a bucketed scan — HashPartitioning(key, n)
+    * from the files' bucket ids, across all dirs — and needs no Exchange
+    * on this side. Every other read of it (no operator needs the key
+    * partitioning) is a plain scan with tasks packed across files:
+    * Spark's DisableUnnecessaryBucketedScan drops the bucketing there,
+    * except below an operator that needs some other partitioning
+    * across a join (a window above broadcast joins): such a read passes
+    * `bucketed = false` ([[Txn.readPlain]]).
     */
-  private def scanDirs(table: String, dirs: Seq[String]): DataFrame = {
+  private def scanDirs(table: String, dirs: Seq[String], bucketed: Boolean = true): DataFrame = {
     val schema = schemas(table)
-    partitionField(table) match {
-      case None => spark.read.schema(schema).parquet(dirs: _*)
-      case Some(p) =>
-        val idx = new Warehouse.DirsFileIndex(spark, schema, StructType(Seq(p)), dirs)
-        spark.baseRelationToDataFrame(HadoopFsRelation(idx, idx.partitionSchema, schema,
-          None, new ParquetFileFormat, Map.empty[String, String])(spark))
-    }
+    val parts = StructType(partitionField(table).toSeq)
+    val buckets = bucketSpec.get(table).filter(_ => bucketed)
+      .map { case (key, n) => BucketSpec(n, Seq(key), Seq(key)) }
+    val idx = new Warehouse.DirsFileIndex(spark, schema, parts, dirs)
+    spark.baseRelationToDataFrame(
+      HadoopFsRelation(idx, parts, schema, buckets, new ParquetFileFormat, Map.empty)(spark))
   }
 
   /** The partition column of a partitioned table, typed by what its
@@ -276,10 +273,10 @@ class Warehouse(val spark: SparkSession, val root: String,
     *
     * Also the LAYOUT-REPAIR route: a single-dir table whose dir predates
     * its `bucketSpec` entry (files without bucket naming) cannot be read
-    * through the bucketed registration, so compacting a single-dir
-    * bucketed table reads the dir as PLAIN parquet and rewrites it
-    * through the bucketed writer — after which bucketed reads are sound.
-    * (Re-compacting an already-bucketed dir is a harmless rewrite.)
+    * as a bucketed scan, so compacting a single-dir bucketed table reads
+    * the dir as a PLAIN scan and rewrites it through the bucketed writer
+    * — after which bucketed reads are sound. (Re-compacting an
+    * already-bucketed dir is a harmless rewrite.)
     */
   def compact(table: String): Unit = {
     val cat = catalog()
@@ -292,9 +289,8 @@ class Warehouse(val spark: SparkSession, val root: String,
       txn.overwrite(table, txn.read(table))
       txn.commit()
     } else if (dirs.length == 1 && bucketSpec.contains(table)) {
-      val schema = schemas(table)
-      val plain = spark.read.schema(schema).parquet(dirs.head)
-        .select(schema.fieldNames.toIndexedSeq.map(col): _*)
+      val plain = scanDirs(table, dirs, bucketed = false)
+        .select(schemas(table).fieldNames.toIndexedSeq.map(col): _*)
       val txn = begin()
       txn.overwrite(table, plain)
       txn.commit()
@@ -327,11 +323,11 @@ class Warehouse(val spark: SparkSession, val root: String,
   /** Incremental compaction: merge the OLDEST data dirs of `table` into
     * one, leaving the most recent `keep` dirs untouched. Bounds the
     * read-side cost of daily appends (every dir is one more root to
-    * list and at least one more file per scan in [[readDirs]], one more
-    * anti-join in the per-dir fact dedup) without a full-table rewrite
-    * each time — recent hot dirs never move; the cold prefix is
-    * re-merged only when the dir count crosses the threshold again
-    * (tiered-merge write amplification, the usual LSM trade).
+    * list and at least one more file per bucket and partition in
+    * [[readDirs]]) without a full-table rewrite each time — recent
+    * hot dirs never move; the cold prefix is re-merged only when the
+    * dir count crosses the threshold again (tiered-merge write
+    * amplification, the usual LSM trade).
     * [[Txn.commit]] invokes this automatically for any written table
     * past `autoCompactThreshold` dirs. One [[rewriteRound]]; the merge
     * read applies outstanding deletion vectors, and tombstones naming
@@ -411,7 +407,6 @@ class Warehouse(val spark: SparkSession, val root: String,
             if (Files.isDirectory(d) && !live.contains(d.toAbsolutePath.toString) &&
                 Files.getLastModifiedTime(d).toMillis < cutoff) {
               deleteRecursively(d); removed += 1
-              spark.sql(s"DROP TABLE IF EXISTS `${Warehouse.bucketedTableName(d.toString)}`")
             }
           }
       }
@@ -525,14 +520,14 @@ class Warehouse(val spark: SparkSession, val root: String,
     }
   }
 
-  /** Bucketed write via a throwaway external-table registration — the
-    * only API route to Spark's bucketed writer (which encodes the bucket
-    * id in each file name, the contract [[readBucketedDir]] and
-    * [[copyUntouchedBuckets]] rely on). The `repartition(n, key)` uses
-    * the SAME hash (`Murmur3` mod n) as the bucket assignment, so every
-    * task holds exactly one bucket's rows → exactly one file per
-    * non-empty bucket (which also keeps Spark trusting the SORTED BY
-    * metadata on read). Dropping the external table keeps the files.
+  /** Bucketed write: Spark's bucketed file writer (which encodes the
+    * bucket id in each file name, the contract [[scanDirs]]' bucketed
+    * scan and [[copyUntouchedBuckets]] rely on), run as one write
+    * command over `dir` — no session-catalog table. The
+    * `repartition(n, key)` uses the SAME hash (`Murmur3` mod n) as the
+    * bucket assignment, so every task holds exactly one bucket's rows →
+    * exactly one file per non-empty bucket (which also keeps Spark
+    * trusting the SORTED BY order on read).
     *
     * A partial rewrite passes `touched` = the number of buckets its rows
     * fall in: the n hash partitions, all but `touched` of them empty,
@@ -545,58 +540,12 @@ class Warehouse(val spark: SparkSession, val root: String,
                                partitionCol: Option[String],
                                touched: Option[Int]): Unit = {
     val (key, n) = bucketSpec(table)
-    val tmp = "graft_tmp_" + UUID.randomUUID().toString.replace("-", "")
     val byBucket = df.repartition(n, col(key))
-    val w = touched.filter(_ < n).fold(byBucket)(byBucket.coalesce).write
-    partitionCol.fold(w)(w.partitionBy(_))
-      .bucketBy(n, key).sortBy(key)
-      .option("path", dir).format("parquet").saveAsTable(tmp)
-    spark.sql(s"DROP TABLE `$tmp`")
-  }
-
-  /** Read one data dir as a BUCKETED table. Bucketing metadata lives in
-    * the session catalog, not the files, so each dir gets a
-    * deterministic external-table registration (name = digest of the
-    * path; dirs are immutable, so a registration never goes stale —
-    * [[vacuum]] drops it with the dir). The check and the registration
-    * run under the name's lock: threads making the first read of one
-    * dir at once register it once, and none of them sees the table
-    * before its partitions and statistics are in place.
-    */
-  private[etl] def readBucketedDir(table: String, dir: String): DataFrame = {
-    val (key, n) = bucketSpec(table)
-    val name = Warehouse.bucketedTableName(dir)
-    Warehouse.registrationLock(name).synchronized {
-      if (!spark.catalog.tableExists(name)) {
-        // partitioned+bucketed dirs (facts) declare the partition column
-        // too — its type is derived from the partition expression so the
-        // registration never drifts from what writeDataDir produced
-        val (cols, partClause) = partitionField(table) match {
-          case Some(p) =>
-            (s"${schemas(table).toDDL}, `${p.name}` ${p.dataType.sql}",
-              s"PARTITIONED BY (`${p.name}`)")
-          case None => (schemas(table).toDDL, "")
-        }
-        spark.sql(
-          s"""CREATE TABLE `$name` ($cols)
-             |USING PARQUET
-             |$partClause
-             |CLUSTERED BY (`$key`) SORTED BY (`$key`) INTO $n BUCKETS
-             |LOCATION '$dir'""".stripMargin)
-        // datasource tables with a LOCATION don't discover partitions on
-        // their own; dirs are immutable so one recovery at registration
-        // time is complete forever
-        if (partitionSpec.contains(table))
-          spark.sql(s"ALTER TABLE `$name` RECOVER PARTITIONS")
-        // a catalog table without stats planwise weighs Long.MaxValue —
-        // no plan reading it could ever choose a broadcast. NOSCAN fills
-        // in sizeInBytes from file sizes (metadata-only, once per
-        // immutable dir), so a small dim still broadcasts into report
-        // joins while a 100 TB scan keeps the co-located SMJ.
-        spark.sql(s"ANALYZE TABLE `$name` COMPUTE STATISTICS NOSCAN")
-      }
-    }
-    spark.table(name)
+    val rows = touched.filter(_ < n).fold(byBucket)(byBucket.coalesce)
+    val write = DataSource(spark, "parquet", partitionColumns = partitionCol.toSeq,
+      bucketSpec = Some(BucketSpec(n, Seq(key), Seq(key))), options = Map("path" -> dir))
+      .planForWriting(SaveMode.ErrorIfExists, rows.queryExecution.analyzed)
+    Bridge.ofRows(spark, write)   // a command plan runs as it is built
   }
 
   /** Hard-link (fall back: copy — byte-identical either way) the files
@@ -840,6 +789,14 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
   def read(table: String): DataFrame =
     wh.readDirs(table, currentDirs(table), currentDvDirs(table))
 
+  /** [[read]] as a plain, file-packed scan even where `table` is
+    * bucketed: for a read no join or aggregation on the key uses, whose
+    * bucketed scan Spark would keep anyway (report №3's window above
+    * broadcast joins) at one task per bucket.
+    */
+  private[etl] def readPlain(table: String): DataFrame =
+    wh.readDirs(table, currentDirs(table), currentDvDirs(table), bucketed = false)
+
   /** The data dirs this txn currently sees for `table` (pending write,
     * else committed snapshot).
     */
@@ -849,19 +806,6 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
   /** The deletion-vector dirs this txn currently sees for `table`. */
   private[etl] def currentDvDirs(table: String): Seq[String] =
     currentDirs(Warehouse.dvKey(table))
-
-  /** Each of the table's data dirs as its own BUCKETED scan (declared
-    * columns only — partition columns dropped, like [[read]]). A multi-
-    * dir bucketed table can't be read as ONE bucketed scan (a union
-    * discards the partitioning), but per-dir frames each carry
-    * HashPartitioning(key, n), which is exactly what a chained per-dir
-    * join (appendFact's anti-join cascade) needs.
-    */
-  private[etl] def readBucketedParts(table: String): Seq[DataFrame] = {
-    val fields = wh.schemas(table).fieldNames.toIndexedSeq
-    currentDirs(table).map(d =>
-      wh.readBucketedDir(table, d).select(fields.map(org.apache.spark.sql.functions.col): _*))
-  }
 
   /** Replace the table image (staging truncate-and-load K1/K2, dim merge
     * result K4+K6+K7). Data lands in a fresh immutable dir; old dirs are
@@ -1011,8 +955,8 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     * branch of the written image (2 here: carried ∪ appended) instead
     * of exactly one. Bounded (branch count, not data), rewritten
     * wholesale on the bucket's next touch, and handled by every
-    * reader ([[Warehouse.readBucketedDir]] groups a bucket's files
-    * into one partition) and by bucket maintenance
+    * reader (a bucketed scan groups a bucket's files into one
+    * partition) and by bucket maintenance
     * ([[Warehouse.copyUntouchedBuckets]] walks all files) — the only
     * cost is Spark not trusting SORTED BY metadata for multi-file
     * buckets. Spec-pinned in StreamingChurnWriteSpec.
@@ -1063,9 +1007,8 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
       case Some((key, n)) if currentDvDirs(table).isEmpty =>
         // multi-dir (the append-only fact shape): replace ONLY dirs
         // holding matching rows, each rewritten bucket-pruned
-        val fields = wh.schemas(table).fieldNames.toIndexedSeq
         val newDirs = currentDirs(table).map { d =>
-          val part = wh.readBucketedDir(table, d).select(fields.map(col): _*)
+          val part = wh.readDirs(table, Seq(d))
           val touched = Warehouse.bucketsOf(part.filter(predicate), Seq(key), n)
           if (touched.isEmpty) d // untouched dir: zero bytes move
           else {
@@ -1372,19 +1315,23 @@ object Warehouse {
     */
   private[etl] def dvFileKey(path: Column): Column = substring_index(path, "/data/", -1)
 
-  /** ONE file index over several data dirs of a partitioned table, so
-    * a multi-dir read is one relation: one scan node, scan tasks packed
-    * across all dirs' files, and static and dynamic partition pruning
-    * over every dir. A multi-root `spark.read.parquet` cannot read such
-    * dirs: it unifies the partition structure across roots and fails
-    * with CONFLICTING_DIRECTORY_STRUCTURES for any two partitioned
-    * roots. So each root keeps its own [[InMemoryFileIndex]] discovery
-    * and the listings are concatenated; an empty append dir, which has
-    * no `<col>=` subdirs, lists nothing. Every root's discovery is handed the declared
-    * `partitionSchema`, so the roots can never disagree on the partition
-    * column's type, whatever inference would say. Listings share the
-    * session's file-status cache, as `spark.read` does; data dirs are
-    * immutable.
+  /** ONE file index over any number of a table's data dirs, so a
+    * multi-dir read is one relation: one scan node, scan tasks packed
+    * across all dirs' files (or grouped by bucket id, for a bucketed
+    * scan), and static and dynamic partition pruning over every dir. A
+    * multi-root `spark.read.parquet` cannot read partitioned dirs: it
+    * unifies the partition structure across roots and fails with
+    * CONFLICTING_DIRECTORY_STRUCTURES for any two partitioned roots. So
+    * each root keeps its own [[InMemoryFileIndex]] discovery and the
+    * listings are concatenated. An unpartitioned table's root lists its
+    * files as one value-less directory; a partitioned table's empty
+    * append dir, which has no `<col>=` subdirs, lists nothing. Every
+    * root's discovery is handed the declared `partitionSchema`, so the
+    * roots can never disagree on the partition column's type, whatever
+    * inference would say. A missing dir fails the read: an
+    * [[InMemoryFileIndex]] over a missing root lists nothing, which
+    * would read as an empty table. Listings share the session's
+    * file-status cache, as `spark.read` does; data dirs are immutable.
     */
   private[etl] final class DirsFileIndex(spark: SparkSession, dataSchema: StructType,
                                          override val partitionSchema: StructType,
@@ -1394,7 +1341,9 @@ object Warehouse {
       val cache = FileStatusCache.getOrCreate(spark)
       dirs.map { d =>
         val p = new org.apache.hadoop.fs.Path(d)
-        new InMemoryFileIndex(spark, Seq(p.getFileSystem(conf).makeQualified(p)),
+        val fs = p.getFileSystem(conf)
+        require(fs.exists(p), s"data dir $d does not exist (vacuumed?)")
+        new InMemoryFileIndex(spark, Seq(fs.makeQualified(p)),
           Map.empty[String, String], Some(StructType(dataSchema ++ partitionSchema)), cache)
       }
     }
@@ -1408,7 +1357,7 @@ object Warehouse {
                            dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
       roots.flatMap { r =>
         val listed = r.listFiles(partitionFilters, dataFilters)
-        if (r.partitionSchema.nonEmpty) listed
+        if (r.partitionSchema.nonEmpty || partitionSchema.isEmpty) listed
         else {
           // no partition subdirs: an empty append dir, which lists as
           // one value-less directory
@@ -1426,20 +1375,6 @@ object Warehouse {
     }
     override def hashCode(): Int = rootPaths.hashCode()
   }
-
-  /** Striped locks for [[Warehouse.readBucketedDir]]'s one-time
-    * registration: first reads of different dirs rarely wait on each
-    * other, and the lock set stays bounded however many dirs a JVM reads.
-    */
-  private val registrationLocks = Array.fill(64)(new Object)
-  private def registrationLock(name: String): Object =
-    registrationLocks(math.floorMod(name.hashCode, registrationLocks.length))
-
-  /** Deterministic registration name for a bucketed data dir. */
-  private[etl] def bucketedTableName(dir: String): String =
-    "graft_bkt_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString.take(20)
 }
 
 /** The part of a table a keyed write rewrites: `touched` holds the

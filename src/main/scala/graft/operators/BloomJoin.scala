@@ -40,10 +40,11 @@ object BloomJoin {
     bits.map(b => QBloom.build(small, col(key), b, k))
   }
 
-  /** Auto-sized filter over `small`'s keys, built ONCE for reuse across
-    * several big-side frames (appendFact applies the same filter under
-    * every per-dir co-located join — k dirs must not mean k build
-    * actions). `None` = auto-sizer declined; callers skip the prune.
+  /** Auto-sized filter over `small`'s keys, built ONCE and applied by
+    * the caller to its own big-side frame (the fact dedup,
+    * `Pipeline.freshAgainstTable`, prunes its bucketed fact scan with
+    * it below the anti-join). `None` = auto-sizer declined; callers
+    * skip the prune.
     */
   def keyFilter(small: DataFrame, key: String, mBits: Long = -1,
                 k: Int = 5): Option[QBloom.Filter] =

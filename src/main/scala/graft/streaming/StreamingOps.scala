@@ -820,10 +820,11 @@ object StreamingOps {
     * lands as ONE atomic catalog swap containing: in-batch exact dedup
     * on the id (deterministic first row per key, so replayed batches
     * compact identically regardless of partition order),
-    * the against-table dedup (the K8 plan: batch-sized Bloom filter
-    * pruning each fact dir's id scan below PER-DIR chained anti-joins —
-    * a bucketed fact contributes zero fact-side Exchange), the append,
-    * and the batch-id ledger.
+    * the against-table dedup (the K8 plan: ONE anti-join against ONE
+    * scan of all fact dirs, its id column pruned by a batch-sized Bloom
+    * filter below the join — a bucketed fact reads as one bucketed scan
+    * and contributes zero fact-side Exchange), the append, and the
+    * batch-id ledger.
     *
     * Exactly-once effect over at-least-once `foreachBatch`: a torn run
     * either committed append+ledger together or neither — the same
@@ -840,8 +841,8 @@ object StreamingOps {
     * `metaTable` schema: single `last_batch` BIGINT.
     *
     * Scale shape: per batch, one Bloom build over the batch (bounded),
-    * per-dir pruned anti-joins (no full fact scan — the Bloom prunes at
-    * the id column), one delta-sized write, O(1) commit. Runs unchanged
+    * one pruned anti-join (no full fact scan — the Bloom prunes at the
+    * id column), one delta-sized write, O(1) commit. Runs unchanged
     * as a continuous job discovering daily drops at 100 TB.
     */
   def streamingFactIngest(spark: SparkSession, wh: graft.etl.Warehouse,
@@ -870,11 +871,11 @@ object StreamingOps {
           txn.commit()
         } else {
           // ledger-ahead batch (checkpoint reset): new rows still land,
-          // the ledger keeps its high-water mark. The dedup frame
-          // (Bloom build + per-dir anti-joins) is persisted so the
-          // emptiness probe and the append share ONE evaluation —
-          // recovery batches on a large fact would otherwise pay the
-          // most expensive stage of the pipeline twice
+          // the ledger keeps its high-water mark. The dedup frame (Bloom
+          // build + anti-join) is persisted so the emptiness probe and
+          // the append share ONE evaluation — recovery batches on a
+          // large fact would otherwise pay the most expensive stage of
+          // the pipeline twice
           fresh.persist()
           try {
             if (!fresh.isEmpty) {

@@ -13,10 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** The nightly run's concurrent levels ([[Pipeline]]) and what they
-  * rest on: one [[Txn]] written from several threads, a bucketed dir's
-  * one-time registration under concurrent first reads, and the failure
-  * contract (first failure thrown after every write has finished,
-  * nothing committed, nothing archived).
+  * rest on: one [[Txn]] written from several threads, concurrent first
+  * reads of a bucketed dir with no session-catalog state behind them,
+  * and the failure contract (first failure thrown after every write has
+  * finished, nothing committed, nothing archived).
   */
 class PipelineConcurrencySpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
@@ -25,6 +25,13 @@ class PipelineConcurrencySpec extends AnyFunSuite {
   private val mar2 = Timestamp.valueOf("2021-03-02 23:55:00")
 
   private def tmp(tag: String): String = Files.createTempDirectory(tag).toString
+
+  /** Session-catalog tables named like the warehouse's former per-dir
+    * registrations and write tables (`graft_bkt_*`, `graft_tmp_*`).
+    */
+  private def warehouseTables: Seq[String] =
+    spark.catalog.listTables().collect().map(_.name).toSeq
+      .filter(n => n.startsWith("graft_bkt_") || n.startsWith("graft_tmp_"))
 
   /** Run `body(i)` on `n` threads released at once; the failures. */
   private def onThreads(n: Int)(body: Int => Unit): Seq[Throwable] = {
@@ -95,25 +102,45 @@ class PipelineConcurrencySpec extends AnyFunSuite {
     }
   }
 
-  test("threads making the first read of a bucketed dir register it once") {
+  test("concurrent first reads of a bucketed dir each read all of it") {
     import spark.implicits._
-    // the fact layout (date-partitioned and bucketed): a reader that saw
-    // the registration before its partitions were recovered reads 0 rows
-    val wh = new Warehouse(spark, tmp("wh-register"))
+    // the fact layout (date-partitioned and bucketed): a reader that
+    // missed a partition would read fewer than 90 rows
+    val wh = new Warehouse(spark, tmp("wh-first-read"))
     val txn = wh.begin()
     txn.append("fact_transactions", (1 to 90).map(i =>
       (s"T$i", Timestamp.valueOf(f"2021-03-0${1 + i % 3} 10:00:00"), BigDecimal(i),
         s"K$i", "PAY", "OK", s"A$i"))
       .toDF("trans_id", "trans_date", "amt", "card_num", "oper_type", "oper_result", "terminal"))
     txn.commit()
-    val name = Warehouse.bucketedTableName(wh.catalog()("fact_transactions").head)
-    assert(!spark.catalog.tableExists(name))
 
     val counts = new ConcurrentLinkedQueue[Long]()
     val errors = onThreads(8)(_ => counts.add(wh.read("fact_transactions").count()))
     assert(errors.isEmpty, errors.mkString("; "))
     assert(counts.asScala.toSeq == Seq.fill(8)(90L))
-    assert(spark.catalog.listTables().filter(col("name") === name).count() == 1)
+    assert(warehouseTables.isEmpty, warehouseTables)
+  }
+
+  test("nightly runs, a fact delete, compaction and vacuum leave no table in the " +
+    "session catalog") {
+    import spark.implicits._
+    val wh = new Warehouse(spark, tmp("wh-no-catalog"))
+    val drop = Files.createTempDirectory("drop-no-catalog")
+    dropTransactions(drop, "01032021", Seq("T1", "T2"))
+    new Pipeline(spark, wh).run(bank(Seq("K1")), Some(drop.toString), mar1)
+    dropTransactions(drop, "02032021", Seq("T2", "T3"))
+    new Pipeline(spark, wh).run(bank(Seq("K1", "K2")), Some(drop.toString), mar2)
+    assert(wh.catalog()("fact_transactions").length == 2)
+
+    val txn = wh.begin()
+    txn.deleteWhere("fact_transactions", col("trans_id") === "T1")
+    txn.commit()
+    wh.compact("fact_transactions")
+    assert(wh.vacuum(graceMs = 0) > 0)
+    assert(wh.read("fact_transactions").select("trans_id").as[String].collect().sorted
+      .toSeq == Seq("T2", "T3"))
+    assert(wh.read("dim_cards").count() == 2L)
+    assert(warehouseTables.isEmpty, warehouseTables)
   }
 
   test("a failed write fails the run only after every write finished: nothing " +

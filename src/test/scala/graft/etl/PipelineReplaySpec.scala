@@ -208,12 +208,10 @@ class PipelineReplaySpec extends AnyFunSuite {
     //    shrinks the fact id set to delta size and AQE broadcasts it —
     //    zero shuffle anywhere.
     //  - Big delta (Bloom auto-sizer declines): the fact dirs are
-    //    BUCKETED by trans_id, and freshFactRows chains per-dir
-    //    co-located anti-joins (`((stg ANTI d₁) ANTI d₂) …` — a UNION of
-    //    bucketed scans would lose the co-partitioning, a cascade keeps
-    //    it per dir), so even a sort-merge plan exchanges only the
-    //    staging delta ONCE; every fact-side scan feeds its join
-    //    directly from the files' HashPartitioning.
+    //    BUCKETED by trans_id, and freshFactRows anti-joins ONE bucketed
+    //    scan of all of them, so even a sort-merge plan exchanges only
+    //    the staging delta ONCE; the fact scan feeds the join directly
+    //    from the files' HashPartitioning.
     val whRoot = Files.createTempDirectory("wh-append-plan")
     val drop = Files.createTempDirectory("drop-append-plan")
     val wh = new Warehouse(spark, whRoot.toString)
@@ -249,17 +247,19 @@ class PipelineReplaySpec extends AnyFunSuite {
       s"small-delta append must plan with no shuffle at all:\n$p1")
 
     // regime 2: broadcasts disabled — the sort-merge fallback a huge
-    // delta would force. The bucketed cascade allows ONE exchange total
-    // (the staging delta entering the bucket layout); the fact side
-    // never shuffles.
+    // delta would force. The bucketed fact scan allows ONE exchange
+    // total (the staging delta entering the bucket layout); the fact
+    // side never shuffles.
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val (n2, p2) = freshPlan()
       assert(n2 == 0L)
       assert(p2.contains("SortMergeJoin"), s"expected the SMJ fallback:\n$p2")
-      assert("SelectedBucketsCount".r.findAllIn(p2).size >= 2,
-        s"each fact dir should scan bucketed:\n$p2")
+      val bucketed = p2.linesIterator.filter(_.contains("SelectedBucketsCount")).toSeq
+      assert(bucketed.size == 1 && bucketed.head.contains("/fact_transactions/") &&
+        bucketed.head.contains("DirsFileIndex(2 paths)"),
+        s"expected one bucketed fact scan over both fact dirs:\n$p2")
       assert("Exchange hashpartitioning".r.findAllIn(p2).size == 1,
         s"only the staging delta may shuffle (once):\n$p2")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

@@ -5,6 +5,9 @@ import java.sql.{Date, Timestamp}
 import graft.TestSpark
 import graft.sources.BankSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
@@ -360,6 +363,144 @@ class WarehouseBucketingSpec extends AnyFunSuite {
     assert(written.keys.map { case bucketRe(b) => b.toInt }.toSet == changed.values.toSet)
     assert(wh.read("dim_clients").filter(col("phone") === "+7 999")
       .select("client_id").as[String].collect().toSet == changed.keySet)
+  }
+
+  /** Fact rows `ids` on 2021-03-0`day`, cards K1..K4 and terminals
+    * T1..T3 round-robin.
+    */
+  private def factBatch(ids: Seq[Int], day: Int): DataFrame = {
+    import spark.implicits._
+    ids.map(i => (f"T$i%03d", Timestamp.valueOf(f"2021-03-0$day ${10 + i % 10}:00:00"),
+        BigDecimal(i), s"K${1 + i % 4}", "PAY", "OK", s"T${1 + i % 3}"))
+      .toDF("trans_id", "trans_date", "amt", "card_num", "oper_type", "oper_result", "terminal")
+  }
+
+  /** The physical operators of a finished query, AQE stages included. */
+  private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** The file scans of `plan` over `table`'s data dirs. */
+  private def scansOf(plan: SparkPlan, table: String): Seq[FileSourceScanExec] =
+    Plans.collect(plan) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toUri.getPath.contains(s"/data/$table/")) => s
+    }
+
+  private def rootsOf(scan: FileSourceScanExec): Set[String] =
+    scan.relation.location.rootPaths.map(p => Paths.get(p.toUri).toString).toSet
+
+  test("fact dedup: zero fact-side shuffle in BOTH Bloom regimes, one bucketed scan " +
+    "over every fact dir") {
+    // Small delta (the common night): the Bloom prune below the join
+    // shrinks the fact id set to delta size and it broadcasts — zero
+    // shuffle anywhere. Big delta (broadcasts off — what the Bloom
+    // auto-sizer declining on a huge batch leaves): a sort-merge anti
+    // join against ONE bucketed scan of both fact dirs, whose
+    // HashPartitioning(trans_id, n) comes from the files, so only the
+    // staged batch exchanges, once.
+    val wh = new Warehouse(spark, Files.createTempDirectory("wh-fact-dedup").toString)
+    val t1 = wh.begin(); t1.append("fact_transactions", factBatch(1 to 60, 1)); t1.commit()
+    val t2 = wh.begin(); t2.append("fact_transactions", factBatch(61 to 120, 2)); t2.commit()
+    val factDirs = wh.catalog()("fact_transactions").toSet
+    assert(factDirs.size == 2)
+
+    val txn = wh.begin()
+    txn.overwrite("stg_transactions", factBatch(111 to 130, 3))   // 10 known, 10 fresh
+    val pipe = new Pipeline(spark, wh)
+    def freshPlan(): (Long, SparkPlan, String) = {
+      val fresh = pipe.freshFactRows(txn, "fact_transactions", "stg_transactions", "trans_id")
+      // collect() runs THIS frame's QueryExecution, so its adaptive plan
+      // is the final one; the "Initial Plan" section is not what ran
+      val n = fresh.collect().length.toLong
+      val plan = fresh.queryExecution.executedPlan
+      (n, plan, plan.toString.split("== Initial Plan ==")(0))
+    }
+
+    val (n1, _, p1) = freshPlan()
+    assert(n1 == 10L)
+    assert(p1.contains("BroadcastHashJoin") && p1.contains("LeftAnti"),
+      s"pruned fact ids should broadcast into the anti join:\n$p1")
+    assert(p1.contains("graft_bloom_might_contain"), s"Bloom prune missing below the join:\n$p1")
+    assert(!p1.contains("Exchange hashpartitioning"),
+      s"small-delta dedup must plan with no shuffle at all:\n$p1")
+
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val (n2, plan2, p2) = freshPlan()
+      assert(n2 == 10L)
+      assert(p2.contains("SortMergeJoin"), s"expected the SMJ fallback:\n$p2")
+      assert("Exchange hashpartitioning".r.findAllIn(p2).size == 1,
+        s"only the staged batch may shuffle (once):\n$p2")
+      val scans = scansOf(plan2, "fact_transactions")
+      assert(scans.size == 1 && scans.head.bucketedScan && rootsOf(scans.head) == factDirs,
+        s"expected ONE bucketed fact scan over both dirs:\n$p2")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("fact dedup sees the fact's deletion vectors: a vector-deleted id is fresh again") {
+    // the dedup reads the fact through Txn.read, as every other reader
+    // does, so a logically deleted row no longer blocks its id
+    val wh = new Warehouse(spark, Files.createTempDirectory("wh-fact-dedup-dv").toString)
+    val t1 = wh.begin(); t1.append("fact_transactions", factBatch(1 to 60, 1)); t1.commit()
+    val t2 = wh.begin(); t2.append("fact_transactions", factBatch(61 to 120, 2)); t2.commit()
+    val t3 = wh.begin()
+    assert(t3.deleteVectored("fact_transactions", col("trans_id").isin("T005", "T100")) == 2L)
+    t3.commit()
+
+    val txn = wh.begin()
+    txn.overwrite("stg_transactions", factBatch((1 to 10) ++ (95 to 125), 3))
+    val fresh = new Pipeline(spark, wh)
+      .freshFactRows(txn, "fact_transactions", "stg_transactions", "trans_id")
+    import spark.implicits._
+    assert(fresh.select("trans_id").as[String].collect().sorted.toSeq ==
+      Seq("T005", "T100", "T121", "T122", "T123", "T124", "T125"))
+  }
+
+  test("the report level broadcasts every dim into a plain, file-packed fact scan") {
+    import spark.implicits._
+    // two nights of a bucketed warehouse: four single-dir bucketed dims,
+    // two bucketed fact dirs
+    val wh = new Warehouse(spark, Files.createTempDirectory("wh-report-plan").toString)
+    val t1 = wh.begin()
+    t1.overwrite("dim_clients", snapshotWithProcessed(clientsDf((1 to 4).map(clientRow(_)))))
+    t1.overwrite("dim_accounts", snapshotWithProcessed(ReplayFixtures.accountsDf(spark,
+      (1 to 4).map(i => (s"A$i", Date.valueOf(if (i == 2) "2020-01-01" else "2030-01-01"),
+        f"C$i%03d", feb1, None: Option[Timestamp])))))
+    t1.overwrite("dim_cards", snapshotWithProcessed(ReplayFixtures.cardsDf(spark,
+      (1 to 4).map(i => (s"K$i", s"A$i", feb1, None: Option[Timestamp])))))
+    t1.overwrite("dim_terminals", snapshotWithProcessed((1 to 3).map(i =>
+        (s"T$i", "POS", s"City$i", s"Street $i", feb1, None: Option[Timestamp]))
+      .toDF("terminal_id", "terminal_type", "terminal_city", "terminal_address",
+        "create_dt", "update_dt")))
+    t1.append("fact_blacklist", Seq((feb1, "0001 000000")).toDF("entry_dt", "passport_num"))
+    t1.append("fact_transactions", factBatch(1 to 60, 1))
+    t1.commit()
+    val t2 = wh.begin(); t2.append("fact_transactions", factBatch(61 to 120, 2)); t2.commit()
+    val factDirs = wh.catalog()("fact_transactions").toSet
+    assert(factDirs.size == 2)
+
+    Seq(Reports.Faithful, Reports.Corrected).foreach { mode =>
+      val rows = new Pipeline(spark, wh, mode).reportRows(wh.begin())
+      assert(rows.collect().nonEmpty, mode)
+      val plan = rows.queryExecution.executedPlan
+      val text = plan.toString.split("== Initial Plan ==")(0)
+      assert(Plans.collect(plan) { case j: BroadcastHashJoinExec => j }.nonEmpty, s"$mode:\n$text")
+      assert(Plans.collect(plan) {
+        case j: SortMergeJoinExec => j
+        case j: ShuffledHashJoinExec => j
+      }.isEmpty, s"$mode: every report join should broadcast:\n$text")
+      val broadcastScans = Plans.collect(plan) { case b: BroadcastExchangeLike =>
+        Plans.collect(b) { case s: FileSourceScanExec => s } }.flatten
+      Seq("dim_cards", "dim_accounts", "dim_clients", "dim_terminals").foreach { dim =>
+        val scans = scansOf(plan, dim)
+        assert(scans.nonEmpty && scans.forall(s => broadcastScans.exists(_ eq s)),
+          s"$mode: $dim should enter only through a broadcast:\n$text")
+      }
+      val facts = scansOf(plan, "fact_transactions")
+      assert(facts.nonEmpty && facts.forall(s => !s.bucketedScan && rootsOf(s) == factDirs),
+        s"$mode: the fact should be read as plain scans over both dirs:\n$text")
+      assert(!text.contains("SelectedBucketsCount"), s"$mode: no report read needs buckets:\n$text")
+    }
   }
 
   /** (tasks, records written) of every stage `body` completes, read

@@ -101,6 +101,24 @@ class WarehouseMultiDirReadSpec extends AnyFunSuite {
       perDirUnion(wh, dirs.init).filter(to_date(col("trans_date")) === day3).count())
   }
 
+  test("a data dir missing from disk fails the read, naming the dir") {
+    // the fact (partitioned) and a dim (unpartitioned): the root listing
+    // of a missing dir is empty, which must not read as an empty table
+    import spark.implicits._
+    val wh = threeDirWh(Files.createTempDirectory("wh-multidir-missing").toString)
+    val t = wh.begin()
+    t.overwrite("dim_cards", Seq(("K1", "A1", Timestamp.valueOf("2021-02-01 00:00:00"),
+        None: Option[Timestamp], Timestamp.valueOf("2021-03-01 00:00:00")))
+      .toDF("card_num", "account_num", "create_dt", "update_dt", "processed_dt"))
+    t.commit()
+    Seq(Fact -> wh.catalog()(Fact)(1), "dim_cards" -> wh.catalog()("dim_cards").head).foreach {
+      case (table, gone) =>
+        Warehouse.deleteRecursively(Paths.get(gone))
+        val e = intercept[IllegalArgumentException](wh.read(table).collect())
+        assert(e.getMessage.contains(gone), e.getMessage)
+    }
+  }
+
   test("outstanding deletion vectors apply to the one multi-dir scan") {
     val wh = threeDirWh(Files.createTempDirectory("wh-multidir-dv").toString)
     val dirs = wh.catalog()(Fact)
