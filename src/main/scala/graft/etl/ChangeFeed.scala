@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   *    without touching the base table ([[graft.queries.MiscQueries]]
   *    `q_cdf_apply`).
   *
-  * Scale shape: ONE full-outer hash join on the key (bucketed
+  * Scale shape: ONE full-outer hash join on the key, the keyed diff
+  * [[Scd1.diff]] every SCD merge classifies through (bucketed
   * warehouse dims join exchange-free — both version reads carry the
   * layout's HashPartitioning), then a codegen'd per-row case array +
   * explode — no second join, no window, churn-sized output.
@@ -66,19 +67,19 @@ object ChangeFeed {
   def diffStruct(oldDf: DataFrame, newDf: DataFrame,
                  keys: Seq[String]): DataFrame = {
     val valueCols = valueColsOf(oldDf, newDf, keys)
-    def side(df: DataFrame, as: String) =
+    // each image's values as ONE struct `__c`: a full-snapshot keyed
+    // diff of old (dim side) against new (source side), the struct's
+    // null-safe equality being the change test
+    def image(df: DataFrame) =
       df.select(keys.map(col) :+
         (if (valueCols.isEmpty) struct(lit(true).as("__present"))
-         else struct(valueCols.map(col): _*)).as(as): _*)
-    side(oldDf, "before").join(side(newDf, "after"), keys, "full_outer")
-      .withColumn("change_type",
-        when(col("before").isNull, "insert")
-          .when(col("after").isNull, "delete")
-          .when(not(col("before") <=> col("after")), "update")
-          .otherwise("unchanged"))
-      .filter(col("change_type") =!= "unchanged")
-      .select(keys.map(col) :+ col("change_type") :+ col("before") :+
-        col("after"): _*)
+         else struct(valueCols.map(col): _*)).as("__c"): _*)
+    Scd1.diff(image(oldDf), image(newDf), keys,
+        if (valueCols.isEmpty) Nil else Seq("__c"), Scd1.FullSnapshot, "full")
+      .filter(Scd1.action =!= "unchanged")
+      .select(keys.map(k => coalesce(col(s"d.$k"), col(s"s.$k")).as(k)) ++ Seq(
+        Scd1.action.as("change_type"), col("d.__c").as("before"),
+        col("s.__c").as("after")): _*)
   }
 
   /** Row-form diff of two same-schema images on `keys`. Output =

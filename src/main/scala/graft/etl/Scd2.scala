@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * image; a Type-2 dim keeps every version with its validity interval).
   * Not in the reference's surface, but the first thing a real warehouse
   * user asks for once SCD1 works, and the semantics compose from the
-  * exact same primitives: the null-safe change predicate
-  * ([[Scd1.anyChanged]]) and the full-snapshot delete rule (K7).
+  * exact same primitive: the keyed diff [[Scd1.diff]] — its null-safe
+  * change predicate and its full-snapshot delete rule (K7).
   *
   * History schema = keys ++ compareCols ++
   * (`valid_from` timestamp, `valid_to` nullable timestamp,
@@ -85,48 +85,20 @@ object Scd2 {
       .drop("__kcnt")
   }
 
-  /** The two load sources share one classification contract: given the
-    * aliased full-outer join of the source frame (`s`, with
-    * `__sexists`) against the current slice (`d`, with `__dexists`),
-    * produce the (isInsert, isDelete, isChange) predicates. A FULL
-    * SNAPSHOT classifies by presence (absent-from-snapshot = delete); a
-    * CHANGE DELTA classifies by its `change_type` rows (absent-from-
-    * delta = untouched). Everything downstream — the array-explode
-    * history form and the two-branch warehouse form — is source-shape
-    * agnostic.
-    */
-  private def snapshotClassify(compareCols: Seq[String]): (Column, Column, Column) = {
-    val isInsert = col("d.__dexists").isNull
-    val isDelete = col("s.__sexists").isNull
-    (isInsert, isDelete, !isInsert && !isDelete && Scd1.anyChanged(compareCols))
-  }
-
-  private def deltaClassify(compareCols: Seq[String]): (Column, Column, Column) = {
-    val inChg = col("s.__sexists").isNotNull
-    val hasCur = col("d.__dexists").isNotNull
-    val isDelete = inChg && col("s.change_type") === "delete"
-    val isChange = inChg && !isDelete && hasCur && Scd1.anyChanged(compareCols)
-    (inChg && !isDelete && !hasCur, isDelete, isChange)
-  }
-
-  /** The shared single-frame core: split the history, full-outer join
-    * the prepped source (`__sexists`, aliased `s`) against the current
-    * slice, and emit 0-2 rows per key via one array-explode (no cached
+  /** The shared single-frame core: split the history, diff the source
+    * against the current slice ([[Scd1.diff]], full outer; `kind` is
+    * the only difference between a snapshot load and a change-row
+    * apply), and emit 0-2 rows per key via one array-explode (no cached
     * second pass). The three row shapes share one struct schema.
     */
   private def historize(history: DataFrame, s: DataFrame, keys: Seq[String],
                         compareCols: Seq[String], asOf: java.sql.Timestamp,
-                        classify: (Column, Column, Column)): DataFrame = {
+                        kind: Scd1.DiffKind): DataFrame = {
     val attrs = keys ++ compareCols
     val closed = history.filter(!col("is_current"))
       .select((attrs ++ auditCols).map(col): _*)
-    val d = history.filter(col("is_current"))
+    val current = history.filter(col("is_current"))
       .select((attrs ++ auditCols).map(col): _*)
-      .withColumn("__dexists", lit(1))
-      .alias("d")
-    val on = keys.map(k => col(s"s.$k") === col(s"d.$k")).reduce(_ && _)
-    val (isInsert, isDelete, isChange) = classify
-    val hasCur = col("d.__dexists").isNotNull
 
     def shape(side: String, from: Column, to: Column, cur: Column): Column =
       struct(attrs.map(c => col(s"$side.$c").as(c)) ++ Seq(
@@ -138,12 +110,12 @@ object Scd2 {
     // a delete with no current row (delta redelivery) contributes
     // NOTHING: slice to a typed empty array, explode drops the row.
     // Snapshot loads never hit that branch (their delete ⇒ d exists).
-    val rows = when(isInsert, array(newOpen))
-      .when(isDelete && hasCur, array(oldClosed))
-      .when(isDelete && !hasCur, slice(array(oldClosed), 1, 0))
-      .when(isChange, array(oldClosed, newOpen))
-      .otherwise(array(oldKept))
-    val merged = s.join(d, on, "full")
+    val rows = when(Scd1.action === "insert", array(newOpen))
+      .when(Scd1.action === "update", array(oldClosed, newOpen))
+      .when(Scd1.action === "unchanged", array(oldKept))
+      .when(Scd1.inDim, array(oldClosed))
+      .otherwise(slice(array(oldClosed), 1, 0))
+    val merged = Scd1.diff(current, s, keys, compareCols, kind, "full")
       .select(explode(rows).as("r"))
       .select((attrs ++ auditCols).map(c => col(s"r.$c").as(c)): _*)
     closed.unionAll(merged)
@@ -153,12 +125,8 @@ object Scd2 {
   def merge(history: DataFrame, snapshotIn: DataFrame, keys: Seq[String],
             compareCols: Seq[String], asOf: java.sql.Timestamp): DataFrame = {
     val attrs = keys ++ compareCols
-    val s = guardUniqueKeys(snapshotIn, keys)
-      .select(attrs.map(col): _*)
-      .withColumn("__sexists", lit(1))
-      .alias("s")
-    historize(history, s, keys, compareCols, asOf,
-      snapshotClassify(compareCols))
+    val s = guardUniqueKeys(snapshotIn, keys).select(attrs.map(col): _*)
+    historize(history, s, keys, compareCols, asOf, Scd1.FullSnapshot)
   }
 
   /** Apply a CHURN-SIZED change-row frame — the [[ChangeFeed.diff]]
@@ -193,10 +161,7 @@ object Scd2 {
     val s = guardUniqueKeys(
         changes.filter(col("change_type") =!= "update_pre"), keys)
       .select(col("change_type") +: attrs.map(col): _*)
-      .withColumn("__sexists", lit(1))
-      .alias("s")
-    historize(history, s, keys, compareCols, asOf,
-      deltaClassify(compareCols))
+    historize(history, s, keys, compareCols, asOf, Scd1.ChangeRows)
   }
 
   /** [[applyChanges]] into the two-table warehouse layout (see
@@ -219,11 +184,6 @@ object Scd2 {
         changes.filter(col("change_type") =!= "update_pre"), keys)
       .select(col("change_type") +: attrs.map(col): _*)
 
-    def branches(cur: DataFrame, c: DataFrame): (DataFrame, DataFrame) =
-      currentBranches(cur,
-        c.withColumn("__sexists", lit(1)).alias("s"),
-        keys, attrs, asOf, deltaClassify(compareCols))
-
     val chgP = chg.persist()
     try {
       val slice = txn.keyedSlice(currentTable, keys)(Warehouse.bucketsOf(chgP, keys, _))
@@ -234,7 +194,8 @@ object Scd2 {
         val curT = slice.of(txn.read(currentTable))
         if (pruned) curT.persist()
         try {
-          val (newCur, closedRows) = branches(curT, chgP)
+          val (newCur, closedRows) =
+            currentBranches(curT, chgP, keys, compareCols, asOf, Scd1.ChangeRows)
           txn.overwriteSlice(currentTable, slice, newCur)
           txn.append(closedTable, closedRows)
         } finally if (pruned) curT.unpersist()
@@ -289,6 +250,35 @@ object Scd2 {
         attrs.map(c => col(s"a.$c").as(s"a_$c")): _*)
   }
 
+  /** The shared two-table core: one full-outer [[Scd1.diff]] of the
+    * (possibly bucket-pruned) current slice against the source,
+    * consumed twice as (newCurrent, newlyClosed). One CONDITIONAL
+    * projection instead of a two-branch union — the union form executed
+    * the full-outer join once per branch (plus once for newlyClosed = 3×
+    * the dominant join cost per load). Source-shape agnostic like
+    * [[historize]]: `kind` is the only difference between a snapshot
+    * load and a delta apply.
+    */
+  private def currentBranches(cur: DataFrame, s: DataFrame,
+                              keys: Seq[String], compareCols: Seq[String],
+                              asOf: java.sql.Timestamp, kind: Scd1.DiffKind)
+      : (DataFrame, DataFrame) = {
+    val attrs = keys ++ compareCols
+    val joined = Scd1.diff(cur, s, keys, compareCols, kind, "full")
+    val takeNew = Scd1.action.isin("insert", "update")
+    val newCurrent = joined.filter(Scd1.action =!= "delete")
+      .select(attrs.map(c =>
+          when(takeNew, col(s"s.$c")).otherwise(col(s"d.$c")).as(c)) :+
+        when(takeNew, lit(asOf)).otherwise(col("d.valid_from")).as("valid_from"): _*)
+    // inDim is vacuous for a snapshot source (its delete ⇒ d exists)
+    // and load-bearing for a delta (delete-of-absent closes nothing)
+    val newlyClosed = joined.filter(Scd1.action === "update" ||
+        (Scd1.action === "delete" && Scd1.inDim))
+      .select(attrs.map(c => col(s"d.$c").as(c)) ++
+        Seq(col("d.valid_from").as("valid_from"), lit(asOf).as("valid_to")): _*)
+    (newCurrent, newlyClosed)
+  }
+
   /** SCD2 merge INTO THE WAREHOUSE, in the layout that scales: the
     * history is two tables — `currentTable` (one open row per live key:
     * attrs + `valid_from`), bucketed on the key like any SCD1 dim, and
@@ -308,38 +298,6 @@ object Scd2 {
     * reader never sees a version closed in `closedTable` while still
     * open in `currentTable`). Full history = [[readHistory]].
     */
-  /** The shared two-table core: one full-outer join of the (possibly
-    * bucket-pruned) current slice against the prepped source, consumed
-    * twice as (newCurrent, newlyClosed). One CONDITIONAL projection
-    * instead of a two-branch union — the union form executed the
-    * full-outer join once per branch (plus once for newlyClosed = 3×
-    * the dominant join cost per load). Source-shape agnostic like
-    * [[historize]]: the classify tuple is the only difference between
-    * a snapshot load and a delta apply.
-    */
-  private def currentBranches(cur: DataFrame, s: DataFrame,
-                              keys: Seq[String], attrs: Seq[String],
-                              asOf: java.sql.Timestamp,
-                              classify: (Column, Column, Column))
-      : (DataFrame, DataFrame) = {
-    val d = cur.withColumn("__dexists", lit(1)).alias("d")
-    val on = keys.map(k => col(s"s.$k") === col(s"d.$k")).reduce(_ && _)
-    val joined = s.join(d, on, "full")
-    val (isInsert, isDelete, isChange) = classify
-    val hasCur = col("d.__dexists").isNotNull
-    val takeNew = isInsert || isChange
-    val newCurrent = joined.filter(!isDelete)
-      .select(attrs.map(c =>
-          when(takeNew, col(s"s.$c")).otherwise(col(s"d.$c")).as(c)) :+
-        when(takeNew, lit(asOf)).otherwise(col("d.valid_from")).as("valid_from"): _*)
-    // hasCur is vacuous for a snapshot source (its delete ⇒ d exists)
-    // and load-bearing for a delta (delete-of-absent closes nothing)
-    val newlyClosed = joined.filter(hasCur && (isDelete || isChange))
-      .select(attrs.map(c => col(s"d.$c").as(c)) ++
-        Seq(col("d.valid_from").as("valid_from"), lit(asOf).as("valid_to")): _*)
-    (newCurrent, newlyClosed)
-  }
-
   def mergeWarehouse(wh: Warehouse, currentTable: String, closedTable: String,
                      snapshot: DataFrame, keys: Seq[String],
                      compareCols: Seq[String],
@@ -347,11 +305,6 @@ object Scd2 {
     val attrs = keys ++ compareCols
     val txn = wh.begin()
     val snapC = guardUniqueKeys(snapshot.select(attrs.map(col): _*), keys)
-
-    def branches(cur: DataFrame, snap: DataFrame): (DataFrame, DataFrame) =
-      currentBranches(cur,
-        snap.withColumn("__sexists", lit(1)).alias("s"),
-        keys, attrs, asOf, snapshotClassify(compareCols))
 
     val cur = txn.read(currentTable)
     val slice = txn.keyedSlice(currentTable, keys)(
@@ -365,7 +318,8 @@ object Scd2 {
       val (curT, snapT) = (slice.of(cur), slice.of(snapC))
       if (pruned) { curT.persist(); snapT.persist() }
       try {
-        val (newCur, closed) = branches(curT, snapT)
+        val (newCur, closed) =
+          currentBranches(curT, snapT, keys, compareCols, asOf, Scd1.FullSnapshot)
         txn.overwriteSlice(currentTable, slice, newCur)
         txn.append(closedTable, closed)
       } finally if (pruned) { curT.unpersist(); snapT.unpersist() }

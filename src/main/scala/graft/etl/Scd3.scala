@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * the family at no extra plan cost.
   *
   * Merge rules per tracked column, against the snapshot (which drives
-  * the output — deletes are implicit, exactly [[Scd1.mergeTagged]]'s
-  * snapshot semantics):
+  * the output — deletes are implicit, the snapshot semantics of the
+  * keyed diff [[Scd1.diff]] it classifies through):
   *  - changed (null-safe `<=>` negation): current ← snapshot value,
   *    prev ← the dim's outgoing current value;
   *  - unchanged: prev carries over from the dim row;
@@ -32,25 +32,16 @@ object Scd3 {
     */
   def merge(dim: DataFrame, snapshot: DataFrame, keys: Seq[String],
             tracked: Seq[String]): DataFrame = {
-    val d = dim
-      .select((keys ++ tracked ++ tracked.map("prev_" + _)).map(col): _*)
-      .withColumn("__exists", lit(1))
-      .alias("d")
-    val s = snapshot.alias("s")
-    val on = keys.map(k => col(s"s.$k") === col(s"d.$k")).reduce(_ && _)
-    val isInsert = col("d.__exists").isNull
-    val outCols =
-      keys.map(k => col(s"s.$k").as(k)) ++
+    val isInsert = Scd1.action === "insert"
+    Scd1.diff(dim.select((keys ++ tracked ++ tracked.map("prev_" + _)).map(col): _*),
+        snapshot, keys, tracked, Scd1.FullSnapshot, "left")
+      .select(keys.map(k => col(s"s.$k").as(k)) ++
         tracked.map(c => col(s"s.$c").as(c)) ++
         tracked.map { c =>
           when(isInsert, lit(null))
             .when(!(col(s"s.$c") <=> col(s"d.$c")), col(s"d.$c"))
             .otherwise(col(s"d.prev_$c"))
             .as(s"prev_$c")
-        } :+
-        when(isInsert, lit("insert"))
-          .when(Scd1.anyChanged(tracked), lit("update"))
-          .otherwise(lit("unchanged")).as("action")
-    s.join(d, on, "left").select(outCols: _*)
+        } :+ Scd1.action.as("action"): _*)
   }
 }

@@ -38,6 +38,18 @@ class Scd1Spec extends AnyFunSuite {
     assert(out.head.isNullAt(1)) // snapshot value wins
   }
 
+  test("a key-only dim (no compared columns) merges on presence alone") {
+    val dim = Seq("k1", "k2").toDF("k")
+    val snap = Seq("k2", "k3").toDF("k")
+    val out = Scd1.mergeTagged(dim, snap, Seq("k"), Nil)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(out == Map("k2" -> "unchanged", "k3" -> "insert"))
+    val changed = Seq("k1", "k3").toDF("k")
+      .select(Warehouse.bucketOf(Seq($"k"), 4)).distinct().collect().map(_.getInt(0)).sorted
+    assert(Scd1.changedKeyBuckets(dim, snap, Seq("k"), Nil, 4, deletesVisible = true)
+      .toSeq == changed.toSeq)
+  }
+
   test("audit columns follow main.py semantics") {
     val t0 = Timestamp.valueOf("2021-03-01 00:00:00")
     val t1 = Timestamp.valueOf("2021-03-02 00:00:00")
@@ -99,7 +111,8 @@ class Scd1Spec extends AnyFunSuite {
     val prop = Prop.forAll(tableGen, tableGen) { (dimRows, deltaRows) =>
       val dim = auditDf(dimRows)
       val delta = snapDf(deltaRows)
-      val inc = Scd1.mergeAuditIncremental(dim, delta, Seq("k"), Seq("a", "b"), run)
+      val inc = Scd1.mergeAudit(dim, delta, Seq("k"), Seq("a", "b"), run,
+        deletesVisible = false)
         .collect().map(r => r.getString(0) -> r.toSeq).toMap
       val snapMerge = Scd1.mergeAudit(dim, delta, Seq("k"), Seq("a", "b"), run)
         .collect().map(r => r.getString(0) -> r.toSeq).toMap

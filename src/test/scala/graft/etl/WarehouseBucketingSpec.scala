@@ -5,11 +5,13 @@ import java.sql.{Date, Timestamp}
 import graft.TestSpark
 import graft.sources.BankSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -64,6 +66,44 @@ class WarehouseBucketingSpec extends AnyFunSuite {
         s"dim side should be a bucketed scan:\n$plan")
       assert("Exchange".r.findAllIn(plan).size == 1,
         s"expected exactly ONE exchange (snapshot side only):\n$plan")
+
+      // the other keyed-diff joins of a merge: the keyed diff joins the
+      // source on the left, so its join's right child is the dim side,
+      // which must be a bucketed scan with no Exchange beneath it
+      val (keys, cmp) = (Seq("client_id"), Schemas.dimCompareCols("dim_clients"))
+      def dimSides(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => dimSides(a.executedPlan)
+        case q: QueryStageExec => dimSides(q.plan)
+        case j: SortMergeJoinExec => Seq(j.right)
+        case j: ShuffledHashJoinExec => Seq(j.right)
+        case other => other.children.flatMap(dimSides)
+      }
+      def assertDimSideBucketed(what: String, plan: SparkPlan): Unit = {
+        val sides = dimSides(plan).map(_.toString)
+        assert(sides.size == 1, s"$what: expected one shuffled join:\n$plan")
+        assert(sides.head.contains("SelectedBucketsCount") && !sides.head.contains("Exchange"),
+          s"$what: dim side should be a bucketed scan with no Exchange:\n$plan")
+      }
+      assertDimSideBucketed("mergeAudit, full snapshot", merged.queryExecution.executedPlan)
+      assertDimSideBucketed("mergeAudit, delta", Scd1.mergeAudit(wh.read("dim_clients"), snap,
+        keys, cmp, mar2, deletesVisible = false).queryExecution.executedPlan)
+      // changedKeyBuckets collects inside: read its join off the listener
+      for (deletesVisible <- Seq(true, false)) {
+        val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+        val listener = new QueryExecutionListener {
+          def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+            if (funcName == "collect") plans.add(qe.executedPlan)
+          def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+        }
+        spark.listenerManager.register(listener)
+        try {
+          assert(Scd1.changedKeyBuckets(wh.read("dim_clients"), snap, keys, cmp, 16,
+            deletesVisible).nonEmpty)
+          val plan = plans.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+          assert(plan != null, "no plan reached the listener")
+          assertDimSideBucketed(s"changedKeyBuckets(deletesVisible = $deletesVisible)", plan)
+        } finally spark.listenerManager.unregister(listener)
+      }
 
       // aggregation on the merge key rides the same layout
       val agg = wh.read("dim_clients").groupBy("client_id").count()

@@ -79,15 +79,16 @@ class Scd1UpsertStreamSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getString(1), r.getTimestamp(3))).toSeq
 
     // reference: the same deltas applied as sequential BATCH merges
-    val m1 = Scd1.mergeAuditIncremental(
+    val m1 = Scd1.mergeAudit(
       wh.emptyDf("dim_test"),
       delta(("k1", "v1", "2021-02-01 00:00:00", None),
         ("k2", "v2", "2021-02-01 00:00:00", Some("2021-02-02 00:00:00"))),
-      Seq("k"), Seq("a"), ts("2021-03-01 00:00:00"))
-    val m2 = Scd1.mergeAuditIncremental(m1,
+      Seq("k"), Seq("a"), ts("2021-03-01 00:00:00"), deletesVisible = false)
+    val m2 = Scd1.mergeAudit(m1,
       delta(("k1", "v1x", "2021-02-01 00:00:00", Some("2021-02-10 00:00:00")),
         ("k3", "v3", "2021-02-10 00:00:00", None)),
-      Seq("k"), Seq("a"), ts("2021-03-01 00:00:02")) // batchId 2 under this ckpt
+      Seq("k"), Seq("a"), ts("2021-03-01 00:00:02"), // batchId 2 under this ckpt
+      deletesVisible = false)
     val want = m2.orderBy("k").collect()
       .map(r => (r.getString(0), r.getString(1), r.getTimestamp(3))).toSeq
 
