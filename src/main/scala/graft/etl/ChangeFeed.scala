@@ -339,7 +339,7 @@ object ChangeFeed {
     * Guards (each fails loudly rather than corrupting a consumer):
     *  - `throughVersion ≤ minConsumerApplied`: the caller passes the
     *    MINIMUM applied watermark across every consumer of this log
-    *    (replicas' meta tables, streaming checkpoints); a transition a
+    *    (replicas' transaction ids, streaming checkpoints); a transition a
     *    consumer has not folded yet is not garbage, it is that
     *    consumer's future input.
     *  - the newest transition always survives, even when eligible:
@@ -441,17 +441,18 @@ object ChangeFeed {
     */
   trait LogConsumer { def frontier(): Long }
 
-  /** A ledgered replica consumer ([[replicateGroup]]): frontier = its
-    * transactional watermark row in `meta` for `table` — the mark
-    * moves in the same commit as the merges, so reading it can never
-    * run ahead of the applied state.
+  /** A group replica consumer ([[replicateGroup]]): frontier = the
+    * log version `table` last applied, its transaction id in
+    * `replica`'s catalog. The id moves in the same commit as the
+    * merges, so reading it can never run ahead of the applied state.
     */
-  case class ReplicaFrontier(replica: Warehouse, meta: String,
-                             table: String) extends LogConsumer {
+  case class ReplicaFrontier(replica: Warehouse, table: String) extends LogConsumer {
     def frontier(): Long =
-      replica.read(meta).filter(col("tbl") === table).select("ver")
-        .collect().headOption.map(_.getLong(0)).getOrElse(Long.MinValue)
+      replica.begin().txnVersion(replicaAppId(table)).getOrElse(Long.MinValue)
   }
+
+  // the id under which replicateGroup records the log version it applied
+  private def replicaAppId(table: String): String = "replica:" + table
 
   /** A streaming consumer (the
     * [[graft.streaming.StreamingOps.changeFeedReplica]] family, or any
@@ -521,7 +522,7 @@ object ChangeFeed {
 
   /** RETENTION POLICY DRIVER: vacuum `logDir` up to the horizon the
     * CONSUMERS prove safe, instead of making the caller hand-compute
-    * `minConsumerApplied` across every replica meta table and
+    * `minConsumerApplied` across every replica's transaction ids and
     * streaming checkpoint (the error-prone ritual [[vacuumLog]] alone
     * leaves). The safe horizon is the MINIMUM over the consumer
     * frontiers — one stale consumer (a replica behind on catch-up, a
@@ -535,7 +536,8 @@ object ChangeFeed {
     * here is a consumer whose future reads may fail, exactly like
     * every CDC retention config (Kafka's `retention.ms`, Delta's
     * `delta.deletedFileRetentionDuration`); the difference is the
-    * horizon within that set is computed from ledgers, not guessed.
+    * horizon within that set is computed from what each consumer
+    * committed, not guessed.
     * Returns the committed versions vacuumed, ascending (empty = the
     * slowest frontier pins everything, or nothing logged yet).
     */
@@ -593,18 +595,13 @@ object ChangeFeed {
     * catch-up preserves it: per call, each table's not-yet-applied log
     * versions fold to their net delta ([[netChanges]]) and ALL tables'
     * merges land in ONE replica transaction, together with the
-    * applied-version watermark — so any reader of the replica sees
+    * applied log versions — so any reader of the replica sees
     * every group table at the same commit frontier.
     *
-    * Exactly-once by TRANSACTIONAL WATERMARK, not convergence: the
-    * `meta` table (declare it `(tbl STRING, ver BIGINT)` in the
-    * replica's schemas) records each table's applied high-water mark
-    * and moves in the same commit as the merges — the classic
-    * sink-side-ledger pattern, chosen here over the single-table
-    * replica's ledger-free convergence because the watermark is ALSO
-    * what keeps re-reads churn-sized (only unapplied transition dirs
-    * are ever opened; a ledger-free group would re-read whole logs
-    * every call).
+    * Exactly-once by TRANSACTION ID, not convergence: each table's
+    * applied log version is its own id, committed with the merges —
+    * and it keeps re-reads churn-sized (only unapplied transition dirs
+    * are opened; an id-free group would re-read whole logs every call).
     *
     * Ordering contract (single maintenance writer, like
     * [[materializeLog]]): materialize ALL group logs, then call this.
@@ -615,13 +612,13 @@ object ChangeFeed {
     * instead of letting another table run ahead of it (the orphan
     * race). Pass `throughVersion` to cap the frontier earlier still.
     * A group table with an EMPTY log has no known frontier and pins
-    * the group at nothing-to-do until its first catch-up.
+    * the group at nothing-to-do until its first catch-up. A concurrent
+    * catch-up that committed first makes this one's commit fail.
     *
     * Returns the versions newly applied per table (empty map = nothing
     * to do, no commit).
     */
   def replicateGroup(replica: Warehouse, tables: Seq[GroupTable],
-                     meta: String,
                      throughVersion: Option[Long] = None)
       : Map[String, Seq[Long]] = {
     val logged: Map[String, Seq[Long]] =
@@ -629,34 +626,11 @@ object ChangeFeed {
     if (logged.values.exists(_.isEmpty)) return Map.empty
     val frontier = math.min(logged.values.map(_.max).min,
       throughVersion.getOrElse(Long.MaxValue))
-    def todoGiven(applied: Map[String, Long]): Map[String, Seq[Long]] =
-      tables.map { gt =>
-        gt.table -> logged(gt.table)
-          .filter(_ > applied.getOrElse(gt.table, Long.MinValue))
-          .filter(_ <= frontier)
-      }.toMap
-    def marksOf(df: DataFrame): Map[String, Long] =
-      df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // watermark pre-check OUTSIDE any transaction: under the single-
-    // maintenance-writer contract a throwaway read sees the same marks
-    // the transaction would, so a no-op call never opens a Txn it then
-    // abandons (begin() is a pure catalog snapshot today, but leaking
-    // one would turn latent the moment Txn ever acquires state)
-    if (todoGiven(marksOf(replica.read(meta))).values.forall(_.isEmpty))
-      return Map.empty
     val txn = replica.begin()
-    // the AUTHORITATIVE read goes through the txn snapshot: if the
-    // single-writer contract is ever violated and another writer
-    // advanced a mark between the pre-check and begin(), merging from
-    // the stale pre-check map would silently regress that mark
-    // (transitions re-applied downstream); marks written after begin()
-    // are OCC's problem — commit() fails and the caller retries
-    val applied: Map[String, Long] = marksOf(txn.read(meta))
-    val todo: Map[String, Seq[Long]] = todoGiven(applied)
-    // single-writer contract violated between pre-check and begin():
-    // someone else already applied the work. Discard the begun txn
-    // explicitly — begin() is stateless today, but this is exactly the
-    // latent leak path should Txn ever acquire state
+    val todo: Map[String, Seq[Long]] = tables.map { gt =>
+      val applied = txn.txnVersion(replicaAppId(gt.table)).getOrElse(Long.MinValue)
+      gt.table -> logged(gt.table).filter(v => v > applied && v <= frontier)
+    }.toMap
     if (todo.values.forall(_.isEmpty)) { txn.discard(); return Map.empty }
     tables.foreach { gt =>
       val vs = todo(gt.table)
@@ -665,17 +639,10 @@ object ChangeFeed {
         applyNetBatch(txn, gt.table, gt.keys,
           replica.spark.read.schema(logSch)
             .parquet(vs.map(v => s"${gt.logDir}/t$v"): _*))
+        txn.setTxnVersion(replicaAppId(gt.table), vs.last)
       }
     }
-    // marks MERGE over whatever else the meta table records (another
-    // group, a table dropped from this one) — never erase a watermark
-    val newMarks = (applied ++ tables.flatMap { gt =>
-      todo(gt.table).lastOption.orElse(applied.get(gt.table))
-        .map(gt.table -> _)
-    }).toSeq
-    import replica.spark.implicits._
-    txn.overwrite(meta, newMarks.toDF("tbl", "ver"))
-    txn.commit() // merges + watermark move as one atomic frontier
+    txn.commit() // merges + ids move as one atomic frontier
     todo.filter(_._2.nonEmpty)
   }
 

@@ -27,6 +27,9 @@ import graft.sources.{BankSource, DropFolder, FileSources}
   * One deliberate fix to the reference's order: files are archived
   * AFTER the commit, where the reference renames them mid-run
   * (main.py:70) and loses them if the transaction later rolls back.
+  * The commit carries the night's transaction id (the truncated `runTs`
+  * in epoch seconds), so a rerun of a night that died after its commit
+  * only archives the drop files still left.
   *
   * `incremental = true` enables the corrected-mode improvement the
   * reference's own meta table begs for: the recorded watermark
@@ -45,11 +48,23 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
     * seconds — PG `now()` is statement-stable and TIMESTAMP(0) rounds to
     * seconds (SURVEY §2.8). Throws the first failed write of a level
     * (see [[Pipeline.concurrently]]); then nothing is committed and no
-    * input file is archived.
+    * input file is archived. A committed night only archives its
+    * remaining drop files; an older night throws and archives nothing.
     */
   def run(bank: BankSource, dropDir: Option[String], runTs: Timestamp): Unit = {
     val ts = new Timestamp(runTs.getTime / 1000 * 1000)
+    val night = ts.getTime / 1000
     val txn = wh.begin()
+    val files = dropDir.map(DropFolder.discover).getOrElse(Nil)
+    txn.txnVersion(Pipeline.AppId) match {
+      case Some(done) if done > night => throw new IllegalStateException(s"night $ts is older " +
+        s"than the last committed night ${new Timestamp(done * 1000)}; nothing was run or archived")
+      case Some(done) if done == night =>
+        txn.discard()
+        files.foreach(DropFolder.archive)
+        return
+      case _ =>
+    }
     val dims = Schemas.dimKeys.keys.toSeq.sorted
     def stgOf(dim: String): String = "stg_" + dim.stripPrefix("dim_")
 
@@ -73,7 +88,6 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
     // table is rebuilt from scratch this run with ONE write. File-fed
     // tables (S4-S7) stage the union of their kind's drop files in
     // discovery order, or nothing when none was dropped.
-    val files = dropDir.map(DropFolder.discover).getOrElse(Nil)
     def fromFiles(kind: DropFolder.Kind, table: String)
                  (parse: DropFolder.DropFile => DataFrame): DataFrame =
       files.filter(_.kind == kind).map(parse).reduceOption(_ unionByName _)
@@ -160,10 +174,13 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
       appendFact("fact_transactions", "stg_transactions", "trans_id")))
 
     // ---- level 3, reports (K10): the three reports appended as ONE
-    // write, no dedup (reruns duplicate rows, as in the reference)
+    // write, no dedup: the night's transaction id is what keeps a rerun
+    // of a committed night from appending them again
     txn.append("rep_fraud", reportRows(txn))
 
-    // ---- K11: one atomic commit, then (and only then) archive inputs
+    // ---- K11: one atomic commit, with the night's id, then (and only
+    // then) archive inputs
+    txn.setTxnVersion(Pipeline.AppId, night)
     txn.commit()
     files.foreach(DropFolder.archive)
   }
@@ -191,6 +208,8 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
 }
 
 object Pipeline {
+  private val AppId = "nightly" // the nightly run's transaction id
+
   /** Run `writes` (table → the write) concurrently, one thread per
     * write, started by the calling thread so that each inherits its
     * Spark local properties. Returns only once EVERY write has finished;

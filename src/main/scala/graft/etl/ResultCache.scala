@@ -188,7 +188,7 @@ object ResultCache {
   def prune(wh: Warehouse): Int = {
     val root = Paths.get(wh.root, "_cache")
     if (!Files.exists(root)) return 0
-    val live = wh.catalog().values.flatten.toSet
+    val live = Warehouse.dirsOf(wh.catalog()).toSet
     val stale = listDir(root).iterator.filter { d =>
       val pf = d.resolve("paths.txt")
       !Files.exists(pf) ||

@@ -27,12 +27,19 @@ import scala.jdk.CollectionConverters._
   *   _catalog.json                      // table -> list of data dirs (the
   *                                      // ONLY mutable file; swapped via
   *                                      // ATOMIC_MOVE => all-or-nothing runs)
+  *                                      // _txn_<appId> -> [its last version]
   *   data/<table>/<uuid>/part-*.parquet // immutable, write-once
   * }}}
   * The catalog and its `_versions/` snapshots name data dirs RELATIVE to
   * `root`, so a copied or moved root is a complete warehouse of its own;
   * every reader resolves them against `root` (absolute entries, as older
   * catalogs hold, read as they are).
+  *
+  * TRANSACTION IDS (Delta's `appId -> version`): a writer that applies
+  * each batch exactly once stages the batch's version
+  * ([[Txn.setTxnVersion]]) to commit in the same swap as its data, and
+  * skips what [[Txn.txnVersion]] says is applied. An id is no dir,
+  * guards only itself, rolls back with [[restore]] and is never cloned.
   *
   * Scale notes (100 TB): commits are O(1) metadata, appends never rewrite
   * existing data (a new data dir is referenced alongside the old ones —
@@ -124,10 +131,13 @@ class Warehouse(val spark: SparkSession, val root: String,
   /** Parse catalog file content, resolving its root-relative dirs. */
   private[etl] def parseCatalogRaw(raw: String): Map[String, Seq[String]] =
     if (raw.isEmpty) Map.empty
-    else CatalogJson.parse(raw).map { case (t, ds) => t -> ds.map(resolveDir) }
+    else mapDirs(CatalogJson.parse(raw), resolveDir)
 
   private def renderCatalog(entries: Map[String, Seq[String]]): String =
-    CatalogJson.render(entries.map { case (t, ds) => t -> ds.map(relativeDir) })
+    CatalogJson.render(mapDirs(entries, relativeDir))
+
+  private def mapDirs(cat: Map[String, Seq[String]], f: String => String) =
+    cat.map { case (k, ds) => k -> (if (Warehouse.isTxnKey(k)) ds else ds.map(f)) }
 
   /** A dir as stored metadata names it: relative to `root` when under
     * it, so a copied or moved root stays whole.
@@ -387,8 +397,8 @@ class Warehouse(val spark: SparkSession, val root: String,
     val keptVersions = vfs.takeRight(math.max(1, retainVersions + 1))
     vfs.dropRight(math.max(1, retainVersions + 1))
       .foreach { case (_, p) => Files.deleteIfExists(p) }
-    val live = (catalog().values.flatten ++
-        keptVersions.flatMap { case (v, _) => catalogAsOf(v).values.flatten })
+    val live = (Warehouse.dirsOf(catalog()) ++
+        keptVersions.flatMap { case (v, _) => Warehouse.dirsOf(catalogAsOf(v)) })
       .map(Paths.get(_).toAbsolutePath.toString).toSet
     val dataRoot = Paths.get(root, "data")
     // GRACE: an unreferenced dir younger than `graceMs` may belong to an
@@ -786,6 +796,19 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     */
   def discard(): Unit = synchronized { pending.clear() }
 
+  /** The last version writer `appId` committed as of this txn's
+    * snapshot, if any. Runs no Spark job. */
+  def txnVersion(appId: String): Option[Long] =
+    snapshot.get(Warehouse.txnKey(appId)).flatMap(_.headOption).map(_.toLong)
+
+  /** Stage version `v` (above [[txnVersion]]) of writer `appId` to
+    * commit in this txn's catalog swap. */
+  def setTxnVersion(appId: String, v: Long): Unit = {
+    txnVersion(appId).foreach(cur =>
+      require(v > cur, s"transaction id $appId: version $v is not above the committed $cur"))
+    setPending(Warehouse.txnKey(appId), Seq(v.toString))
+  }
+
   def read(table: String): DataFrame =
     wh.readDirs(table, currentDirs(table), currentDvDirs(table))
 
@@ -1161,7 +1184,8 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     * other, because a vectored delete names (file, position) pairs of
     * the data dirs it saw — committing an overwrite over a concurrent
     * delete (or vice versa) would silently resurrect the deleted rows
-    * even though the two txns touched different catalog KEYS.
+    * even though the two txns touched different catalog KEYS. A
+    * transaction id guards only itself (first committer wins).
     * Cross-table read-write skew remains accepted (snapshot-isolation
     * class, not serializable), same as every file-format OCC.
     */
@@ -1169,7 +1193,8 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     require(!committed, "transaction already committed")
     val written = synchronized(pending.toSeq)
     val guarded: Set[String] = written.map(_._1).flatMap { k =>
-      if (k.startsWith(Warehouse.DvPrefix))
+      if (Warehouse.isTxnKey(k)) Seq(k)
+      else if (k.startsWith(Warehouse.DvPrefix))
         Seq(k, k.stripPrefix(Warehouse.DvPrefix))
       else Seq(k, Warehouse.dvKey(k))
     }.toSet
@@ -1304,6 +1329,15 @@ object Warehouse {
   private[etl] val dvSchema: StructType = StructType(Seq(
     StructField(DvFile, StringType, nullable = false),
     StructField(DvPos, LongType, nullable = false)))
+
+  /** Writer `appId`'s transaction id is the entry `_txn_<appId>`. */
+  private val TxnPrefix = "_txn_"
+  private[etl] def txnKey(appId: String): String = TxnPrefix + appId
+  private[etl] def isTxnKey(key: String): Boolean = key.startsWith(TxnPrefix)
+
+  /** Every data dir a catalog names (all entries but transaction ids). */
+  private[etl] def dirsOf(cat: Map[String, Seq[String]]): Iterable[String] =
+    cat.collect { case (k, dirs) if !isTxnKey(k) => dirs }.flatten
 
   /** A data file's tombstone key: its path below the warehouse's
     * `data/` dir (`<table>/<dir uuid>/<path in dir>`), so tombstones

@@ -1170,7 +1170,7 @@ object MiscQueries {
 
     // Streaming ingestion end-to-end under the hash gate: the events
     // stream lands in a bucketed fact table via per-batch atomic
-    // append+ledger commits (in-batch dedup, Bloom-pruned against-table
+    // append commits (in-batch dedup, Bloom-pruned against-table
     // anti-join), then the stream is driven AGAIN with a fresh
     // checkpoint — the redelivery every at-least-once source will
     // eventually produce. The oracle is plain events, so any duplicate
@@ -1180,17 +1180,15 @@ object MiscQueries {
       import graft.streaming.StreamingOps
       val ev = Tables(s, dir, "events")
         .select("event_id", "user_id", "event_type", "value")
-      val metaSchema = new org.apache.spark.sql.types.StructType()
-        .add("last_batch", "long")
       val wh = new Warehouse(s,
         java.nio.file.Files.createTempDirectory("graft-ing").toString,
-        Map("fact" -> ev.schema, "ing_meta" -> metaSchema),
+        Map("fact" -> ev.schema),
         partitionSpec = Map.empty,
         bucketSpec = Map("fact" -> ("event_id", 8)))
       val srcDir = java.nio.file.Files.createTempDirectory("graft-ing-src").toString
       ev.coalesce(1).write.mode("overwrite").parquet(srcDir)
       def run(): Unit = StreamingOps.streamingFactIngest(s, wh, srcDir,
-        ev.schema, "fact", "event_id", "ing_meta",
+        ev.schema, "fact", "event_id",
         java.nio.file.Files.createTempDirectory("graft-ing-ckpt").toString)
         .awaitTermination()
       run(); run() // second run = full redelivery (fresh checkpoint)
@@ -1325,16 +1323,16 @@ object MiscQueries {
 
     // CDC RETENTION POLICY, e2e: TWO consumers at different frontiers
     // — a streaming replica that drained the whole 2-transition log
-    // (checkpoint frontier = v3) and a ledgered group replica capped
-    // at v2 (meta watermark = v2). ChangeFeed.retention computes the
-    // safe horizon from their LEDGERS (commits/ + sources file log;
-    // meta table) as min(v3, v2): the first pass reclaims exactly the
-    // v2 transition and the slow consumer still converges from what
-    // survived; with both at v3 the second pass reclaims nothing (the
-    // high-water transition always survives). Output is the
-    // previously-slow replica's final image; the oracle recomputes the
-    // v3 image directly — the hash certifies ledger-driven retention
-    // never outran its slowest consumer.
+    // (checkpoint frontier = v3) and a group replica capped at v2
+    // (transaction id = v2). ChangeFeed.retention computes the safe
+    // horizon from what each committed (commits/ + sources file log;
+    // the replica's transaction id) as min(v3, v2): the first pass
+    // reclaims exactly the v2 transition and the slow consumer still
+    // converges from what survived; with both at v3 the second pass
+    // reclaims nothing (the high-water transition always survives).
+    // Output is the previously-slow replica's final image; the oracle
+    // recomputes the v3 image directly — the hash certifies
+    // frontier-driven retention never outran its slowest consumer.
     "q_cdf_retention" -> ((s, dir) => {
       import graft.etl.{ChangeFeed, Warehouse}
       import graft.streaming.StreamingOps
@@ -1342,15 +1340,12 @@ object MiscQueries {
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
       val v2 = cdfV2(c)
       val v3 = cdfV3(v2)
-      val metaSchema = StructType(Seq(
-        StructField("tbl", StringType), StructField("ver", LongType)))
-      def mkWh(tag: String, withMeta: Boolean) = new Warehouse(s,
+      def mkWh(tag: String) = new Warehouse(s,
         java.nio.file.Files.createTempDirectory(tag).toString,
-        Map("cust" -> c.schema) ++
-          (if (withMeta) Map("meta" -> metaSchema) else Map.empty),
+        Map("cust" -> c.schema),
         partitionSpec = Map.empty,
         bucketSpec = Map("cust" -> ("c_custkey", 8)))
-      val src = mkWh("graft-ret-src", withMeta = false)
+      val src = mkWh("graft-ret-src")
       Seq(c, v2, v3).foreach { img =>
         val t = src.begin(); t.overwrite("cust", img); t.commit()
       }
@@ -1359,28 +1354,27 @@ object MiscQueries {
       ChangeFeed.materializeLog(src, "cust", Seq("c_custkey"), logDir)
       val Seq(_, ver2, ver3) = src.versions()
       // fast consumer: streaming replica, drains everything
-      val fast = mkWh("graft-ret-fast", withMeta = false)
+      val fast = mkWh("graft-ret-fast")
       locally { val t = fast.begin(); t.overwrite("cust", c); t.commit() }
       val ckpt =
         java.nio.file.Files.createTempDirectory("graft-ret-ckpt").toString
       StreamingOps.changeFeedReplica(s, fast, "cust", Seq("c_custkey"),
         logDir, ckpt)
-      // slow consumer: ledgered group replica capped at v2
-      val slow = mkWh("graft-ret-slow", withMeta = true)
+      // slow consumer: group replica capped at v2
+      val slow = mkWh("graft-ret-slow")
       locally { val t = slow.begin(); t.overwrite("cust", c); t.commit() }
       val group = Seq(ChangeFeed.GroupTable("cust", Seq("c_custkey"), logDir))
-      ChangeFeed.replicateGroup(slow, group, "meta",
-        throughVersion = Some(ver2))
+      ChangeFeed.replicateGroup(slow, group, throughVersion = Some(ver2))
       val consumers = Seq(ChangeFeed.CheckpointFrontier(ckpt, logDir),
-        ChangeFeed.ReplicaFrontier(slow, "meta", "cust"))
+        ChangeFeed.ReplicaFrontier(slow, "cust"))
       require(ChangeFeed.CheckpointFrontier(ckpt, logDir).frontier() == ver3 &&
-        ChangeFeed.ReplicaFrontier(slow, "meta", "cust").frontier() == ver2,
-        "ledger frontiers must read v3 (drained checkpoint) and v2 (capped mark)")
+        ChangeFeed.ReplicaFrontier(slow, "cust").frontier() == ver2,
+        "frontiers must read v3 (drained checkpoint) and v2 (capped replica)")
       require(ChangeFeed.retention(logDir, consumers) == Seq(ver2),
         "retention must reclaim exactly the prefix below the slow consumer")
       require(ChangeFeed.loggedVersions(logDir) == Seq(ver3),
         "the undrained tail and high-water transition must survive")
-      ChangeFeed.replicateGroup(slow, group, "meta") // catch up from survivors
+      ChangeFeed.replicateGroup(slow, group) // catch up from survivors
       require(ChangeFeed.retention(logDir, consumers).isEmpty,
         "with every frontier at the mark, only the immortal high-water dir remains")
       slow.read("cust").orderBy("c_custkey")
@@ -1390,12 +1384,13 @@ object MiscQueries {
     // vacuums the log's dead prefix after every applied micro-batch —
     // GC is continuous, not an operational ritual. The replay is
     // multi-commit (v1→v2→v3→back-to-v1) across two drain calls on one
-    // checkpoint, with a LEDGERED PEER registered: drain 1 reclaims the
-    // v2 transition (peer's mark proves it applied), drain 2 reclaims
-    // v3 WHILE draining v4 — the log shrinks under the live stream and
-    // the replica still converges. Output is the replica's final image;
-    // the oracle is the raw customer table (the full-circle v4 image) —
-    // the hash certifies in-loop GC never ate a consumer's future input.
+    // checkpoint, with a GROUP-REPLICA PEER registered: drain 1 reclaims
+    // the v2 transition (peer's transaction id proves it applied), drain
+    // 2 reclaims v3 WHILE draining v4 — the log shrinks under the live
+    // stream and the replica still converges. Output is the replica's
+    // final image; the oracle is the raw customer table (the
+    // full-circle v4 image) — the hash certifies in-loop GC never ate a
+    // consumer's future input.
     "q_stream_retention" -> ((s, dir) => {
       import graft.etl.{ChangeFeed, Warehouse}
       import graft.streaming.StreamingOps
@@ -1403,15 +1398,12 @@ object MiscQueries {
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
       val v2 = cdfV2(c)
       val v3 = cdfV3(v2)
-      val metaSchema = StructType(Seq(
-        StructField("tbl", StringType), StructField("ver", LongType)))
-      def mkWh(tag: String, withMeta: Boolean) = new Warehouse(s,
+      def mkWh(tag: String) = new Warehouse(s,
         java.nio.file.Files.createTempDirectory(tag).toString,
-        Map("cust" -> c.schema) ++
-          (if (withMeta) Map("meta" -> metaSchema) else Map.empty),
+        Map("cust" -> c.schema),
         partitionSpec = Map.empty,
         bucketSpec = Map("cust" -> ("c_custkey", 8)))
-      val src = mkWh("graft-sret-src", withMeta = false)
+      val src = mkWh("graft-sret-src")
       Seq(c, v2, v3).foreach { img =>
         val t = src.begin(); t.overwrite("cust", img); t.commit()
       }
@@ -1419,15 +1411,14 @@ object MiscQueries {
         java.nio.file.Files.createTempDirectory("graft-sret-log").toString
       ChangeFeed.materializeLog(src, "cust", Seq("c_custkey"), logDir)
       val Seq(_, ver2, ver3) = src.versions()
-      // ledgered peer, caught up through v2 before the stream starts
-      val peerWh = mkWh("graft-sret-peer", withMeta = true)
+      // group-replica peer, caught up through v2 before the stream starts
+      val peerWh = mkWh("graft-sret-peer")
       locally { val t = peerWh.begin(); t.overwrite("cust", c); t.commit() }
       val group = Seq(ChangeFeed.GroupTable("cust", Seq("c_custkey"), logDir))
-      ChangeFeed.replicateGroup(peerWh, group, "meta",
-        throughVersion = Some(ver2))
-      val peer = ChangeFeed.ReplicaFrontier(peerWh, "meta", "cust")
+      ChangeFeed.replicateGroup(peerWh, group, throughVersion = Some(ver2))
+      val peer = ChangeFeed.ReplicaFrontier(peerWh, "cust")
       // streaming replica, retention wired into its loop
-      val rep = mkWh("graft-sret-rep", withMeta = false)
+      val rep = mkWh("graft-sret-rep")
       locally { val t = rep.begin(); t.overwrite("cust", c); t.commit() }
       val ckpt =
         java.nio.file.Files.createTempDirectory("graft-sret-ckpt").toString
@@ -1442,7 +1433,7 @@ object MiscQueries {
       locally { val t = src.begin(); t.overwrite("cust", c); t.commit() }
       ChangeFeed.materializeLog(src, "cust", Seq("c_custkey"), logDir)
       val ver4 = src.versions().last
-      ChangeFeed.replicateGroup(peerWh, group, "meta")
+      ChangeFeed.replicateGroup(peerWh, group)
       val gc2 = StreamingOps.changeFeedReplicaRetained(s, rep, "cust",
         Seq("c_custkey"), logDir, ckpt, Seq(peer))
       require(gc2 == Seq(ver3) &&
@@ -1537,7 +1528,7 @@ object MiscQueries {
     // together across three commits (a customer leaves WITH its
     // orders; new customers arrive WITH theirs), both change logs
     // replicate through ChangeFeed.replicateGroup — every table's net
-    // delta plus the applied-version watermark in ONE replica
+    // delta plus its applied log version in ONE replica
     // transaction. Output is the replica-side orders LEFT JOIN
     // customers: an orphaned foreign key (the thing independent
     // per-table replicas can leak) would surface as a null-padded row
@@ -1565,16 +1556,13 @@ object MiscQueries {
           .select((col("o_orderkey") + 60000000L).as("o_orderkey"),
             (col("o_custkey") + 30000000L).as("o_custkey"),
             col("o_totalprice")))
-      def mkWh(tag: String, withMeta: Boolean) = new Warehouse(s,
+      def mkWh(tag: String) = new Warehouse(s,
         java.nio.file.Files.createTempDirectory(tag).toString,
-        Map("cust" -> c0.schema, "ord" -> o0.schema) ++
-          (if (withMeta) Map("cdc_meta" -> StructType(Seq(
-            StructField("tbl", StringType), StructField("ver", LongType))))
-           else Map.empty),
+        Map("cust" -> c0.schema, "ord" -> o0.schema),
         partitionSpec = Map.empty,
         bucketSpec = Map("cust" -> ("c_custkey", 8),
           "ord" -> ("o_orderkey", 8)))
-      val src = mkWh("graft-rg-src", withMeta = false)
+      val src = mkWh("graft-rg-src")
       Seq((c0, o0), (c2, o2), (c3, o3)).foreach { case (c, o) =>
         val t = src.begin()
         t.overwrite("cust", c); t.overwrite("ord", o); t.commit()
@@ -1583,15 +1571,14 @@ object MiscQueries {
       val oLog = java.nio.file.Files.createTempDirectory("graft-rg-ol").toString
       ChangeFeed.materializeLog(src, "cust", Seq("c_custkey"), cLog)
       ChangeFeed.materializeLog(src, "ord", Seq("o_orderkey"), oLog)
-      val replica = mkWh("graft-rg-dst", withMeta = true)
+      val replica = mkWh("graft-rg-dst")
       locally {
         val t = replica.begin()
         t.overwrite("cust", c0); t.overwrite("ord", o0); t.commit()
       }
       ChangeFeed.replicateGroup(replica,
         Seq(ChangeFeed.GroupTable("cust", Seq("c_custkey"), cLog),
-          ChangeFeed.GroupTable("ord", Seq("o_orderkey"), oLog)),
-        "cdc_meta")
+          ChangeFeed.GroupTable("ord", Seq("o_orderkey"), oLog)))
       replica.read("ord").join(replica.read("cust"),
           col("o_custkey") === col("c_custkey"), "left")
         .select("o_orderkey", "o_custkey", "o_totalprice",
@@ -1966,7 +1953,7 @@ object MiscQueries {
         |FROM customer ORDER BY c_custkey""".stripMargin,
 
     // direct recompute of the FINAL (v3) image — the slow replica must
-    // land there despite two interleaved ledger-driven vacuums
+    // land there despite two interleaved frontier-driven vacuums
     "q_cdf_retention" ->
       s"""WITH $cdfV2Sql,
         |$cdfV3Sql

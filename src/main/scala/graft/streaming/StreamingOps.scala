@@ -823,22 +823,15 @@ object StreamingOps {
     * the against-table dedup (the K8 plan: ONE anti-join against ONE
     * scan of all fact dirs, its id column pruned by a batch-sized Bloom
     * filter below the join — a bucketed fact reads as one bucketed scan
-    * and contributes zero fact-side Exchange), the append, and the
-    * batch-id ledger.
+    * and contributes zero fact-side Exchange) and the append.
     *
-    * Exactly-once effect over at-least-once `foreachBatch`: a torn run
-    * either committed append+ledger together or neither — the same
-    * argument as [[streamingMvRefresh]]. A batch at or below the ledger
-    * is NOT skipped wholesale: batch ids restart at 0 after a
-    * checkpoint reset, so "id ≤ ledger" conflates a redelivered batch
-    * (nothing new — the id anti-join would append zero rows) with a
-    * FRESH batch under a reset checkpoint (new files that a skip would
-    * silently drop). Both run the same dedup path; the id-level
-    * anti-join is what makes redelivery idempotent (already-appended
-    * rows filter out), the ledger never regresses, and a ledger-ahead
-    * batch only commits when it actually found fresh rows. The ledger
-    * is thus a fast-forward marker, the dedup is the correctness.
-    * `metaTable` schema: single `last_batch` BIGINT.
+    * Exactly-once effect over at-least-once `foreachBatch` needs no
+    * transaction id: the id-level anti-join is the guard. A torn run
+    * committed its append or nothing; a redelivered batch, under the
+    * same checkpoint or after a checkpoint reset (batch ids restart at
+    * 0, so a batch id cannot tell redelivery from fresh files), runs
+    * the same dedup, and the rows already appended filter out. Fresh
+    * rows land; a batch with none commits no version.
     *
     * Scale shape: per batch, one Bloom build over the batch (bounded),
     * one pruned anti-join (no full fact scan — the Bloom prunes at the
@@ -847,15 +840,13 @@ object StreamingOps {
     */
   def streamingFactIngest(spark: SparkSession, wh: graft.etl.Warehouse,
                           sourceDir: String, srcSchema: StructType,
-                          table: String, id: String, metaTable: String,
+                          table: String, id: String,
                           checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     spark.readStream.schema(srcSchema).parquet(sourceDir)
       .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (batch: DataFrame, _: Long) =>
         val txn = wh.begin()
-        val appliedRow = txn.read(metaTable).agg(max(col("last_batch"))).head()
-        val applied = if (appliedRow.isNullAt(0)) -1L else appliedRow.getLong(0)
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy(col(id))
           .orderBy(batch.columns.filter(_ != id).map(c => col(c).asc_nulls_last)
@@ -863,27 +854,17 @@ object StreamingOps {
         val compacted = batch.filter(col(id).isNotNull)
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
-        val fresh = graft.etl.Pipeline.freshAgainstTable(txn, table, compacted, id)
-        if (batchId > applied) {
-          txn.append(table, fresh)
-          import spark.implicits._
-          txn.overwrite(metaTable, Seq(batchId).toDF("last_batch"))
-          txn.commit()
-        } else {
-          // ledger-ahead batch (checkpoint reset): new rows still land,
-          // the ledger keeps its high-water mark. The dedup frame (Bloom
-          // build + anti-join) is persisted so the emptiness probe and
-          // the append share ONE evaluation — recovery batches on a
-          // large fact would otherwise pay the most expensive stage of
-          // the pipeline twice
-          fresh.persist()
-          try {
-            if (!fresh.isEmpty) {
-              txn.append(table, fresh)
-              txn.commit()
-            }
-          } finally fresh.unpersist()
-        }
+        // persisted so the emptiness probe and the append share ONE
+        // evaluation of the dedup (Bloom build + anti-join), the most
+        // expensive stage of the batch on a large fact
+        val fresh = graft.etl.Pipeline.freshAgainstTable(txn, table, compacted, id).persist()
+        try {
+          if (fresh.isEmpty) txn.discard()
+          else {
+            txn.append(table, fresh)
+            txn.commit()
+          }
+        } finally fresh.unpersist()
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -899,23 +880,24 @@ object StreamingOps {
     * `foreachBatch` is at-least-once, and an aggregate refresh (unlike
     * the SCD1 merge) is NOT naturally idempotent — re-applying a batch
     * double-counts. Exactly-once effect therefore comes from the
-    * documented foreachBatch pattern: the last applied batch id is
-    * committed in `metaTable` IN THE SAME warehouse transaction as the
-    * view, so a redelivered batch (id ≤ stored) is skipped atomically.
-    * A torn run can't diverge: either the (view, meta) pair committed —
-    * and replay skips — or neither did, and replay re-applies.
-    * `metaTable` schema: a single `last_batch` BIGINT row.
+    * view's transaction id ([[graft.etl.Txn.setTxnVersion]], one per
+    * `viewTable`): the batch id commits IN THE SAME catalog swap as the
+    * refreshed view, so a redelivered batch (id ≤ the committed one)
+    * is skipped. A torn run can't diverge: either the view and its id
+    * committed — and replay skips — or neither did, and replay
+    * re-applies.
     *
     * STABLE-CHECKPOINT REQUIREMENT: unlike [[streamingFactIngest]]
     * (whose id-level anti-join makes redelivered ROWS idempotent, so a
     * checkpoint reset only costs a re-dedup), an aggregate refresh has
-    * no row identity to dedup on — "batch id ≤ ledger" is the ONLY
-    * guard. After a checkpoint reset, batch ids restart at 0 and fresh
+    * no row identity to dedup on — the batch id is the ONLY guard.
+    * After a checkpoint reset, batch ids restart at 0 and fresh
     * source files arriving in those low-numbered batches are skipped
     * (a warning is logged); re-applying instead would double-count
-    * every replayed row. Recovery from a reset is therefore: rebuild
-    * the view and the meta table together (one transaction), then
-    * restart the stream.
+    * every replayed row. Recovery from a reset is therefore a rebuild:
+    * `restore` the warehouse to a version before the view's first
+    * refresh (the id rolls back with the view), or refresh into a new
+    * view table, then restart the stream.
     *
     * CHURN-SIZED WRITES: register `viewTable` in the warehouse's
     * `bucketSpec` on `keys.head` and each refresh rewrites ONLY the
@@ -927,47 +909,47 @@ object StreamingOps {
     */
   def streamingMvRefresh(spark: SparkSession, wh: graft.etl.Warehouse,
                          sourceDir: String, srcSchema: StructType,
-                         viewTable: String, metaTable: String,
+                         viewTable: String,
                          keys: Seq[String],
                          measures: Seq[graft.operators.MaterializedAgg.Measure],
                          checkpointDir: String,
                          prepare: DataFrame => DataFrame = identity)
       : org.apache.spark.sql.streaming.StreamingQuery = {
+    val appId = "mv:" + viewTable
     spark.readStream.schema(srcSchema).parquet(sourceDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val txn = wh.begin()
-        val appliedRow = txn.read(metaTable).agg(max(col("last_batch"))).head()
-        val applied = if (appliedRow.isNullAt(0)) -1L else appliedRow.getLong(0)
-        if (batchId <= applied)
-          // see the scaladoc's stable-checkpoint requirement: this skip
-          // is exact for REDELIVERED batches and lossy after a
-          // checkpoint reset — make the conflation visible
-          System.err.println(
-            s"[streamingMvRefresh] skipping batch $batchId (ledger at $applied); " +
-              "if the checkpoint was reset, rebuild the view+meta pair")
-        if (batchId > applied) {
-          // `prepare` derives view-grain columns the raw stream lacks
-          // (e.g. the value bucket of an incremental QUANTILE view) —
-          // a map-side projection, applied before the delta refresh
-          val prepared = prepare(batch)
-          // refresh is strictly per-key (groupBy keys, per-key merge
-          // algebra), so on a view bucketed by keys.head the batch can
-          // only move rows in the buckets its own keys hash to — slice
-          // those, merge the delta into the slice, rewrite only them
-          // (untouched buckets hard-link). The write is then sized by
-          // the batch's KEY SPREAD, not the view: the view of a 100 TB
-          // fact is itself large, and rewriting it whole per
-          // micro-batch is the same store-sized write the CDC store
-          // consumers shed. Unbucketed views keep the full overwrite;
-          // an empty batch leaves the view untouched.
-          val slice = txn.keyedSlice(viewTable, keys.take(1))(
-            graft.etl.Warehouse.bucketsOf(prepared, keys.take(1), _))
-          txn.overwriteSlice(viewTable, slice, graft.operators.MaterializedAgg.refresh(
-            slice.of(txn.read(viewTable)), prepared, keys, measures))
-          import spark.implicits._
-          txn.overwrite(metaTable, Seq(batchId).toDF("last_batch"))
-          txn.commit()
+        txn.txnVersion(appId).filter(batchId <= _) match {
+          case Some(applied) =>
+            // see the scaladoc's stable-checkpoint requirement: this skip
+            // is exact for REDELIVERED batches and lossy after a
+            // checkpoint reset — make the conflation visible
+            txn.discard()
+            System.err.println(
+              s"[streamingMvRefresh] skipping batch $batchId (applied through $applied); " +
+                "if the checkpoint was reset, rebuild the view")
+          case None =>
+            // `prepare` derives view-grain columns the raw stream lacks
+            // (e.g. the value bucket of an incremental QUANTILE view) —
+            // a map-side projection, applied before the delta refresh
+            val prepared = prepare(batch)
+            // refresh is strictly per-key (groupBy keys, per-key merge
+            // algebra), so on a view bucketed by keys.head the batch can
+            // only move rows in the buckets its own keys hash to — slice
+            // those, merge the delta into the slice, rewrite only them
+            // (untouched buckets hard-link). The write is then sized by
+            // the batch's KEY SPREAD, not the view: the view of a 100 TB
+            // fact is itself large, and rewriting it whole per
+            // micro-batch is the same store-sized write the CDC store
+            // consumers shed. Unbucketed views keep the full overwrite;
+            // an empty batch leaves the view untouched.
+            val slice = txn.keyedSlice(viewTable, keys.take(1))(
+              graft.etl.Warehouse.bucketsOf(prepared, keys.take(1), _))
+            txn.overwriteSlice(viewTable, slice, graft.operators.MaterializedAgg.refresh(
+              slice.of(txn.read(viewTable)), prepared, keys, measures))
+            txn.setTxnVersion(appId, batchId)
+            txn.commit()
         }
       }
       .option("checkpointLocation", checkpointDir)
@@ -1063,7 +1045,7 @@ object StreamingOps {
     * upsert-same-value / delete-absent-key no-ops, so foreachBatch's
     * at-least-once redelivery, and even a full checkpoint reset,
     * re-converge instead of corrupting (spec-pinned). This is why the
-    * replica needs none of [[streamingMvRefresh]]'s ledger machinery.
+    * replica needs none of [[streamingMvRefresh]]'s transaction id.
     * (The fold leans on [[graft.etl.ChangeFeed.diff]] co-locating a
     * key's `update_pre`/`update_post` pair — both rows come off one
     * exploded join row, so a file split can never strand half a pair

@@ -96,6 +96,21 @@ class ConcurrentWriterSpec extends AnyFunSuite {
     assert(wh.read("a").count() == 5, "overwrite image intact, no phantom delete")
   }
 
+  test("two txns that set the same transaction id: exactly one commits") {
+    // disjoint tables: the id is the only key the two txns share
+    val wh = freshWh()
+    val t1 = wh.begin()
+    val t2 = wh.begin()
+    t1.append("a", Seq((1L, "a1")).toDF("id", "v")); t1.setTxnVersion("job", 1L)
+    t2.append("b", Seq((2L, "b1")).toDF("id", "v")); t2.setTxnVersion("job", 1L)
+    t1.commit()
+    val e = intercept[java.util.ConcurrentModificationException](t2.commit())
+    assert(e.getMessage.contains("job"))
+    assert(wh.read("a").count() == 1 && wh.read("b").count() == 0)
+    assert(wh.begin().txnVersion("job") == Some(1L))
+    intercept[IllegalArgumentException](wh.begin().setTxnVersion("job", 1L))
+  }
+
   test("simultaneous same-expected CAS: exactly one writer wins, even with a widened window") {
     // The lost-commit race MaintenanceChaosSpec caught as a flake,
     // made deterministic: two threads race commitCatalogIf from the

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    invariant (every order's customer exists) holds at EVERY
   *    observation point — the boundary independent per-table replicas
   *    lose;
-  *  - exactly-once via the transactional watermark: a second catch-up
+  *  - exactly-once via the replica's transaction ids: a second catch-up
   *    with nothing new returns empty and commits nothing;
   *  - incremental: a later catch-up applies only the new transitions;
   *  - `throughVersion` caps the frontier for BOTH tables at once.
@@ -28,8 +28,6 @@ class ReplicateGroupSpec extends AnyFunSuite {
   private val ordSchema = StructType(Seq(
     StructField("oid", LongType), StructField("cust_id", LongType),
     StructField("amt", LongType)))
-  private val metaSchema = StructType(Seq(
-    StructField("tbl", StringType), StructField("ver", LongType)))
 
   private def cust(rows: (Long, String)*): DataFrame = rows.toDF("id", "name")
   private def ord(rows: (Long, Long, Long)*): DataFrame =
@@ -45,9 +43,8 @@ class ReplicateGroupSpec extends AnyFunSuite {
   private val ord3 = ord((10L, 1L, 100L), (12L, 3L, 301L), (13L, 3L, 330L),
     (14L, 4L, 400L))
 
-  private def mkWh(tag: String, withMeta: Boolean): Warehouse = {
-    val schemas = Map("cust" -> custSchema, "ord" -> ordSchema) ++
-      (if (withMeta) Map("cdc_meta" -> metaSchema) else Map.empty)
+  private def mkWh(tag: String): Warehouse = {
+    val schemas = Map("cust" -> custSchema, "ord" -> ordSchema)
     new Warehouse(spark, Files.createTempDirectory(tag).toString, schemas,
       partitionSpec = Map.empty,
       bucketSpec = Map("cust" -> ("id", 4), "ord" -> ("oid", 4)))
@@ -65,19 +62,19 @@ class ReplicateGroupSpec extends AnyFunSuite {
       col("cust_id") === col("id"), "left_anti").isEmpty
 
   test("group catch-up replicates both tables atomically; FK holds at every observation") {
-    val src = mkWh("rg-src", withMeta = false)
+    val src = mkWh("rg-src")
     commitBoth(src, cust1, ord1); commitBoth(src, cust2, ord2)
     val custLog = Files.createTempDirectory("rg-clog").toString
     val ordLog = Files.createTempDirectory("rg-olog").toString
     ChangeFeed.materializeLog(src, "cust", Seq("id"), custLog)
     ChangeFeed.materializeLog(src, "ord", Seq("oid"), ordLog)
 
-    val replica = mkWh("rg-dst", withMeta = true)
+    val replica = mkWh("rg-dst")
     commitBoth(replica, cust1, ord1)
     val group = Seq(ChangeFeed.GroupTable("cust", Seq("id"), custLog),
       ChangeFeed.GroupTable("ord", Seq("oid"), ordLog))
 
-    val applied = ChangeFeed.replicateGroup(replica, group, "cdc_meta")
+    val applied = ChangeFeed.replicateGroup(replica, group)
     assert(applied.keySet == Set("cust", "ord") &&
       applied.values.forall(_.length == 1))
     assert(same(replica.read("cust"), cust2) && same(replica.read("ord"), ord2))
@@ -85,21 +82,21 @@ class ReplicateGroupSpec extends AnyFunSuite {
 
     // exactly-once: nothing new → empty result, no commit
     val nCommits = replica.versions().length
-    assert(ChangeFeed.replicateGroup(replica, group, "cdc_meta").isEmpty)
+    assert(ChangeFeed.replicateGroup(replica, group).isEmpty)
     assert(replica.versions().length == nCommits)
 
     // incremental: only the v3 transitions apply
     commitBoth(src, cust3, ord3)
     ChangeFeed.materializeLog(src, "cust", Seq("id"), custLog)
     ChangeFeed.materializeLog(src, "ord", Seq("oid"), ordLog)
-    val applied2 = ChangeFeed.replicateGroup(replica, group, "cdc_meta")
+    val applied2 = ChangeFeed.replicateGroup(replica, group)
     assert(applied2.values.forall(_.length == 1))
     assert(same(replica.read("cust"), cust3) && same(replica.read("ord"), ord3))
     assert(noOrphans(replica))
   }
 
   test("throughVersion caps the frontier for the whole group") {
-    val src = mkWh("rg-src", withMeta = false)
+    val src = mkWh("rg-src")
     commitBoth(src, cust1, ord1)
     val v1 = src.versions().last
     commitBoth(src, cust2, ord2)
@@ -110,21 +107,20 @@ class ReplicateGroupSpec extends AnyFunSuite {
     ChangeFeed.materializeLog(src, "cust", Seq("id"), custLog)
     ChangeFeed.materializeLog(src, "ord", Seq("oid"), ordLog)
 
-    val replica = mkWh("rg-dst", withMeta = true)
+    val replica = mkWh("rg-dst")
     commitBoth(replica, cust1, ord1)
     val group = Seq(ChangeFeed.GroupTable("cust", Seq("id"), custLog),
       ChangeFeed.GroupTable("ord", Seq("oid"), ordLog))
 
     // cap at v2: BOTH tables stop at the v2 images — a consistent
     // frontier even though both logs already hold v3
-    ChangeFeed.replicateGroup(replica, group, "cdc_meta",
-      throughVersion = Some(v2))
+    ChangeFeed.replicateGroup(replica, group, throughVersion = Some(v2))
     assert(same(replica.read("cust"), cust2) && same(replica.read("ord"), ord2))
     assert(noOrphans(replica))
     assert(v1 < v2) // fixture sanity
 
-    // lifting the cap finishes the catch-up from the watermark
-    ChangeFeed.replicateGroup(replica, group, "cdc_meta")
+    // lifting the cap finishes the catch-up from the applied versions
+    ChangeFeed.replicateGroup(replica, group)
     assert(same(replica.read("cust"), cust3) && same(replica.read("ord"), ord3))
     assert(noOrphans(replica))
   }

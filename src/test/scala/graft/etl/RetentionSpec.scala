@@ -8,8 +8,8 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `ChangeFeed.retention` — the policy driver that computes the safe
-  * vacuum horizon as the MIN over consumer frontiers (ledgered replica
-  * watermarks + streaming checkpoints' committed batches) instead of a
+  * vacuum horizon as the MIN over consumer frontiers (group replicas'
+  * transaction ids + streaming checkpoints' committed batches) instead of a
   * hand-passed `minConsumerApplied`. Pins:
   *
   *  - a stale consumer BLOCKS deletion (its future input is not
@@ -27,8 +27,6 @@ class RetentionSpec extends AnyFunSuite {
 
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("amt", LongType)))
-  private val metaSchema = StructType(Seq(
-    StructField("tbl", StringType), StructField("ver", LongType)))
   private val keys = Seq("id")
 
   private def img(rows: (Long, Long)*): DataFrame = rows.toDF("id", "amt")
@@ -37,9 +35,8 @@ class RetentionSpec extends AnyFunSuite {
   private val img3 = img((1L, 11L), (2L, 21L), (4L, 40L), (5L, 50L))
   private val img4 = img((1L, 11L), (4L, 41L), (5L, 50L)) // del 2, upd 4
 
-  private def mkWh(tag: String, withMeta: Boolean = false): Warehouse = {
-    val schemas = Map("t" -> schema) ++
-      (if (withMeta) Map("meta" -> metaSchema) else Map.empty)
+  private def mkWh(tag: String): Warehouse = {
+    val schemas = Map("t" -> schema)
     new Warehouse(spark, Files.createTempDirectory(tag).toString, schemas,
       partitionSpec = Map.empty, bucketSpec = Map("t" -> ("id", 4)))
   }
@@ -72,23 +69,23 @@ class RetentionSpec extends AnyFunSuite {
     assert(same(fast.read("t"), img4))
     assert(ChangeFeed.CheckpointFrontier(ckpt, logDir).frontier() == v4)
 
-    // slow consumer: ledgered group replica capped at v2
-    val slow = mkWh("ret-slow", withMeta = true)
+    // slow consumer: group replica capped at v2
+    val slow = mkWh("ret-slow")
     commit(slow, img1)
     val group = Seq(ChangeFeed.GroupTable("t", keys, logDir))
-    ChangeFeed.replicateGroup(slow, group, "meta", throughVersion = Some(v2))
-    assert(ChangeFeed.ReplicaFrontier(slow, "meta", "t").frontier() == v2)
+    ChangeFeed.replicateGroup(slow, group, throughVersion = Some(v2))
+    assert(ChangeFeed.ReplicaFrontier(slow, "t").frontier() == v2)
 
     val consumers = Seq(ChangeFeed.CheckpointFrontier(ckpt, logDir),
-      ChangeFeed.ReplicaFrontier(slow, "meta", "t"))
+      ChangeFeed.ReplicaFrontier(slow, "t"))
     assert(ChangeFeed.retention(logDir, consumers) == Seq(v2),
       "horizon must stop at the SLOW consumer's watermark")
     assert(ChangeFeed.loggedVersions(logDir) == Seq(v3, v4))
 
     // the slow consumer still converges from what survived
-    ChangeFeed.replicateGroup(slow, group, "meta")
+    ChangeFeed.replicateGroup(slow, group)
     assert(same(slow.read("t"), img4))
-    assert(ChangeFeed.ReplicaFrontier(slow, "meta", "t").frontier() == v4)
+    assert(ChangeFeed.ReplicaFrontier(slow, "t").frontier() == v4)
 
     // now everything through v3 is dead; v4 survives as high-water mark
     assert(ChangeFeed.retention(logDir, consumers) == Seq(v3))
@@ -100,9 +97,9 @@ class RetentionSpec extends AnyFunSuite {
     val (_, logDir, _) = sourceAndLog()
     val before = ChangeFeed.loggedVersions(logDir)
 
-    // ledgered consumer with an EMPTY meta table: frontier unknown
-    val idle = mkWh("ret-idle", withMeta = true)
-    assert(ChangeFeed.ReplicaFrontier(idle, "meta", "t").frontier() ==
+    // group replica that applied nothing: frontier unknown
+    val idle = mkWh("ret-idle")
+    assert(ChangeFeed.ReplicaFrontier(idle, "t").frontier() ==
       Long.MinValue)
     // streaming consumer whose checkpoint never committed a batch
     val ckpt = Files.createTempDirectory("ret-nockpt").toString
@@ -110,7 +107,7 @@ class RetentionSpec extends AnyFunSuite {
       Long.MinValue)
 
     assert(ChangeFeed.retention(logDir,
-      Seq(ChangeFeed.ReplicaFrontier(idle, "meta", "t"),
+      Seq(ChangeFeed.ReplicaFrontier(idle, "t"),
         ChangeFeed.CheckpointFrontier(ckpt, logDir))).isEmpty)
     assert(ChangeFeed.loggedVersions(logDir) == before, "nothing deleted")
   }

@@ -63,6 +63,31 @@ class WarehouseCloneRestoreSpec extends AnyFunSuite {
     assert(wh.catalog()("meta_clone").forall(d => Files.exists(Paths.get(d))))
   }
 
+  test("restore rolls transaction ids back with the data; clone copies none") {
+    val schemas = Schemas.tables + ("meta_clone" -> Schemas.tables("meta"))
+    val wh = new Warehouse(spark, Files.createTempDirectory("whtxn").toString,
+      schemas = schemas)
+    val t1 = wh.begin(); t1.overwrite("meta", metaRow("v1")); t1.commit()
+    Seq(1L, 2L).foreach { v =>
+      val t = wh.begin(); t.overwrite("meta", metaRow(s"v${v + 1}")); t.setTxnVersion("job", v)
+      t.commit()
+    }
+    assert(wh.begin().txnVersion("job") == Some(2L))
+
+    wh.restore(2L)
+    assert(schemaVals(wh.read("meta")) == Seq("v2"))
+    assert(wh.begin().txnVersion("job") == Some(1L))
+    wh.restore(1L)
+    assert(schemaVals(wh.read("meta")) == Seq("v1"))
+    assert(wh.begin().txnVersion("job").isEmpty)
+
+    wh.restore(3L)
+    val before = wh.catalog()
+    wh.cloneTable("meta", "meta_clone")
+    assert(wh.catalog().keySet -- before.keySet == Set("meta_clone", Warehouse.dvKey("meta_clone")))
+    assert(wh.begin().txnVersion("job") == Some(2L))
+  }
+
   test("clone destination must be registered with the source schema") {
     val wh = new Warehouse(spark, Files.createTempDirectory("whcl2").toString)
     val t1 = wh.begin(); t1.overwrite("meta", metaRow("x")); t1.commit()

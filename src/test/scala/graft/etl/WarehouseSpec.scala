@@ -102,6 +102,22 @@ class WarehouseSpec extends AnyFunSuite {
     assert(wh.read("meta").head.getString(0) == "c") // survivor intact
   }
 
+  test("transaction ids are no dirs: vacuum removes the same dir count with them") {
+    def vacuumed(withIds: Boolean): Int = {
+      val wh = freshWh()
+      Seq("a", "c").zipWithIndex.foreach { case (v, i) =>
+        val t = wh.begin()
+        t.overwrite("meta", Seq((v, "b", None: Option[java.sql.Timestamp]))
+          .toDF("schema_name", "table_name", "max_update_dt"))
+        if (withIds) t.setTxnVersion("job", i.toLong)
+        t.commit()
+      }
+      wh.vacuum(graceMs = 0L)
+    }
+    assert(vacuumed(withIds = true) == 1)
+    assert(vacuumed(withIds = false) == 1)
+  }
+
   test("fact appends land date-partitioned; date filters prune partitions") {
     val wh = freshWh()
     val txn = wh.begin()

@@ -4,15 +4,14 @@ import java.nio.file.Files
 import graft.TestSpark
 import graft.etl.Warehouse
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming ingestion into the transactional warehouse
-  * (`StreamingOps.streamingFactIngest`): per-batch atomic
-  * append+ledger commit, in-batch and against-table dedup, replay
-  * idempotence with AND without the ledger (the id anti-join catches
-  * what a lost ledger would re-deliver).
+  * (`StreamingOps.streamingFactIngest`): per-batch atomic append
+  * commit, in-batch and against-table dedup, replay idempotence under
+  * the same and under fresh checkpoints (the id anti-join catches what
+  * a redelivery re-sends), and no commit for a batch with no fresh row.
   */
 class StreamingFactIngestSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -20,7 +19,6 @@ class StreamingFactIngestSpec extends AnyFunSuite {
 
   private val srcSchema = StructType(Seq(
     StructField("trans_id", StringType), StructField("amount", LongType)))
-  private val metaSchema = StructType(Seq(StructField("last_batch", LongType)))
 
   private def drop(df: DataFrame, dir: String, name: String): Unit = {
     val tmp = Files.createTempDirectory("ing-stage").toString
@@ -35,14 +33,14 @@ class StreamingFactIngestSpec extends AnyFunSuite {
 
   test("batches append once each; duplicates drop in-batch, cross-batch, and on replay") {
     val wh = new Warehouse(spark, Files.createTempDirectory("wh-ing").toString,
-      Map("fact" -> srcSchema, "ing_meta" -> metaSchema),
+      Map("fact" -> srcSchema),
       partitionSpec = Map.empty,
       bucketSpec = Map("fact" -> ("trans_id", 4)))
     val srcDir = Files.createTempDirectory("ing-src").toString
     val ckpt = Files.createTempDirectory("ing-ckpt").toString
     def run(checkpoint: String): Unit =
       StreamingOps.streamingFactIngest(spark, wh, srcDir, srcSchema,
-        "fact", "trans_id", "ing_meta", checkpoint).awaitTermination()
+        "fact", "trans_id", checkpoint).awaitTermination()
 
     // batch 1: t2 duplicated IN the batch — deterministic first row
     // (min by remaining columns) survives
@@ -62,6 +60,13 @@ class StreamingFactIngestSpec extends AnyFunSuite {
     run(ckpt)
     assert(wh.catalog() == cat, "no-input replay must not commit")
 
+    // a NEW batch whose rows all dedup away commits no version
+    val versions = wh.versions()
+    drop(Seq(("t1", 1L), ("t3", 3L)).toDF("trans_id", "amount"), srcDir, "b2dup")
+    run(ckpt)
+    assert(rows(wh) == Map("t1" -> 10L, "t2" -> 20L, "t3" -> 30L))
+    assert(wh.versions() == versions, "an all-duplicate batch must not commit")
+
     // a FRESH checkpoint redelivers everything as batch 0: the id
     // anti-join finds nothing fresh, so nothing commits
     val catBefore = wh.catalog()
@@ -70,38 +75,30 @@ class StreamingFactIngestSpec extends AnyFunSuite {
     assert(wh.catalog() == catBefore, "pure redelivery must not commit")
 
     // CHECKPOINT RESET with genuinely NEW data: batch ids restart at 0
-    // (≤ the ledger's high-water mark) but the batch carries a new file
-    // — a wholesale batch-id skip would silently DROP t4. The dedup
-    // path must still run: t4 lands, t1 does not duplicate, and the
-    // ledger never regresses.
+    // but the batch carries a new file — a wholesale batch-id skip
+    // would silently DROP t4. The dedup path must still run: t4 lands
+    // and t1 does not duplicate.
     drop(Seq(("t4", 40L), ("t1", 777L)).toDF("trans_id", "amount"), srcDir, "b3")
     run(Files.createTempDirectory("ing-ckpt2b").toString)
     assert(rows(wh) == Map("t1" -> 10L, "t2" -> 20L, "t3" -> 30L, "t4" -> 40L),
       "checkpoint reset must not drop new data, nor duplicate old rows")
-    assert(wh.read("ing_meta").agg(max(col("last_batch"))).head().getLong(0) >= 0L,
-      "ledger must keep its high-water mark")
 
-    // ledger LOST (meta reset) + fresh checkpoint: the id anti-join
-    // still filters every already-ingested row — append-path dedup is
-    // the second independent idempotence defense
-    val t = wh.begin()
-    t.overwrite("ing_meta", spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], metaSchema))
-    t.commit()
+    // a third fresh checkpoint: the id anti-join still filters every
+    // already-ingested row
     run(Files.createTempDirectory("ing-ckpt3").toString)
     assert(rows(wh) == Map("t1" -> 10L, "t2" -> 20L, "t3" -> 30L, "t4" -> 40L),
-      "lost ledger replay must not duplicate rows")
+      "fresh-checkpoint replay must not duplicate rows")
   }
 
   test("torn batch — crash between append and commit — replays exactly-once") {
     val wh = new Warehouse(spark, Files.createTempDirectory("wh-torn").toString,
-      Map("fact" -> srcSchema, "ing_meta" -> metaSchema),
+      Map("fact" -> srcSchema),
       partitionSpec = Map.empty,
       bucketSpec = Map("fact" -> ("trans_id", 4)))
     val srcDir = Files.createTempDirectory("torn-src").toString
     drop(Seq(("t1", 10L), ("t2", 20L)).toDF("trans_id", "amount"), srcDir, "b1")
 
-    // simulate the crash WINDOW the ledger+dedup double guard covers:
+    // simulate the crash WINDOW the dedup guard covers:
     // the batch body ran txn.append (data dir ON DISK) but died before
     // txn.commit — the dir exists, the catalog never references it
     val torn = wh.begin()
@@ -112,7 +109,7 @@ class StreamingFactIngestSpec extends AnyFunSuite {
 
     // restart: the stream redelivers the same files as a fresh batch
     StreamingOps.streamingFactIngest(spark, wh, srcDir, srcSchema,
-      "fact", "trans_id", "ing_meta",
+      "fact", "trans_id",
       Files.createTempDirectory("torn-ckpt").toString).awaitTermination()
     assert(rows(wh) == Map("t1" -> 10L, "t2" -> 20L), "exactly-once after the torn run")
 
@@ -126,9 +123,9 @@ class StreamingFactIngestSpec extends AnyFunSuite {
     torn2.append("fact", graft.etl.Pipeline.freshAgainstTable(torn2, "fact",
       spark.read.schema(srcSchema).parquet(srcDir), "trans_id"))
     // crash again; then the stream replays EVERYTHING from a reset
-    // checkpoint (ids restart at 0, ledger is ahead): only t3 lands
+    // checkpoint (ids restart at 0): only t3 lands
     StreamingOps.streamingFactIngest(spark, wh, srcDir, srcSchema,
-      "fact", "trans_id", "ing_meta",
+      "fact", "trans_id",
       Files.createTempDirectory("torn-ckpt2").toString).awaitTermination()
     assert(rows(wh) == Map("t1" -> 10L, "t2" -> 20L, "t3" -> 30L),
       "second torn run + checkpoint reset must stay exactly-once")

@@ -20,7 +20,6 @@ class StreamingMvRefreshSpec extends AnyFunSuite {
     StructField("g", StringType), StructField("n", LongType),
     StructField("s", LongType), StructField("lo", LongType),
     StructField("hi", LongType)))
-  private val metaSchema = StructType(Seq(StructField("last_batch", LongType)))
 
   private val measures = Seq(
     Measure("n", lit(1), Count), Measure("s", col("v"), Sum),
@@ -49,11 +48,11 @@ class StreamingMvRefreshSpec extends AnyFunSuite {
     val srcDir = Files.createTempDirectory("mv-src").toString
     val ckpt = Files.createTempDirectory("mv-ckpt").toString
     val wh = new Warehouse(spark, whRoot,
-      Map("mv_view" -> viewSchema, "mv_meta" -> metaSchema))
+      Map("mv_view" -> viewSchema))
 
     def run(checkpoint: String): Unit = {
       val q = StreamingOps.streamingMvRefresh(spark, wh, srcDir, srcSchema,
-        "mv_view", "mv_meta", Seq("g"), measures, checkpoint)
+        "mv_view", Seq("g"), measures, checkpoint)
       q.awaitTermination()
     }
 
@@ -73,8 +72,8 @@ class StreamingMvRefreshSpec extends AnyFunSuite {
     run(ckpt)
     assert(viewRows(wh) == expect(b1.unionAll(b2)))
 
-    // a FRESH checkpoint redelivers everything as batch 0 — the meta
-    // guard (0 <= last applied id) must skip it, not double-count
+    // a FRESH checkpoint redelivers everything as batch 0 — the view's
+    // transaction id (0 <= last applied id) must skip it, not double-count
     run(Files.createTempDirectory("mv-ckpt2").toString)
     assert(viewRows(wh) == expect(b1.unionAll(b2)),
       "redelivered batch must not be re-applied")
@@ -88,13 +87,13 @@ class StreamingMvRefreshSpec extends AnyFunSuite {
       StructField("g", StringType), StructField("bucket", LongType),
       StructField("n", LongType)))
     val wh = new Warehouse(spark, whRoot,
-      Map("q_view" -> qviewSchema, "q_meta" -> metaSchema))
+      Map("q_view" -> qviewSchema))
     val cnt = Seq(Measure("n", lit(1), Count))
     val width = 10L
 
     def run(): Unit = {
       val q = StreamingOps.streamingMvRefresh(spark, wh, srcDir, srcSchema,
-        "q_view", "q_meta", Seq("g", "bucket"), cnt, ckpt,
+        "q_view", Seq("g", "bucket"), cnt, ckpt,
         prepare = b => b.withColumn("bucket",
           MaterializedAgg.bucketize(col("v"), width)))
       q.awaitTermination()
@@ -141,13 +140,13 @@ class StreamingMvRefreshSpec extends AnyFunSuite {
     val srcDir = Files.createTempDirectory("bmv-src").toString
     val ckpt = Files.createTempDirectory("bmv-ckpt").toString
     val wh = new Warehouse(spark, whRoot,
-      Map("mv_view" -> viewSchema, "mv_meta" -> metaSchema),
+      Map("mv_view" -> viewSchema),
       partitionSpec = Map.empty,
       bucketSpec = Map("mv_view" -> ("g", nBuckets)))
 
     def run(): Unit = {
       val q = StreamingOps.streamingMvRefresh(spark, wh, srcDir, srcSchema,
-        "mv_view", "mv_meta", Seq("g"), measures, ckpt)
+        "mv_view", Seq("g"), measures, ckpt)
       q.awaitTermination()
     }
 
